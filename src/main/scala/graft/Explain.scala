@@ -14,13 +14,7 @@ object Explain {
         "q15_semi_join", "x03_minhash_lsh", "x10_knn_bruteforce", "x13_window_tumbling",
         "q29_rank_dense", "q37_take_positions", "x28_kmeans_ivf", "x30_neardup_clusters",
         "x34_range_join", "x37_bucketed_join")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftConf.localProfile(SparkSession.builder(), 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n================ $n ================")

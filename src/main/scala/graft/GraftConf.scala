@@ -26,8 +26,29 @@ import org.apache.spark.sql.SparkSession
   *  - parquet filter pushdown + column pruning are defaults we rely on
   *    (PLANS.md shows PushedFilters/ReadSchema for every scan-heavy
   *    query); listed here for completeness.
+  *  - codegen.cache.maxEntries sized to the query surface (see
+  *    [[CodegenCacheEntries]]).
   */
 object GraftConf {
+
+  /** Capacity of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). A class evicted
+    * from it is compiled again by Janino the next time a plan generates
+    * the same code, on the driver and in the executor task that needs it,
+    * so a warm query whose classes other queries pushed out pays its
+    * codegen again. One cold pass over all 313 registered queries on
+    * sf0.01 (collected, with an unbounded cache) generates 5016 distinct
+    * classes; the 55 interactive queries (q01–q55) alone generate 508. A
+    * second pass generates 218 more, whose code differs between runs.
+    * 8192 holds the whole surface with room to spare. The cache fills only
+    * with classes actually generated, so a process that runs few queries
+    * holds few; in a long-lived one the bound caps the generated classes
+    * kept in metaspace.
+    *
+    * A static conf: Spark reads it once per JVM, when the code generator
+    * builds its cache, so only the first session of a process sets it.
+    */
+  val CodegenCacheEntries = 8192
 
   def scaleProfile(b: SparkSession.Builder, totalCores: Int): SparkSession.Builder =
     b.config("spark.sql.adaptive.enabled", "true")
@@ -43,6 +64,7 @@ object GraftConf {
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** Local profile used by Verify/Bench/tests: same semantics, sized for
     * one machine. */
@@ -52,4 +74,5 @@ object GraftConf {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 }

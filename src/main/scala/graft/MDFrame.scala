@@ -30,11 +30,9 @@ final case class MDFrame(
   def columns: Seq[String] = ds.columns.toSeq
   def valueColumns: Seq[String] = columns.filterNot(index.contains)
 
-  // -- reference properties: empty / shape / index nlevels
-  //    (dataframe.py:464-475, Index.nlevels 55-58)
+  // -- reference properties: empty / shape (dataframe.py:464-475)
   def isEmpty: Boolean = ds.isEmpty
   def shape: (Long, Int) = (ds.count(), ds.columns.length)
-  def nIndexLevels: Int = index.size
 
   // -- Index accessor sugar (reference Index.name/names/values/
   //    get_level_values/levels, dataframe.py:113-153): the index is
@@ -78,9 +76,8 @@ final case class MDFrame(
   def select(cols: String*): MDFrame =
     copy(ds = ds.select((cols ++ index.filterNot(cols.contains)).map(col): _*))
 
-  // -- P3: add/replace column (scalar broadcast via lit)
+  // -- P3: add/replace column (a scalar is `lit(v)`)
   def withColumn(name: String, c: Column): MDFrame = copy(ds = ds.withColumn(name, c))
-  def withScalar(name: String, v: Any): MDFrame = withColumn(name, lit(v))
 
   // -- P4: drop column; dropping an index member is forbidden
   //    (dataframe.py:434-435) and an unknown column raises
@@ -146,7 +143,6 @@ final case class MDFrame(
     case ByteType | ShortType | IntegerType | LongType | BooleanType => lit(false)
     case _                            => col(c).isNull
   }
-  def notnullMask(c: String): Column = !isnullMask(c)
 
   // -- P11: fillna (dataframe.py:1006-1030); NaN and null both count as
   //    missing for float columns, mirroring the reference null model.
@@ -312,9 +308,6 @@ final case class MDFrame(
       .toLocalIterator().asScala
   }
 
-  // -- R6: frames are immutable in Spark; copy is the identity
-  def copyFrame(): MDFrame = this
-
   /** Multiset row equality with identical schema — the engine form of the
     * reference's testing.assert_frame_equal. Two exceptAll probes (each a
     * hash anti-semantics aggregation) — no collect, order-insensitive. */
@@ -398,10 +391,6 @@ final case class MDFrame(
     }
     copy(ds = ds.orderBy(keys: _*))
   }
-
-  // -- O2: sort by index levels (dataframe.py:673-717)
-  def sortIndex(ascending: Boolean = true): MDFrame =
-    sortValues(index, ascending)
 
   // -- G1: grouping delegates to Catalyst hash aggregation; the reference's
   //    Grouper(order, counts) + user-ufunc model (dataframe.py:866-899)

@@ -1,21 +1,57 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
 
-/** Loaders for the driver-generated parquet tables (see /root/repo/TESTDATA.md).
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+/** Loaders for the generated parquet test tables (see TESTDATA.md).
   *
   * Each table is a single parquet file under `\$dir/\$name.parquet`. Reads go
   * through `spark.read.parquet`, so Catalyst column pruning and filter
   * pushdown reach the scan for free. At cluster scale these would be
   * partitioned directories; the API is identical.
+  *
+  * Inferring a parquet schema starts a Spark job that reads the footer, so
+  * each table's inferred `StructType` is memoized and later reads pass it
+  * to `spark.read.schema(s)`, which starts none. The memo is keyed on:
+  *  - the path as the file system resolves it, so two spellings of one
+  *    file share an entry;
+  *  - the session's parquet SQL confs (every set key containing
+  *    `parquet`), because they change the inferred types: [[events]] sets
+  *    `spark.sql.legacy.parquet.nanosAsLong`, which turns TIMESTAMP(NANOS)
+  *    into a long (so after a session's first events read, each other
+  *    table is inferred once more).
+  * Each entry also holds the file's length and modification time, read by
+  * one stat per call; a rewritten file differs in either, and is inferred
+  * again. Inference runs outside any lock: concurrent first reads of one
+  * table may both infer, and the later one replaces an equal schema.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private final case class Inferred(length: Long, modified: Long, schema: StructType)
+  private val schemas = new ConcurrentHashMap[(String, Map[String, String]), Inferred]
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = new Path(s"$dir/$name.parquet")
+    val stat = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(path)
+    val key = (stat.getPath.toString,
+      spark.conf.getAll.filter { case (k, _) => k.contains("parquet") })
+    val schema = Option(schemas.get(key)) match {
+      case Some(i) if i.length == stat.getLen && i.modified == stat.getModificationTime =>
+        i.schema
+      case _ =>
+        val inferred = spark.read.parquet(path.toString).schema
+        schemas.put(key, Inferred(stat.getLen, stat.getModificationTime, inferred))
+        inferred
+    }
+    spark.read.schema(schema).parquet(path.toString)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")

@@ -27,8 +27,8 @@ object Skew {
 
   /** Two-phase salted aggregation: partial aggregate on (keys, salt) —
     * spreading a hot key over `saltBuckets` reducers — then final
-    * aggregate on keys. Works for any algebraic aggregate expressed as
-    * (partial, merge) column pairs; count/sum helpers below.
+    * aggregate on keys. The pattern works for any algebraic aggregate
+    * expressed as a (partial, merge) pair; this is the count form.
     */
   def saltedCount(df: DataFrame, keys: Seq[String], saltBuckets: Int,
       out: String = "n"): DataFrame = {
@@ -36,16 +36,6 @@ object Skew {
     salted
       .groupBy((keys.map(col) :+ col("_salt")): _*)
       .agg(count(lit(1)).as("_partial"))
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("_partial")).as(out))
-  }
-
-  def saltedSum(df: DataFrame, keys: Seq[String], valueCol: Column,
-      saltBuckets: Int, out: String = "s"): DataFrame = {
-    val salted = df.withColumn("_salt", contentSalt(df, saltBuckets))
-    salted
-      .groupBy((keys.map(col) :+ col("_salt")): _*)
-      .agg(sum(valueCol).as("_partial"))
       .groupBy(keys.map(col): _*)
       .agg(sum(col("_partial")).as(out))
   }

@@ -75,11 +75,7 @@ object StageCache {
 
   // SPARK_GRAFT_STAGE_CACHE=0 disables memoization process-wide (A/B
   // measurement and forced-cold debugging); default on.
-  @volatile private var enabled =
-    !sys.env.get("SPARK_GRAFT_STAGE_CACHE").contains("0")
-
-  /** Disable to force every stage to recompute (A/B and spec use). */
-  def setEnabled(on: Boolean): Unit = { enabled = on; if (!on) clear() }
+  private val enabled = !sys.env.get("SPARK_GRAFT_STAGE_CACHE").contains("0")
 
   private final class Box(f: () => AnyRef, val fixture: Boolean) {
     val owned = new java.util.concurrent.ConcurrentLinkedQueue[

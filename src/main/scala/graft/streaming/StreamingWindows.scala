@@ -124,13 +124,12 @@ object StreamingWindows {
     * (TIMESTAMP(NANOS) → nanos-long via `nanosAsLong`, TIMESTAMP(MICROS) →
     * native NTZ), same output contract (`ts` micros TimestampType, `ts_ns`
     * nanos long). FileStreamSource needs a DECLARED schema, so the actual
-    * `ts` physical type is sniffed from one batch-side footer read — a
-    * driver-only metadata call, no data scan.
+    * `ts` physical type is taken from the batch read's schema, which
+    * [[graft.Tables]] infers from the footer once per file and conf set.
     */
   def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType
+    val tsType = graft.Tables(spark, dir, "events").schema("ts").dataType
     val raw = spark.readStream
       .schema(eventsSchema(tsType))
       // the sf layout stores one file per table; FileStreamSource wants a

@@ -2,6 +2,7 @@
 # The pre-snapshot gate as ONE command (round-14 lesson: the mechanical
 # specs only protect the round if they are executed AFTER the last query
 # lands and BEFORE the snapshot commit). Runs, in order:
+#   0. tool self-tests         — bench-gate tools and the perfbench stats
 #   1. sbt test                 — full ScalaTest suite (conventions, plans,
 #                                 cache hygiene, recall gates, goldens)
 #   2. graft.Verify @ sf0.01    — every query dumped to parquet
@@ -11,29 +12,31 @@
 #                                 the committed BENCH_LOCAL.json
 #                                 (DEFAULT-ON; GRAFT_SKIP_SF01=1 skips —
 #                                 dev loops only, never the pre-snapshot run)
+#   6. DuckDB replay @ sf0.1    — ORACLE_TIMES.json (runs with step 5)
 # Exits non-zero on the first failure. Usage: tools/round_close.sh
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== [0/5] bench-gate tools self-test =="
+echo "== [0/6] tool self-tests =="
 python3 tools/test_tools.py
+python3 -m unittest discover -s perfbench -p 'test_*.py'
 
-echo "== [1/4] sbt test =="
+echo "== [1/6] sbt test =="
 sbt -batch test
 
-echo "== [2/4] graft.Verify sf0.01 =="
+echo "== [2/6] graft.Verify sf0.01 =="
 OUT=$(mktemp -d /tmp/graft_round_close.XXXX)
 trap 'rm -rf "$OUT"' EXIT
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT"
 
-echo "== [3/4] DuckDB oracle compare =="
+echo "== [3/6] DuckDB oracle compare =="
 # one run, captured: the grep reads the capture (check.py is the gate's
 # slowest step — round-15 advice: don't pay it twice / don't re-race it)
 CHECK_OUT=$(python3 tools/check.py /root/testdata/sf0.01 "$OUT" || true)
 echo "$CHECK_OUT" | tail -3
 echo "$CHECK_OUT" | grep -q " 0 failed" || { echo "ORACLE MISMATCH"; exit 1; }
 
-echo "== [4/4] bench smoke sf0.001 =="
+echo "== [4/6] bench smoke sf0.001 =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \
   SPARK_GRAFT_BENCH_OUT="$OUT/bench.json" \
   sbt -batch "runMain graft.Bench" >/dev/null 2>&1
@@ -55,7 +58,7 @@ print(f'bench ok: {len(d[\"queries\"])} queries, wall {d[\"wall\"]:.1f}s')"
 # at the gated SF can. Escape hatch (quick dev loops ONLY, never the
 # pre-snapshot run): GRAFT_SKIP_SF01=1.
 if [ "${GRAFT_SKIP_SF01:-0}" != "1" ]; then
-  echo "== [5/5] sf0.1 per-query regression gate =="
+  echo "== [5/6] sf0.1 per-query regression gate =="
   if git cat-file -e HEAD:BENCH_LOCAL.json 2>/dev/null; then
     git show HEAD:BENCH_LOCAL.json > /tmp/bench_local_baseline.json
   else
@@ -112,7 +115,7 @@ if [ "${GRAFT_SKIP_SF01:-0}" != "1" ]; then
   cp "$OUT/oracle_times.json" ORACLE_TIMES.json
   python3 tools/oracle_ratio.py BENCH_LOCAL.json ORACLE_TIMES.json
 else
-  echo "== [5/5] sf0.1 regression gate SKIPPED (GRAFT_SKIP_SF01=1) =="
+  echo "== [5/6] sf0.1 regression gate SKIPPED (GRAFT_SKIP_SF01=1) =="
 fi
 
 # optional sf1 pair (GRAFT_SF1=1): refresh BENCH_sf1.json on the CURRENT
