@@ -52,16 +52,12 @@ object Checkpoints {
 
   private def materialize0(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-      // RDD checkpointing runs TWO jobs: the eager action computes the
-      // plan, then the checkpoint-write job re-runs the (otherwise
-      // unpersisted) RDD from lineage to write the files. Persisting
-      // first makes the write job read cached blocks instead of
-      // re-executing the upstream lineage — without this, every
-      // materialize in production mode pays its plan twice, exactly the
-      // double pass the callers exist to avoid. Unpersist after: the
-      // checkpoint files are the durable copy.
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try df.checkpoint() finally df.unpersist()
+      // ONE job: eager Dataset.checkpoint calls RDD.doCheckpoint on the
+      // plan's RDD directly, so the checkpoint write IS the execution —
+      // no separate action to compute the plan first, and so nothing for
+      // a persist in front of it to save (a persist here would only
+      // build an in-memory copy no reader ever touches)
+      df.checkpoint()
     } else if (df.sparkSession.conf
         .getOption(RequireReliableKey).contains("true")) {
       throw new IllegalStateException(

@@ -721,9 +721,9 @@ object Dedup {
     * collide by coincidence (probability ≈ J^rowsPerBand per band even
     * for low true similarity J), and an unverified false positive merges
     * two unrelated documents into one cluster, permanently discarding a
-    * real document. The verification is one token equi-join over the
-    * candidate pairs ([[jaccard]]) — O(pairs), tiny next to the corpus —
-    * keeping only pairs with true Jaccard >= `minJaccard`.
+    * real document. The verification joins each candidate pair to its
+    * members' token sets ([[jaccard]]) — O(pairs), tiny next to the
+    * corpus — keeping only pairs with true Jaccard >= `minJaccard`.
     */
   def verifiedCandidatePairs(docs: DataFrame, bands: Int, rowsPerBand: Int,
       minJaccard: Double, textCol: String = "text",
@@ -735,84 +735,69 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
 
   /** Exact token-set Jaccard for given candidate pairs
-    * (columns id_a, id_b). Join-based: |A∩B| via token equi-join,
-    * |A∪B| = |A|+|B|-|A∩B|.
+    * (columns id_a, id_b): `id_a, id_b, inter (=|A∩B|), jaccard`, with
+    * `inter` = 0 for pairs sharing no token and `jaccard` null when
+    * either text is null.
     *
     * Scale shape: only PAIR MEMBERS are tokenized — docs are semi-joined
-    * against the pair id set and the surviving (id, text) rows are
+    * against the pair id set and each member's distinct token set is
     * MATERIALIZED once ([[Checkpoints.materialize]], same discipline as
-    * [[lshCandidatePairs]]' distilled output). Candidates are a vanishing
-    * fraction of a 100 TB corpus, so this turns the verification stage
-    * from three full-corpus passes (the token sets feed the size
-    * aggregate and both sides of the intersection join, each of which
-    * would otherwise re-execute the whole upstream lineage) into one
-    * bounded prune plus cheap re-reads of a small checkpoint.
+    * [[lshCandidatePairs]]' distilled output), then joined onto both ends
+    * of each pair; the intersection is one `array_intersect` per pair.
+    * Candidates are a vanishing fraction of a 100 TB corpus, so the
+    * verification stage is one bounded prune plus two joins against a
+    * small checkpoint — no per-token rows, no aggregation.
     */
   def jaccard(docs: DataFrame, pairs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val members = pairs.select(col("id_a").as(idCol))
-      .union(pairs.select(col("id_b").as(idCol)))
-      .distinct()
-    val pruned = Checkpoints.materialize(
-      docs.join(members, Seq(idCol), "left_semi")
-        .select(col(idCol), col(textCol)))
-    val sets = pruned.select(col(idCol).as("jid"),
-      explode(array_distinct(tokens(col(textCol)))).as("tok"))
-    // |set| is map-only over the checkpointed rows — no explode/groupBy
-    // shuffle just to count what size(array_distinct(...)) already knows
-    val sizes = pruned.select(col(idCol).as("jid"),
-      size(array_distinct(tokens(col(textCol)))).cast("long").as("sz"))
-    val inter = pairs
-      .join(sets.select(col("jid").as("id_a"), col("tok")), "id_a")
-      .join(sets.select(col("jid").as("id_b"), col("tok")), Seq("id_b", "tok"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    pairs
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .na.fill(0L, Seq("inter"))
-      .join(sizes.select(col("jid").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col("jid").as("id_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-      .select(col("id_a"), col("id_b"), col("inter"), col("jaccard"))
-  }
+      idCol: String = "doc_id"): DataFrame =
+    pairTokenSets(docs, pairs, textCol, idCol)
+      .select(col("id_a"), col("id_b"), col("inter"),
+        setJaccard(col("_sa"), col("_sb")).as("jaccard"))
 
   /** ASYMMETRIC containment for candidate pairs — the quote/subset
     * signal Jaccard dilutes: a tweet embedded verbatim in a long article
     * has Jaccard ≈ 0 but containment_a = 1. Per pair: `id_a, id_b,
     * inter, containment_a (=|A∩B|/|A|), containment_b, containment
     * (the max — "one side is mostly inside the other")`. Same pruned
-    * token-set machinery as [[jaccard]] (pair members only, one
-    * checkpoint); |set| >= 1 always (an empty text still tokenizes to
-    * one empty token), so the divisions need no guard.
+    * token-set pair join as [[jaccard]]; |set| >= 1 always (an empty
+    * text still tokenizes to one empty token), so the divisions need no
+    * guard.
     */
   def containment(docs: DataFrame, pairs: DataFrame,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+    def share(set: String) =
+      round(col("inter").cast("double") / size(col(set)).cast("double"), 6)
+    pairTokenSets(docs, pairs, textCol, idCol)
+      .select(col("id_a"), col("id_b"), col("inter"),
+        share("_sa").as("containment_a"), share("_sb").as("containment_b"),
+        greatest(share("_sa"), share("_sb")).as("containment"))
+  }
+
+  /** |A∩B| / (|A|+|B|−|A∩B|) of two DISTINCT token-set columns — the one
+    * Jaccard formula behind [[jaccard]], [[jaccardScalar]] and both
+    * verified near-dup rejects. Null when either set is null. */
+  private def setJaccard(a: Column, b: Column): Column = {
+    val inter = size(array_intersect(a, b)).cast("double")
+    inter / (size(a).cast("double") + size(b).cast("double") - inter)
+  }
+
+  /** The candidate pairs with both members' distinct token sets (`_sa`,
+    * `_sb`) and their intersection size (`inter`, 0 when a text is
+    * null): the member sets are pruned from `docs` and materialized
+    * once, then joined onto each end of every pair. */
+  private def pairTokenSets(docs: DataFrame, pairs: DataFrame,
+      textCol: String, idCol: String): DataFrame = {
     val members = pairs.select(col("id_a").as(idCol))
       .union(pairs.select(col("id_b").as(idCol)))
       .distinct()
-    val pruned = Checkpoints.materialize(
+    val sets = Checkpoints.materialize(
       docs.join(members, Seq(idCol), "left_semi")
-        .select(col(idCol), col(textCol)))
-    val sets = pruned.select(col(idCol).as("jid"),
-      explode(array_distinct(tokens(col(textCol)))).as("tok"))
-    val sizes = pruned.select(col(idCol).as("jid"),
-      size(array_distinct(tokens(col(textCol)))).cast("long").as("sz"))
-    val inter = pairs
-      .join(sets.select(col("jid").as("id_a"), col("tok")), "id_a")
-      .join(sets.select(col("jid").as("id_b"), col("tok")), Seq("id_b", "tok"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    val ca = round(col("inter").cast("double") /
-      col("sz_a").cast("double"), 6)
-    val cb = round(col("inter").cast("double") /
-      col("sz_b").cast("double"), 6)
+        .select(col(idCol), array_distinct(tokens(col(textCol))).as("_set")))
     pairs
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .na.fill(0L, Seq("inter"))
-      .join(sizes.select(col("jid").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col("jid").as("id_b"), col("sz").as("sz_b")), "id_b")
-      .select(col("id_a"), col("id_b"), col("inter"),
-        ca.as("containment_a"), cb.as("containment_b"),
-        greatest(ca, cb).as("containment"))
+      .join(sets.select(col(idCol).as("id_a"), col("_set").as("_sa")), "id_a")
+      .join(sets.select(col(idCol).as("id_b"), col("_set").as("_sb")), "id_b")
+      .withColumn("inter",
+        coalesce(size(array_intersect(col("_sa"), col("_sb"))), lit(0)).cast("long"))
   }
 
   /** The corpus's (band-id, band-value, signature) state for the banded
@@ -965,17 +950,13 @@ object Dedup {
   /** Exact token-set Jaccard of two text columns as ONE scalar expression
     * — codegen'd array functions, no join or aggregation, so it is legal
     * inside any streaming plan and evaluates only on rows a join has
-    * already paired. Pair-identical to [[jaccard]]'s distributed join
-    * form (both sides distinct-tokenized; |A∪B| = |A|+|B|−|A∩B|): the
-    * join form scales the all-pairs verification stage, this form prices
-    * ONE candidate pair whose both texts are on the same row.
+    * already paired. Pair-identical to [[jaccard]]'s distributed pair
+    * join (both sides distinct-tokenized, one [[setJaccard]]): the join
+    * form scales the all-pairs verification stage, this form prices ONE
+    * candidate pair whose both texts are on the same row.
     */
-  def jaccardScalar(a: Column, b: Column): Column = {
-    val ta = array_distinct(tokens(a))
-    val tb = array_distinct(tokens(b))
-    val inter = size(array_intersect(ta, tb)).cast("double")
-    inter / (size(ta).cast("double") + size(tb).cast("double") - inter)
-  }
+  def jaccardScalar(a: Column, b: Column): Column =
+    setJaccard(array_distinct(tokens(a)), array_distinct(tokens(b)))
 
   /** The corpus's (band key, text) VERIFICATION state — what the
     * Jaccard-verified streaming ingest gate
@@ -1086,10 +1067,8 @@ object Dedup {
     }.drop("_bks")
     (0 until bands).foldLeft(withBands) { (d, b) =>
       val r = bandDocs.select(col("bk").as(s"_cbk$b"), col("ctoks").as(s"_ct$b"))
-      val inter = size(array_intersect(d("_vtoks"), r(s"_ct$b"))).cast("double")
-      val j = inter /
-        (size(d("_vtoks")).cast("double") + size(r(s"_ct$b")).cast("double") - inter)
-      d.join(r, d(s"_bk$b") === r(s"_cbk$b") && j >= minJaccard, "left_anti")
+      d.join(r, d(s"_bk$b") === r(s"_cbk$b") &&
+        setJaccard(d("_vtoks"), r(s"_ct$b")) >= minJaccard, "left_anti")
     }.drop("_vtoks" +: (0 until bands).map(b => s"_bk$b"): _*)
   }
 
@@ -1131,33 +1110,15 @@ object Dedup {
       .select(col(idCol).as("_vid"), md5(col(textCol)).as("_vh"),
         col("_vtoks"), explode(col("_bks")).as("_bk"))
     val r = bandDocs.select(col("bk").as("_cbk"), col("ctoks"))
-    val inter = size(array_intersect(col("_vtoks"), col("ctoks"))).cast("double")
-    val j = inter /
-      (size(col("_vtoks")).cast("double") + size(col("ctoks")).cast("double") - inter)
     val rejected = stacked
-      .join(r, col("_bk") === col("_cbk") && j >= minJaccard, "left_semi")
+      .join(r, col("_bk") === col("_cbk") &&
+        setJaccard(col("_vtoks"), col("ctoks")) >= minJaccard, "left_semi")
       .select(col("_vid"), col("_vh")).distinct()
     docs.join(rejected,
       col(idCol) === col("_vid") && md5(col(textCol)) === col("_vh"),
       "left_anti")
   }
 
-  /** Near-duplicate CLUSTERS from candidate pairs: `rounds` iterations of
-    * min-label propagation (label(v) ← min(label(v), min label over
-    * neighbors)) — after the pair stage finds edges, this is how a real
-    * dedup pipeline picks one keeper per connected component. Rounds ≥
-    * component diameter give exact components; near-dup components are
-    * shallow (pairs/triangles), so a small fixed round count is both
-    * sufficient and — because the oracle replays the SAME rounds — exactly
-    * checkable. Each round is one equi-join + one min aggregation on the
-    * label key (uniform doc ids — no skew); at production scale checkpoint
-    * every few rounds to cut lineage.
-    *
-    * Cache lifecycle: the final labels (one short row per clustered doc)
-    * are materialized eagerly so the persisted edge list can be
-    * unpersisted before returning — repeated invocations leave no cache
-    * entries behind.
-    */
   /** Multi-signal near-dup clustering: union several candidate-pair
     * edge lists (text LSH, image aHash, audio fingerprint, semantic
     * cosine — any (id_a, id_b) source) into ONE graph and propagate
@@ -1176,25 +1137,41 @@ object Dedup {
       rounds)
   }
 
+  /** Near-duplicate CLUSTERS from candidate pairs: `rounds` iterations of
+    * min-label propagation — after the pair stage finds edges, this is
+    * how a real dedup pipeline picks one keeper per connected component.
+    * After r rounds each document's label is the minimum id within r
+    * hops of it; rounds ≥ component diameter give exact components.
+    * Near-dup components are shallow (pairs/triangles), so a small fixed
+    * round count is both sufficient and — because the oracle replays the
+    * SAME rounds — exactly checkable.
+    *
+    * Plan shape: propagation runs over the closed neighbourhood
+    * `edges ∪ {(v, v)}`, so a round is ONE equi-join of the previous
+    * labels plus ONE min aggregation on the label key (uniform doc ids —
+    * no skew), and round r reads round r−1's labels once: the plan grows
+    * linearly in `rounds`. Round 1 needs no join at all: over the
+    * identity labels it is the minimum id in each closed neighbourhood.
+    * At production scale `checkpointEvery` cuts lineage every few rounds.
+    *
+    * Cache lifecycle: the final labels (one short row per clustered doc)
+    * are materialized eagerly so the persisted edge list can be
+    * unpersisted before returning — repeated invocations leave no cache
+    * entries behind.
+    */
   def clusterPairs(pairs: DataFrame, rounds: Int,
       checkpointEvery: Int = 0): DataFrame = {
+    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // The edge list is consumed once per round — persist it, or every
     // round re-executes the whole upstream candidate-pair pipeline
     // (minhash + LSH join). The edge list is the DISTILLED graph: tiny
     // next to the corpus, the textbook cache for iterative algorithms.
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    val hood = edges.union(edges.select(col("src"), col("src").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-    for (r <- 1 to rounds) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
-        .groupBy(col("src")).agg(min(col("lbl")).as("nlbl"))
-        .withColumnRenamed("src", "id")
-      labels = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
+    var labels = hood.groupBy(col("src").as("id")).agg(min(col("dst")).as("lbl"))
+    for (r <- 2 to rounds) {
       // each round stacks a join+agg on the labels lineage; past a few
       // rounds the plan itself becomes the bottleneck (re-optimization,
       // stage-retry recompute depth). Checkpoints.materialize truncates
@@ -1202,12 +1179,14 @@ object Dedup {
       // default: truncated lineage + unreplicated blocks would otherwise
       // make one lost executor an unrecoverable failure), executor-local
       // in dev/local mode.
-      if (checkpointEvery > 0 && r % checkpointEvery == 0 && r < rounds)
+      if (checkpointEvery > 0 && (r - 1) % checkpointEvery == 0)
         labels = Checkpoints.materialize(labels)
+      labels = hood.join(labels.select(col("id").as("dst"), col("lbl")), "dst")
+        .groupBy(col("src").as("id")).agg(min(col("lbl")).as("lbl"))
     }
     val out = Checkpoints.materialize(
       labels.select(col("id").as("doc_id"), col("lbl").as("cluster")))
-    edges.unpersist()
+    hood.unpersist()
     out
   }
 

@@ -176,10 +176,18 @@ object Pipeline {
       // threshold it degrades to the same one-corpus-exchange SMJ the
       // window pays at every scale). Interleaved solo probes read
       // 10.6-10.8 s (join) vs 13.6-29.8 s (window) for x54 at sf0.1.
-      val exactKeep = good.groupBy(md5(col("text")).as("h"))
+      // An under-partitioned corpus (a one-row-group parquet file scans
+      // as ONE split) would run every later stage — band keys, Jaccard
+      // prune, contamination — as one task; round-robin it over the
+      // session's cores first. Reading a checkpoint's partition count
+      // starts no job, and a corpus-scale input never takes this branch.
+      val cores = good.sparkSession.sparkContext.defaultParallelism
+      val spread =
+        if (good.rdd.getNumPartitions < cores) good.repartition(cores) else good
+      val exactKeep = spread.groupBy(md5(col("text")).as("h"))
         .agg(min(col("doc_id")).as("keeper"))
       val exact = Checkpoints.materialize(
-        good.withColumn("h", md5(col("text")))
+        spread.withColumn("h", md5(col("text")))
           .join(exactKeep, "h")
           .filter(col("doc_id") === col("keeper"))
           .drop("h", "keeper"))

@@ -271,6 +271,36 @@ class PropertySpec extends SparkSuite {
     }).passed, "property failed: clusters")
   }
 
+  test("clusterPairs: after r rounds every label = the minimum id within r hops") {
+    // a shuffled-id path longer than any tested round count, plus random
+    // chords: labels have NOT converged, so each round's exact reach shows
+    val few = SCTest.Parameters.default.withMinSuccessfulTests(2).withWorkers(1)
+    val graphs = for {
+      ids <- Gen.pick(8, 0L to 19L).map(_.toList)
+      keys <- Gen.listOfN(8, Gen.chooseNum(0, 1 << 20))
+      order = ids.zip(keys).sortBy(_._2).map(_._1)
+      chords <- Gen.listOfN(2, Gen.zip(Gen.oneOf(ids), Gen.oneOf(ids)))
+    } yield (order.zip(order.tail) ++ chords).filter { case (a, b) => a != b }
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+    assert(SCTest.check(few, Prop.forAll(graphs) { pairs =>
+      val df = frame("id_a" -> pairs.map(_._1), "id_b" -> pairs.map(_._2))
+      val adj = (pairs ++ pairs.map(_.swap)).groupBy(_._1)
+        .map { case (v, es) => v -> es.map(_._2) }
+      // reference: breadth-first search on the driver
+      def reach(v: Long, hops: Int): Set[Long] =
+        (1 to hops).foldLeft((Set(v), Set(v))) { case ((seen, front), _) =>
+          val next = front.flatMap(adj).diff(seen)
+          (seen ++ next, next)
+        }._1
+      (1 to 3).forall { r =>
+        val got = graft.ops.Dedup.clusterPairs(df, rounds = r).collect()
+          .map(row => row.getLong(0) -> row.getLong(1)).toMap
+        got.keySet == adj.keySet &&
+          adj.keySet.forall(v => got(v) == reach(v, r).min)
+      }
+    }).passed, "property failed: per-round labels")
+  }
+
   test("redact is idempotent (placeholders never re-match a pattern)") {
     import org.apache.spark.sql.functions._
     val texts = Seq(

@@ -9,7 +9,8 @@ Pins the round-17 verdict Next #1 contract:
     divergence recurs in two consecutive rounds, and passes on a
     first occurrence;
 and the bench_regress.py retirement contract (Next #8): a query named
-in the candidate's `excluded` list is RETIRED, not MISSING.
+in the candidate's `excluded` list is RETIRED, not MISSING; and the
+spans_report.py per-query job table of a traced perfbench run.
 
 No Spark, no sbt — pure JSON fixtures through the real scripts.
 """
@@ -131,12 +132,49 @@ def test_oracle_ratio_report(tmp):
     assert "1 over" in r.stdout, r.stdout
 
 
+def test_spans_report(tmp):
+    # one query 0..100 ms: two Dedup barrier jobs (overlapping 10..40 and
+    # 30..50) and one collect job (60..70) -> 40 ms of job wall for the
+    # barrier group, 50 ms of the query covered, 50 ms driver-only
+    def span(i, parent, kind, name, s, e, **attrs):
+        return {"id": i, "parent": parent, "kind": kind, "name": name,
+                "start_ms": s, "end_ms": e, "attrs": attrs}
+    spans = [
+        span(1, 0, "workload", "w", 0, 100),
+        span(2, 1, "pass", "pass 0", 0, 100),
+        span(3, 2, "query", "x1", 0, 100, **{"pass": 0, "plan_ms": 1.0}),
+        span(4, 3, "phase", "build", 0, 55),
+        span(5, 4, "job", "job 1", 10, 40, site="Checkpoints.scala",
+             owner="Dedup.scala", run_ms=50.0, cpu_ms=20.0, tasks=4.0,
+             task_wait_ms=8.0),
+        span(6, 4, "job", "job 2", 30, 50, site="Checkpoints.scala",
+             owner="Dedup.scala", run_ms=10.0, cpu_ms=5.0, tasks=1.0,
+             task_wait_ms=2.0),
+        span(7, 3, "phase", "consume", 55, 100),
+        span(8, 7, "job", "job 3", 60, 70, site="Harness.scala",
+             owner="Harness.scala", run_ms=9.0, cpu_ms=3.0, tasks=1.0,
+             task_wait_ms=0.0),
+    ]
+    with open(os.path.join(tmp, "spans.jsonl"), "w") as f:
+        f.writelines(json.dumps(s) + "\n" for s in spans)
+    r = run("spans_report.py", tmp)
+    assert r.returncode == 0, r.stdout + r.stderr
+    lines = r.stdout.splitlines()
+    assert lines[0] == "x1 (pass 0): latency 100 ms, driver-only 50 ms", r.stdout
+    barrier = lines[2].split()
+    assert barrier == ["Checkpoints.scala/Dedup.scala", "2", "40", "60",
+                       "25", "5", "2.0"], r.stdout
+    collect = lines[3].split()
+    assert collect[:3] == ["Harness.scala/Harness.scala", "1", "10"], r.stdout
+
+
 def main():
     with tempfile.TemporaryDirectory() as tmp:
         test_regress_retired_vs_missing(tmp)
         test_reprobe_overwrite_keeps_insuite(tmp)
         test_reprobe_leak_gate(tmp)
         test_oracle_ratio_report(tmp)
+        test_spans_report(tmp)
     print("tools self-test: OK")
 
 
