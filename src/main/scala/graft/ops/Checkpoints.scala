@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.storage.StorageLevel
 
 /** Materialization boundary for load-bearing intermediate pipeline state
   * (LSH candidate-pair edge lists, cluster labels): executes the plan
@@ -40,6 +42,23 @@ object Checkpoints {
     * reopening that window.
     */
   val RequireReliableKey = "graft.checkpoints.requireReliable"
+
+  /** Column [[scratch]] adds; callers drop it from what they return. */
+  val ScratchCol = "_scratch"
+
+  /** Persists `df` as one call's scratch state (MEMORY_AND_DISK) and
+    * returns the persisted frame; the caller unpersists it when done.
+    * Spark's CacheManager shares one cache entry among equal plans, so two
+    * concurrent calls over equal inputs would share an entry and the first
+    * caller's `unpersist` would clear it while the other still reads it.
+    * A per-call literal column ([[ScratchCol]]) keeps each call's plan,
+    * and so its cache entry, its own.
+    */
+  def scratch(df: DataFrame): DataFrame =
+    df.withColumn(ScratchCol, lit(scratchIds.incrementAndGet()))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  private val scratchIds = new java.util.concurrent.atomic.AtomicLong
 
   def materialize(df: DataFrame): DataFrame = {
     val out = materialize0(df)

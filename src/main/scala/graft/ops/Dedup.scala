@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
+
+import graft.functions.TextExpressions
 
 /** Document deduplication for training-data pipelines (north-star
   * extension): exact, MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -165,22 +167,16 @@ object Dedup {
   /** Word n-gram shingles ("w1 w2 .. wn" strings). Documents shorter than
     * n tokens collapse to a single whole-document shingle (both engines'
     * range/sequence primitives disagree on empty ranges — the guard keeps
-    * the construction portable AND gives short docs a signature).
+    * the construction portable AND gives short docs a signature). Null
+    * text shingles as the empty text: one empty shingle.
     *
-    * The token array is [[ExprUtil.bindOnce]]-bound: the tree references
-    * it 4× (two size()s, the slice source, the short-doc fallback), and
-    * HOFs are CodegenFallback — inline, every corpus-scale shingle pass
-    * paid 4 split() calls per row (measured 3.5× on the 3-gram explode,
-    * graft.SplitBench; round-20 optimization, guide §1.2 "per-task
-    * work"). Same strings bit-for-bit: the lambda body is the old
-    * expression reading the bound value.
+    * One native codegen'd expression
+    * ([[graft.functions.TextExpressions.Shingles]]): the text is split
+    * once per row and each window joined straight from the token array.
     */
   def shingles(text: Column, n: Int = 5): Column =
-    ExprUtil.bindOnce(tokens(text), arr =>
-      when(size(arr) >= n,
-        transform(sequence(lit(1), size(arr) - (n - 1)),
-          i => concat_ws(" ", slice(arr, i, lit(n)))))
-        .otherwise(array(concat_ws(" ", arr))))
+    GraftBridge.toColumn(TextExpressions.Shingles(
+      GraftBridge.toExpression(coalesce(text, lit(""))), n))
 
   /** k arithmetic minhashes per document over the *distinct shingle set*:
     * ONE md5 per shingle (materialized as a column — not re-evaluated per
@@ -319,81 +315,33 @@ object Dedup {
       d.withColumn(s"band$b", md5(concat_ws(":", cols: _*)))
     }
 
-  /** Map-only per-row band keys: distinct shingles → one md5 each → k
-    * affine mins → banded md5 keys, ALL inside higher-order functions (no
-    * explode, no groupBy). Produces byte-identical keys to the
-    * explode/groupBy pipeline (bandKeys∘minhashSignature) — verified in
-    * ExtensionSpec — but as a STATELESS projection, so it composes with
-    * Structured Streaming before stream-static joins (streaming
-    * aggregations would forbid the downstream join). conv() replaces the
-    * engine-portable hex parser here: this form never meets the DuckDB
-    * oracle, the batch pipeline remains the oracle-checked one.
+  /** Map-only per-row band keys: shingles → one md5 each → k affine
+    * mins → banded md5 keys, in ONE native codegen'd expression
+    * ([[graft.functions.TextExpressions.MinhashBandKeys]]; no explode,
+    * no groupBy). Produces byte-identical keys to the explode/groupBy
+    * pipeline (bandKeys∘minhashSignature) — verified in ExtensionSpec —
+    * but as a STATELESS projection, so it composes with Structured
+    * Streaming before stream-static joins (streaming aggregations would
+    * forbid the downstream join). The kernel parses the digest's first
+    * 12 hex chars directly instead of the engine-portable hex parser:
+    * this form never meets the DuckDB oracle, the batch pipeline remains
+    * the oracle-checked one. Null text keys as the empty text.
     */
   def bandKeysArray(text: Column, bands: Int, rowsPerBand: Int,
       shingleN: Int = 5): Column = {
-    val k = bands * rowsPerBand
-    require(k <= MinhashA.size, s"at most ${MinhashA.size} hash functions")
-    // STAGED inside the single Column (round-20; the withBandKeys
-    // discipline via ExprUtil.bindOnce): previously the per-shingle
-    // md5+mod pass was inlined into k separate
-    // array_min(transform(hm, ...)) copies — CodegenFallback HOFs with
-    // no CSE, so every row paid the digest pass k times (measured 26×
-    // at k=16, graft.SplitBench). Now ONE hash pass feeds ONE
-    // aggregate fold carrying all k running minima (zip_with against
-    // the broadcast-literal (a,b) coefficient array), and the band
-    // projection reads the bound mins array by position. Keys are
-    // byte-identical (same affine mins, same ':'-join) — the
-    // bandKeysArray == bandKeys∘minhashSignature spec still pins it.
-    val ab = array((0 until k).map(i =>
-      struct(lit(MinhashA(i)).as("a"), lit(MinhashB(i)).as("b"))): _*)
-    val hm = transform(array_distinct(shingles(text, shingleN)), s =>
-      conv(substring(md5(s), 1, 12), 16, 10).cast("long") % MinhashP)
-    val mins = aggregate(hm, array_repeat(lit(MinhashP), k),
-      (acc, h) => zip_with(acc, ab, (m, c) =>
-        least(m, (h * c("a") + c("b")) % MinhashP)))
-    ExprUtil.bindOnce(mins, m =>
-      array((0 until bands).map { b =>
-        md5(concat_ws(":", (b * rowsPerBand until (b + 1) * rowsPerBand)
-          .map(i => element_at(m, i + 1)): _*))
-      }: _*))
+    require(bands * rowsPerBand <= MinhashA.size,
+      s"at most ${MinhashA.size} hash functions")
+    GraftBridge.toColumn(TextExpressions.MinhashBandKeys(
+      GraftBridge.toExpression(coalesce(text, lit(""))), bands, rowsPerBand,
+      shingleN))
   }
 
-  /** Append an `out` band-key-array column via STAGED projections. Same
-    * keys as [[bandKeysArray]], but the expensive per-shingle md5+mod pass
-    * is bound to its own intermediate column: the k min-permutations then
-    * collapse into ONE `aggregate` fold over that array (each shingle hash
-    * is read once, folded into all k running minima via `zip_with`), and
-    * the band keys read the mins array by position. In the single-Column
-    * form, Catalyst inlines the shingle-hash subtree into every one of the
-    * k `array_min(transform(...))` copies — higher-order functions sit
-    * outside whole-stage codegen, so no subexpression elimination rescues
-    * it and each row pays k× the md5 work. Here `CollapseProject` keeps a
-    * Project boundary below the mins stage only where an alias is
-    * non-cheap AND multiply-referenced, which is exactly the boundary that
-    * makes the hash pass evaluate once. Measured at sf0.1 this is the
-    * difference between x40 at ~80 s and ~10 s.
-    */
+  /** Append an `out` band-key-array column: [[bandKeysArray]] over
+    * `textCol`, as one `withColumn`. */
   def withBandKeys(df: DataFrame, textCol: String, out: String,
-      bands: Int, rowsPerBand: Int, shingleN: Int = 5): DataFrame = {
-    val k = bands * rowsPerBand
-    require(k <= MinhashA.size, s"at most ${MinhashA.size} hash functions")
-    val hmCol = freshName(df.columns.toSeq :+ out, out + "_hm")
-    val mhCol = freshName(df.columns.toSeq :+ out, out + "_mh")
-    val hm = transform(array_distinct(shingles(col(textCol), shingleN)),
-      s => conv(substring(md5(s), 1, 12), 16, 10).cast("long") % MinhashP)
-    val ab = array((0 until k).map(i =>
-      struct(lit(MinhashA(i)).as("a"), lit(MinhashB(i)).as("b"))): _*)
-    // affine values lie in [0, P), so P seeds every running minimum safely
-    val mins = aggregate(col(hmCol), array_repeat(lit(MinhashP), k),
-      (acc, h) => zip_with(acc, ab, (m, c) =>
-        least(m, (h * c("a") + c("b")) % MinhashP)))
-    val bks = array((0 until bands).map { b =>
-      md5(concat_ws(":", (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(i => element_at(col(mhCol), i + 1)): _*))
-    }: _*)
-    df.withColumn(hmCol, hm).withColumn(mhCol, mins).withColumn(out, bks)
-      .drop(hmCol, mhCol)
-  }
+      bands: Int, rowsPerBand: Int, shingleN: Int = 5): DataFrame =
+    df.withColumn(out, bandKeysArray(col(textCol), bands, rowsPerBand,
+      shingleN))
 
   /** A column name not present in `taken` (temp-column collision guard). */
   private def freshName(taken: Seq[String], base: String): String =
@@ -448,7 +396,6 @@ object Dedup {
   def bloomReject(docs: DataFrame,
       bloom: org.apache.spark.util.sketch.BloomFilter,
       textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
     val probe = GraftBridge.toColumn(
       graft.functions.SketchExpressions.BloomMightContain(
         GraftBridge.toExpression(md5(col(textCol))), bloom))
@@ -588,8 +535,10 @@ object Dedup {
     * so the expensive signature subtree appears once per join side instead
     * of once per band per side; the stacked frame (bands rows/doc ×
     * (id + 32-char key) — tiny next to the signature computation above
-    * it) is persisted across the two join sides, because Catalyst does
-    * not reuse the exchange across their rename-only difference. The join
+    * it) is persisted across the two join sides and the star edges, as
+    * per-call [[Checkpoints.scratch]] state (CurationRecallSpec's 8-thread
+    * x64 probe read an empty pair set when concurrent calls shared one
+    * cache entry). The join
     * key (band_id, band_key) spreads uniformly — md5 keys, no hash
     * PARTITION skew — but bucket CARDINALITY is semantic (how many docs
     * truly share a band key), so pair generation is bounded by the
@@ -612,8 +561,8 @@ object Dedup {
   def lshCandidatePairs(docs: DataFrame, bands: Int, rowsPerBand: Int,
       textCol: String = "text", idCol: String = "doc_id",
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val stacked = stackedBandKeys(docs, bands, rowsPerBand, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stacked = Checkpoints.scratch(
+      stackedBandKeys(docs, bands, rowsPerBand, textCol, idCol))
     val pairs = Checkpoints.materialize(pairJoin(stacked, idCol, maxBucket))
     stacked.unpersist()
     pairs
@@ -669,13 +618,10 @@ object Dedup {
     * per-row [[bandKeysArray]] ladder replaces the explode/groupBy
     * signature route, which shuffled every per-shingle hash row through
     * the groupBy(id) exchange — a full corpus-scale shuffle at 100 TB
-    * — before the band keys even existed. Post-bindOnce the HOF ladder
-    * costs the same hash work with ZERO exchange (graft.SigBench:
-    * byte-identical stacked rows, 1.2–1.9 s explode/groupBy vs
-    * 1.3–1.5 s map-only at sf0.1 — a local wash, a structural shuffle
-    * removal at scale; the early-round negative result on the HOF form
-    * predates bindOnce, which removed the k× duplicated hash pass that
-    * made it lose).
+    * — before the band keys even existed. The per-row ladder does the
+    * same hash work (one md5 per shingle, one per band) with ZERO
+    * exchange, in one native codegen'd expression; ExtensionSpec pins
+    * its keys byte-equal to the explode/groupBy route.
     *
     * PRECONDITION: `idCol` unique per row (every caller feeds a
     * primary-key id). The groupBy route MERGED duplicate-id rows into

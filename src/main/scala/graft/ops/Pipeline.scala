@@ -618,8 +618,10 @@ object Pipeline {
 
     // exact vs corpus (null-safe digest anti-join), then within-batch
     // exact keeper — both on md5(text), one shuffle each on uniform keys.
-    // freshExact feeds both sides of the keeper self-join: persist it for
-    // the duration of the materialization (the curateStages discipline;
+    // freshExact feeds both sides of the keeper self-join: persist it as
+    // per-call scratch state (Checkpoints.scratch, so concurrent equal
+    // batches do not share one cache entry) for the duration of the
+    // materialization (the curateStages discipline;
     // a window keeper was A/B'd in round 19 and reverted — see backbone).
     // The corpus DIGEST SET is per-corpus-version state: memoized +
     // materialized, so a session appending several batches against one
@@ -629,16 +631,15 @@ object Pipeline {
       Checkpoints.materialize(
         corpus.select(md5(col("text")).as("_ch")).distinct())
     }
-    val freshExact = good.withColumn("_h", md5(col("text")))
-      .join(corpusDigests, col("_h") <=> col("_ch"), "left_anti")
-    freshExact.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val freshExact = Checkpoints.scratch(good.withColumn("_h", md5(col("text")))
+      .join(corpusDigests, col("_h") <=> col("_ch"), "left_anti"))
     val batchKeep = freshExact.groupBy(col("_h"))
       .agg(min(col("doc_id")).as("_keeper"))
     val exact =
       try Checkpoints.materialize(
         freshExact.join(batchKeep, "_h")
           .filter(col("doc_id") === col("_keeper"))
-          .drop("_h", "_keeper"))
+          .drop("_h", "_keeper", Checkpoints.ScratchCol))
       finally freshExact.unpersist()
 
     // verified near-dup vs corpus: the streaming gate's batch form —

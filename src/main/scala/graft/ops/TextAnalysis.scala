@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
+
+import graft.functions.TextExpressions
 
 /** Text analysis for training-data pipelines (north-star extension):
   * token statistics, quality scoring, language identification, BPE-ish
@@ -30,35 +32,24 @@ object TextAnalysis {
     */
   /** The scalar quality score as a pure expression — usable as a
     * stateless filter anywhere, including streaming plans (no
-    * aggregation, no state). The token array is bound once
-    * ([[ExprUtil.bindOnce]]): the filter() HOF makes the whole predicate
-    * CodegenFallback, and the inline tree referenced the split 4× per
-    * row (round-20; measured in graft.SplitBench). Same doubles —
-    * the body is the old expression over the bound value. */
-  def qualityExpr(text: Column): Column =
-    ExprUtil.bindOnce(tokens(text), toks => {
-      val nTok = size(toks).cast("double")
-      val ttr = size(array_distinct(toks)).cast("double") / nTok
-      val short = size(filter(toks, t => length(t) === 1)).cast("double") / nTok
-      ttr * (lit(1.0) - short)
-    })
+    * aggregation, no state). One native codegen'd expression
+    * ([[graft.functions.TextExpressions.TokenQuality]]): the text is
+    * split once per row and the distinct and one-char tokens counted in
+    * one loop. */
+  def qualityExpr(text: Column): Column = tokenQuality(text, scoreOnly = true)
 
-  def quality(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    // same bind-once staging as qualityExpr: ONE bound token array
-    // yields a (ttr, short) struct, projected apart in an outer select
-    // (the struct alias is non-cheap and multiply-referenced, so
-    // CollapseProject keeps the boundary and it evaluates once)
-    val parts = ExprUtil.bindOnce(tokens(col(textCol)), toks => {
-      val nTok = size(toks).cast("double")
-      val ttr = size(array_distinct(toks)).cast("double") / nTok
-      val short = size(filter(toks, t => length(t) === 1)).cast("double") / nTok
-      struct(ttr.as("ttr"), short.as("short"))
-    })
-    docs.select(col(idCol), parts.as("_qp"))
+  def quality(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+    // one kernel call yields the (ttr, short) struct, projected apart in
+    // an outer select (the struct alias is non-cheap and multiply-
+    // referenced, so CollapseProject keeps the boundary)
+    docs.select(col(idCol), tokenQuality(col(textCol), scoreOnly = false).as("_qp"))
       .select(col(idCol), col("_qp.ttr").as("ttr"),
         col("_qp.short").as("short_ratio"),
         (col("_qp.ttr") * (lit(1.0) - col("_qp.short"))).as("quality"))
-  }
+
+  private def tokenQuality(text: Column, scoreOnly: Boolean): Column =
+    GraftBridge.toColumn(TextExpressions.TokenQuality(
+      GraftBridge.toExpression(text), scoreOnly))
 
   /** Tiny per-language stopword lists for n-gram-free heuristic lang-id.
     * Public common words; tie-break by list order (en,de,fr,es,zh).
@@ -497,39 +488,28 @@ object TextAnalysis {
     *     and bullet-soup lines).
     *
     * Scale shape: MAP-ONLY — the line split, the three gates, and the
-    * re-assembly all run inside higher-order functions over the
+    * re-assembly all run in ONE native codegen'd expression
+    * ([[graft.functions.TextExpressions.LineQuality]]) over the
     * document's own token array, so there is NO shuffle of any kind (no
     * explode/groupBy round trip, no window): one codegen'd pass over the
     * scan, the best possible 100 TB plan. Stateless per row, which also
     * makes the operator directly streamable
     * ([[graft.streaming.StreamingWindows.streamingLineQualityGate]] —
-    * no watermark, no state store).
+    * no watermark, no state store). Null text is dropped.
     */
   def lineQualityCuration(docs: DataFrame, wordsPerLine: Int = 5,
       minWords: Int = 3, distinctNum: Int = 4, distinctDen: Int = 5,
       docKeepNum: Int = 3, docKeepDen: Int = 4,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(wordsPerLine >= 1 && minWords >= 1, "need positive line params")
-    val kept = docs
-      .select(col(idCol), split(col(textCol), " ").as("_t"))
-      .select(col(idCol), expr(
-        s"""transform(
-           |  sequence(0, cast(ceil(size(_t) / ${wordsPerLine}.0d) as int) - 1),
-           |  i -> slice(_t, i * $wordsPerLine + 1, $wordsPerLine))
-           |""".stripMargin).as("_lines"))
-      .select(col(idCol), size(col("_lines")).cast("long").as("n_lines"),
-        filter(col("_lines"), lw =>
-          (size(lw) >= minWords) &&
-            (size(array_distinct(lw)) * distinctDen >=
-              size(lw) * distinctNum) &&
-            (size(filter(lw, t => length(t) === 1)) * 2 < size(lw)))
-          .as("_kept"))
-    kept
-      .select(col(idCol), col("n_lines"),
-        size(col("_kept")).cast("long").as("n_kept"),
-        array_join(
-          transform(col("_kept"), lw => array_join(lw, " ")), " ")
-          .as("clean_text"))
+    val lq = GraftBridge.toColumn(TextExpressions.LineQuality(
+      GraftBridge.toExpression(col(textCol)), wordsPerLine, minWords,
+      distinctNum, distinctDen))
+    // inline() of the one-struct array is the evaluation barrier: the
+    // doc-keep predicate reads generator output, so Catalyst cannot push
+    // it below and re-run the kernel inside the filter (a projection
+    // alias would be substituted into the pushed-down predicate)
+    docs.select(col(idCol), inline(array(lq)))
       .filter(col("n_kept") * docKeepDen >= col("n_lines") * docKeepNum)
   }
 

@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   *      query (the one-off round-13 incident site) re-run concurrently
   *      from many threads must agree with its solo result — the
   *      in-suite regression probe for inconsistent reads of
-  *      materialized dedup state under contention.
+  *      materialized dedup state under contention; x61's append path
+  *      gets the same probe.
   */
 class CurationRecallSpec extends SparkSuite {
 
@@ -110,11 +111,13 @@ class CurationRecallSpec extends SparkSuite {
     assert(Checkpoints.materialize(df).count() === 3L)
   }
 
-  test("concurrent jaccard-family probe: x64 run from 8 threads at once " +
-      "agrees with its solo result (round-13 incident regression)") {
+  /** Runs query `name` solo, then from 8 threads at once: every
+    * concurrent run must agree with the solo result. */
+  private def concurrentProbe(name: String): Unit = {
     val dir = "/root/testdata/sf0.001"
-    val build = SparkEntry.queries("x64_banding_precision")
+    val build = SparkEntry.queries(name)
     val solo = build(spark, dir).collect().map(_.toSeq).toSeq
+    assert(solo.nonEmpty)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     implicit val ec: scala.concurrent.ExecutionContext =
@@ -124,8 +127,32 @@ class CurationRecallSpec extends SparkSuite {
         build(spark, dir).collect().map(_.toSeq).toSeq
       })), 10.minutes)
     results.zipWithIndex.foreach { case (r, i) =>
-      assert(r === solo, s"concurrent run $i diverged from solo x64")
+      assert(r === solo, s"concurrent run $i diverged from solo $name")
     }
+  }
+
+  test("concurrent jaccard-family probe: x64 run from 8 threads at once " +
+      "agrees with its solo result (round-13 incident regression)") {
+    concurrentProbe("x64_banding_precision")
+  }
+
+  test("Checkpoints.scratch: equal frames get their own cache entries, " +
+      "so one caller's unpersist leaves the other's in place") {
+    val df = frame("x" -> Seq(1, 2, 3))
+    val a = Checkpoints.scratch(df)
+    val b = Checkpoints.scratch(df)
+    try {
+      a.unpersist(blocking = true)
+      assert(b.storageLevel ===
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      assert(b.drop(Checkpoints.ScratchCol).collect().map(_.getInt(0))
+        .sorted.toSeq === Seq(1, 2, 3))
+    } finally { a.unpersist(); b.unpersist() }
+  }
+
+  test("concurrent append probe: x61 run from 8 threads at once agrees " +
+      "with its solo result (appendCurated's scratch persist)") {
+    concurrentProbe("x61_corpus_append")
   }
 
   /** Round-16 gate: SEMANTIC-stage recall at the pipeline's own

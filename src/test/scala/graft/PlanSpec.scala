@@ -430,4 +430,34 @@ class PlanSpec extends SparkSuite {
         && joined.select("doc_id").exceptAll(filtered.select("doc_id")).isEmpty,
       "filter-form and join-form survivor sets must be identical")
   }
+
+  test("curation text kernels plan as native codegen'd expressions: no " +
+      "higher-order function, lambda or CodegenFallback in the quality " +
+      "gate, the stacked band keys, the contamination shingles or the " +
+      "line gate") {
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, LambdaFunction}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, dir)
+    val frames = Seq(
+      "backbone quality gate" -> docs.filter(
+        graft.ops.TextAnalysis.qualityExpr(col("text")) > 0.3),
+      "stacked band keys" ->
+        graft.ops.Dedup.lshCandidatePairsLazy(docs, bands = 2, rowsPerBand = 4),
+      "contamination shingles" -> graft.ops.Dedup.contamination(
+        docs.filter(col("doc_id") % 97 =!= 0), docs.filter(col("doc_id") % 97 === 0)),
+      "line gate" -> graft.ops.TextAnalysis.lineQualityCuration(docs))
+    for ((name, df) <- frames) {
+      val plan = df.queryExecution.optimizedPlan
+      val interpreted = plan.flatMap(_.expressions.flatMap(_.collect {
+        case e: HigherOrderFunction => e
+        case e: LambdaFunction => e
+        case e: CodegenFallback => e
+      }))
+      assert(interpreted.isEmpty,
+        s"$name plans interpreted expressions: " +
+          interpreted.map(_.prettyName).distinct.mkString(", ") + "\n" +
+          plan.toString.take(3000))
+    }
+  }
 }

@@ -10,7 +10,8 @@ Pins the round-17 verdict Next #1 contract:
     first occurrence;
 and the bench_regress.py retirement contract (Next #8): a query named
 in the candidate's `excluded` list is RETIRED, not MISSING; and the
-spans_report.py per-query job table of a traced perfbench run.
+spans_report.py per-query job table and per-query job timeline of a
+traced perfbench run.
 
 No Spark, no sbt — pure JSON fixtures through the real scripts.
 """
@@ -166,6 +167,18 @@ def test_spans_report(tmp):
                        "25", "5", "2.0"], r.stdout
     collect = lines[3].split()
     assert collect[:3] == ["Harness.scala/Harness.scala", "1", "10"], r.stdout
+
+    # --timeline: the same query's jobs in start order, one row each
+    r = run("spans_report.py", tmp, "--timeline", "x1")
+    assert r.returncode == 0, r.stdout + r.stderr
+    lines = r.stdout.splitlines()
+    assert lines[0] == "x1 (pass 0): latency 100 ms", r.stdout
+    assert [l.split() for l in lines[2:]] == [
+        ["10", "30", "4", "50", "20", "Dedup.scala"],
+        ["30", "20", "1", "10", "5", "Dedup.scala"],
+        ["60", "10", "1", "9", "3", "Harness.scala"]], r.stdout
+    r = run("spans_report.py", tmp, "--timeline", "nope")
+    assert r.returncode == 1, r.stdout + r.stderr
 
 
 def main():
