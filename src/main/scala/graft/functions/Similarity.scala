@@ -6,9 +6,13 @@ import org.apache.spark.sql.functions._
 
 /** Vector similarity over `ArrayType` embedding columns.
   *
-  * Everything is built from codegen'd higher-order functions
-  * (`zip_with`/`aggregate`) — no UDFs, so whole-stage codegen spans the
-  * similarity computation (SURVEY.md north-star: similarity search).
+  * Similarity arithmetic is codegen'd expressions (VectorExpressions and
+  * `zip_with`/`aggregate`), so whole-stage codegen spans it (SURVEY.md
+  * north-star: similarity search). The two kernels over a driver-side
+  * index — nearest-centroid argmax ([[nearestCell]]) and sign-LSH band
+  * keys ([[broadcastBandKeys]]) — are deterministic Scala UDFs over one
+  * broadcast instead, so the plan does not grow with k or the plane
+  * count.
   *
   * Scale design:
   *   - brute-force top-k broadcasts the (small) query set against the
@@ -53,7 +57,9 @@ object Similarity {
     }
   }
 
-  /** Sign-LSH bucket id (0 until 2^nPlanes) for an embedding column.
+  /** Sign-LSH bucket id (0 until 2^nPlanes) for an embedding column:
+    * the one-band case of [[broadcastBandKeys]] (bit i set when the dot
+    * with plane i of [[planeSigns]] is positive; null embedding → 0).
     * Int-typed bucket: nPlanes is capped at 31 (wider bucketing goes
     * through [[stackedEmbeddingBandKeys]], whose long keys shift up to
     * 62 planes per band). */
@@ -61,11 +67,7 @@ object Similarity {
     require(nPlanes >= 1 && nPlanes <= 31,
       s"lshBucket shifts Int bucket bits: need 1 <= nPlanes <= 31, " +
         s"got $nPlanes (use stackedEmbeddingBandKeys for wider keys)")
-    val signs = planeSigns(nPlanes, dim)
-    signs.zipWithIndex.map { case (plane, p) =>
-      val planeCol = array(plane.toIndexedSeq.map(v => lit(v.toDouble)): _*)
-      when(dot(emb, planeCol) > 0, lit(1 << p)).otherwise(lit(0))
-    }.reduce(_ + _)
+    element_at(broadcastBandKeys(emb, 1, nPlanes, dim), 1).cast("int")
   }
 
   /** Exact brute-force cosine top-k: for each row of `queries`, the k
@@ -95,7 +97,7 @@ object Similarity {
   /** Centroid rows pulled to the driver — O(k·d) BY DESIGN (the MLlib
     * pattern: centroids live on the driver between corpus passes).
     * Expects `(cent_id, ce)` columns; sorted by cent_id so every
-    * literal-fold consumer iterates the same deterministic order.
+    * consumer iterates the same deterministic order.
     */
   private[graft] def collectCentroids(cents: DataFrame): Seq[(Long, Seq[Double])] =
     cents.select(col("cent_id").cast("long"), col("ce").cast("array<double>"))
@@ -103,127 +105,15 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1).toSeq
 
-  /** Routing threshold for the literal-argmax centroid family, set by
-    * the MEASURED JIT cliff, not by Janino's 64 KB compile limit: the
-    * generated consume method grows ~250 bytecode bytes per centroid
-    * (measured at d = 64: k=16 → 4,298 B, k=24 → 6,418 B, k=32 →
-    * 8,641 B), and HotSpot refuses to JIT methods over ~8,000 bytes —
-    * the code still COMPILES (Janino is happy until 64 KB) but runs as
-    * interpreted bytecode: on a 200k-row corpus the k=32..128 literal
-    * argmax measured 35–75 s vs 0.4–0.8 s for the broadcast form
-    * (PLANS.md round-18 A/B; at k ≥ 256 Spark's expression splitting
-    * kicks in and re-JITs, but 2–3× slower than broadcast). Past this
-    * bound [[nearestCell]] and the cell+sim path route AUTOMATICALLY
-    * to the broadcast-matrix forms ([[broadcastNearestCell]] /
-    * [[broadcastNearestCellSim]]: one executor-side copy instead of
-    * one per expression tree, bitwise the same result) — assignment,
-    * the Lloyd loop, PQ codes, IVF probing and the silhouette/diverse
-    * consumers all scale to thousands-of-cells quantizers with no
-    * caller change. 16 covers every committed query shape with 2×
-    * bytecode margin for fused surrounding expressions (the Lloyd
-    * map's quantize transform lands in the same generated method). */
-  val MaxLiteralCentroids = 16
-
-  /** Routing threshold for the inlined-hyperplane band-key family
-    * (band keys inline nBands·planesPerBand plane arrays of `dim`
-    * doubles each), set by the MEASURED plane ladder exactly like
-    * [[MaxLiteralCentroids]] — and ~64× below the 2048 round 18
-    * ASSERTED. The round-19 ladder (PLANS.md round-19 table, d = 64,
-    * materialized 200k-row corpus) reads ~170 bytecode bytes per
-    * plane in the generate-consume method: 32 planes → 5,716 B
-    * (JIT-safe, 0.42 s/200k ≈ broadcast), 48 planes → 9,130 B — past
-    * HotSpot's ~8,000-byte JIT limit and ~90× slower interpreted
-    * (extrapolated ~35 s/200k); every committed production shape
-    * (x256 16×8, x257 8×16 = 128 planes, 26 KB methods, ~80 s/200k)
-    * was ALREADY past the cliff — round 18's "0.34 s/200k, hot
-    * method small" note does not reproduce under a clean
-    * materialized-input harness (the 0.34 s reading was dominated by
-    * an inline-generator fixture plan, see PLANS.md round 19). Past
-    * this bound [[stackedEmbeddingBandKeys]] routes AUTOMATICALLY to
-    * [[broadcastBandKeys]] (one broadcast plane matrix, bitwise the
-    * same bucket bits — spec-pinned, 0.15–0.31 s/200k at EVERY
-    * ladder shape), so recall tuning can raise nBands without a
-    * silent interpreted cliff OR a hand-written mapPartitions. */
-  val MaxLiteralPlanes = 32
-
-  /** MAP-ONLY nearest-centroid argmax: `greatest` over one
-    * `struct(round-6 cosine, -cent_id)` per centroid literal — max sim
-    * with the SMALLEST cent_id on ties, i.e. exactly the
-    * `(sim DESC, cent_id ASC)` window top-1, with NO n×k rows ever
-    * reaching an exchange (the round-16 verdict's one `weak`: the old
-    * `Window.partitionBy(id)` over the n×k crossJoin shuffled k× the
-    * corpus; this computes the argmax where each vector sits, in one
-    * codegen'd expression). Each centroid is a single `typedLit` array
-    * literal — one plan node, no CollapseProject blowup surface. k is
-    * bounded by [[MaxLiteralCentroids]] (refused loudly past it — see
-    * that doc for the broadcast-matrix alternative at real IVF scale).
-    */
-  private def bestCentroid(e: Column, cents: Seq[(Long, Seq[Double])]): Column = {
-    require(cents.nonEmpty, "nearest-centroid argmax needs >= 1 centroid")
-    require(cents.size <= MaxLiteralCentroids,
-      s"literal-argmax over ${cents.size} centroids is past the " +
-        s"JIT-safe bytecode bound ($MaxLiteralCentroids — see " +
-        s"MaxLiteralCentroids: k=32 already generates an un-JIT-able " +
-        s"8.6 KB method that runs 50x slow interpreted). Callers reach " +
-        s"the literal form only through nearestCell/withNearestCellSim, " +
-        s"which route to the broadcast-matrix twins above this k — use " +
-        s"those, not bestCentroid directly.")
-    val scored = cents.map { case (cid, ce) =>
-      struct(round(cosine(e, typedLit(ce)), 6).as("sim"),
-        lit(-cid).as("_nc"))
-    }
-    if (scored.size == 1) scored.head else greatest(scored: _*)
-  }
-
-  /** Nearest-centroid cell id, auto-routed by k: the codegen'd literal
-    * argmax up to [[MaxLiteralCentroids]], the broadcast-matrix UDF
-    * ([[broadcastNearestCell]]) past it — so every cell-only consumer
-    * (assignment, the Lloyd loop, PQ codes, IVF probes) scales to
-    * thousands of cells without touching the plan shape (still
-    * map-only: no join, no window, no exchange). The two forms are
-    * bitwise-identical (spec-pinned): same single-pass cosine
-    * accumulation order, same HALF_UP round-6, same NaN-greatest /
-    * min-cent_id tie ordering. */
-  /** The literal (typedLit + greatest) form alone — ONLY JIT-safe up
-    * to [[MaxLiteralCentroids]]; exposed for the parity spec. The
-    * `isNotNull` guard pins the null-embedding contract to the
-    * broadcast twin's (null in → null cell): bare
-    * `greatest(struct(null_sim, -cid))` would otherwise resolve the
-    * all-null-sim tie to the smallest cent_id — a routing-dependent
-    * result, which the parity spec forbids (round-18 ADVICE). */
-  private[graft] def literalNearestCell(e: Column,
-      cents: Seq[(Long, Seq[Double])]): Column =
-    when(e.isNotNull, -bestCentroid(e, cents).getField("_nc"))
-
-  private[graft] def nearestCell(e: Column,
-      cents: Seq[(Long, Seq[Double])]): Column =
-    if (cents.size <= MaxLiteralCentroids) literalNearestCell(e, cents)
-    else broadcastNearestCell(e, cents)
-
-  /** The past-the-literal-ceiling assignment form: centroids ride ONE
-    * Spark broadcast (a copy per executor, not a copy inlined per
-    * expression tree) and the argmax runs in a deterministic Scala UDF
-    * that replicates the literal path's arithmetic EXACTLY —
-    * [[VectorExpressions.CosineSim]]'s single-pass fold, Catalyst
-    * Round's HALF_UP-on-BigDecimal.valueOf with NaN/Infinity passed
-    * through, and `greatest(struct(sim, -cent_id))`'s NaN-is-largest /
-    * smallest-cent_id-on-ties ordering (java.lang.Double.compare has
-    * the same NaN semantics). Null embedding → null cell. Not
-    * codegen'd (a UDF never is), but the per-row work is O(k·d) float
-    * math — the same work the literal expression does — and the plan
-    * stays a bare projection. */
-  /** The ONE argmax arithmetic body both broadcast twins call
-    * (round-18 verdict Next #4: these ~30 bitwise-critical lines were
-    * duplicated across the two UDFs, and a future fix applied to one
-    * and not the other would silently desync the literal-parity the
-    * CodegenCeilingSpec pins). Replicates the literal expression
-    * EXACTLY: [[VectorExpressions.CosineSim]]'s single-pass
-    * min-length fold order, Catalyst Round(…, 6) semantics
-    * (NaN/Infinity unrounded, else BigDecimal.valueOf + HALF_UP), and
-    * `greatest(struct(sim, -cent_id))`'s NaN-is-largest /
-    * smallest-cent_id-on-ties ordering (java.lang.Double.compare has
-    * the same NaN total order). Returns (best cent_id, its round-6
-    * sim). */
+  /** The nearest-centroid argmax [[nearestCell]] and
+    * [[withNearestCellSim]] run per row: max round-6 cosine with the
+    * SMALLEST cent_id on ties, i.e. exactly the `(sim DESC, cent_id
+    * ASC)` window top-1. The cosine is [[VectorExpressions.CosineSim]]'s
+    * single-pass fold over the common prefix, the rounding Catalyst
+    * Round(…, 6)'s (NaN/Infinity unrounded, else BigDecimal.valueOf +
+    * HALF_UP), and the order java.lang.Double.compare's, in which NaN
+    * is largest (an all-zero vector's NaN sims all tie, so the smallest
+    * cent_id wins). Returns (best cent_id, its round-6 sim). */
   private[graft] def bestCellKernel(arr: Array[Double], cids: Array[Long],
       m: Array[Array[Double]]): (Long, Double) = {
     var bestSim = 0.0
@@ -252,13 +142,23 @@ object Similarity {
     (bestCid, bestSim)
   }
 
-  private[graft] def broadcastNearestCell(e: Column,
-      cents: Seq[(Long, Seq[Double])]): Column = {
+  /** Centroids as [[bestCellKernel]] reads them, shipped once per
+    * executor as one Spark broadcast instead of being inlined into the
+    * plan, so the plan and its generated code stay the same at any k. */
+  private def broadcastCentroids(cents: Seq[(Long, Seq[Double])]) = {
     require(cents.nonEmpty, "nearest-centroid argmax needs >= 1 centroid")
-    val ids = cents.map(_._1).toArray
-    val mat = cents.map(_._2.toArray).toArray
-    val b = org.apache.spark.sql.SparkSession.active
-      .sparkContext.broadcast((ids, mat))
+    org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(
+      (cents.map(_._1).toArray, cents.map(_._2.toArray).toArray))
+  }
+
+  /** MAP-ONLY nearest-centroid cell id: one deterministic Scala UDF call
+    * per row runs [[bestCellKernel]] over the broadcast centroids, so
+    * every cell-only consumer (assignment, the Lloyd loop, PQ codes, IVF
+    * probes) is a bare projection: no join, no window, no exchange, no
+    * n×k rows anywhere. Null embedding → null cell. */
+  private[graft] def nearestCell(e: Column,
+      cents: Seq[(Long, Seq[Double])]): Column = {
+    val b = broadcastCentroids(cents)
     val f = udf((v: Seq[Double]) => {
       if (v == null) null.asInstanceOf[java.lang.Long]
       else {
@@ -280,48 +180,30 @@ object Similarity {
     else vecs.withColumn("cell", nearestCell(e, cents))
 
   /** `vecs` + `cell` AND `sim` (round-6 cosine to the OWN centroid) in
-    * one map-only pass; the argmax struct is staged as a
-    * multiply-referenced alias so CollapseProject keeps it computed
-    * once (the quantizeInt8 staging lesson). Routes to the broadcast
-    * twin past [[MaxLiteralCentroids]] like [[nearestCell]]. */
+    * one map-only pass: one UDF call per row returns both from
+    * [[bestCellKernel]] (null embedding → null cell and sim). The struct
+    * is staged as a multiply-referenced alias so CollapseProject keeps
+    * it computed once (the quantizeInt8 staging lesson). */
   private[graft] def withNearestCellSim(vecs: DataFrame, e: Column,
       cents: Seq[(Long, Seq[Double])]): DataFrame =
     if (cents.isEmpty)
       vecs.withColumn("cell", lit(null).cast("long"))
         .withColumn("sim", lit(null).cast("double")).limit(0)
-    else if (cents.size <= MaxLiteralCentroids)
-      // isNotNull guard: null embedding → null struct → null cell AND
-      // null sim, matching the broadcast twin (round-18 ADVICE — the
-      // bare greatest would yield cell = smallest cent_id, sim null)
-      vecs.withColumn("_b", when(e.isNotNull, bestCentroid(e, cents)))
-        .withColumn("cell", -col("_b").getField("_nc"))
-        .withColumn("sim", col("_b").getField("sim"))
+    else {
+      val b = broadcastCentroids(cents)
+      val f = udf((v: Seq[Double]) => {
+        if (v == null) null.asInstanceOf[(java.lang.Long, java.lang.Double)]
+        else {
+          val (cids, m) = b.value
+          val (cell, sim) = bestCellKernel(v.toArray, cids, m)
+          (java.lang.Long.valueOf(cell), java.lang.Double.valueOf(sim))
+        }
+      })
+      vecs.withColumn("_b", f(e))
+        .withColumn("cell", col("_b").getField("_1"))
+        .withColumn("sim", col("_b").getField("_2"))
         .drop("_b")
-    else vecs.withColumn("_b", broadcastNearestCellSim(e, cents))
-      .withColumn("cell", col("_b").getField("_1"))
-      .withColumn("sim", col("_b").getField("_2"))
-      .drop("_b")
-
-  /** [[broadcastNearestCell]]'s cell+sim twin: one UDF pass returning
-    * (cell, round-6 own-centroid sim) with the identical arithmetic —
-    * the past-the-ceiling path for the silhouette/diversity family. */
-  private[graft] def broadcastNearestCellSim(e: Column,
-      cents: Seq[(Long, Seq[Double])]): Column = {
-    require(cents.nonEmpty, "nearest-centroid argmax needs >= 1 centroid")
-    val ids = cents.map(_._1).toArray
-    val mat = cents.map(_._2.toArray).toArray
-    val b = org.apache.spark.sql.SparkSession.active
-      .sparkContext.broadcast((ids, mat))
-    val f = udf((v: Seq[Double]) => {
-      if (v == null) null.asInstanceOf[(java.lang.Long, java.lang.Double)]
-      else {
-        val (cids, m) = b.value
-        val (cell, sim) = bestCellKernel(v.toArray, cids, m)
-        (java.lang.Long.valueOf(cell), java.lang.Double.valueOf(sim))
-      }
-    })
-    f(e)
-  }
+    }
 
   /** IVF coarse quantizer: centroids are the first `nCells` vectors by id
     * — a deterministic, oracle-reproducible stand-in for trained k-means
@@ -329,7 +211,7 @@ object Similarity {
     * identical). Returns (idCol, cell).
     *
     * Scale: centroids collect to the driver (O(k·d)); assignment is a
-    * map-only argmax expression — zero shuffle (see [[bestCentroid]]).
+    * map-only argmax — zero shuffle (see [[nearestCell]]).
     */
   def ivfAssign(df: DataFrame, nCells: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
@@ -342,7 +224,7 @@ object Similarity {
   /** Assign every vector to its nearest centroid (by cosine, deterministic
     * tie on cent_id — the `(sim DESC, cent_id ASC)` contract). Centroids
     * collect to the driver (O(k·d), the MLlib pattern) and the argmax is
-    * ONE map-only codegen'd expression per row — no crossJoin, no
+    * ONE map-only [[nearestCell]] call per row — no crossJoin, no
     * window, no exchange anywhere in the assignment subplan (round-16
     * verdict Next #1; PlanSpec pins the shape). */
   def assignToCentroids(df: DataFrame, cents: DataFrame,
@@ -465,10 +347,11 @@ object Similarity {
     * per-vector score is rounded to 12 and DECIMAL-summed (x103), the
     * mean one division. Scale: the per-vector top-2 is MAP-ONLY — the
     * k centroid sims are staged once as an array (a multiply-referenced
-    * alias CollapseProject keeps), the argmax is the [[bestCentroid]]
-    * greatest-of-structs, and the runner-up is `greatest` over the
-    * OTHER centroids' slots (null = own slot, skipped) — so nothing n×k
-    * ever reaches an exchange; the only shuffle is the per-cell mean.
+    * alias CollapseProject keeps), the argmax is `greatest` over one
+    * `struct(sim, -cent_id)` per slot, and the runner-up is `greatest`
+    * over the OTHER centroids' slots (null = own slot, skipped) — so
+    * nothing n×k ever reaches an exchange; the only shuffle is the
+    * per-cell mean.
     */
   def silhouette(df: DataFrame, nCells: Int, iters: Int,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
@@ -1076,57 +959,28 @@ object Similarity {
     * colliding in ANY band becomes a candidate — the banded-OR recall
     * amplification of minhash LSH, over vectors (Charikar 2002 signs in
     * Broder-style bands). Map-side projection + explode; one row per
-    * (vector, band). Auto-routed by total plane count: inlined plane
-    * literals up to [[MaxLiteralPlanes]], the broadcast plane matrix
-    * ([[broadcastBandKeys]], bitwise-identical rows) past it. */
+    * (vector, band): the [[broadcastBandKeys]] array, posexploded. */
   private[graft] def stackedEmbeddingBandKeys(df: DataFrame, nBands: Int,
       planesPerBand: Int, dim: Int, idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
     require(nBands >= 1 && planesPerBand >= 1 && planesPerBand <= 62,
       s"need nBands >= 1 and 1 <= planesPerBand <= 62, " +
         s"got $nBands x $planesPerBand")
-    val b = df.select(col(idCol).as("vec_id"),
-      col(embCol).cast("array<double>").as("e"))
-    if (nBands * planesPerBand <= MaxLiteralPlanes)
-      literalStackedBandKeys(b, nBands, planesPerBand, dim)
-    else
-      b.select(col("vec_id"),
-        posexplode(broadcastBandKeys(col("e"), nBands, planesPerBand, dim)))
-        .select(col("vec_id"), col("pos").as("bid"), col("col").as("bk"))
+    df.select(col(idCol).as("vec_id"),
+        posexplode(broadcastBandKeys(col(embCol).cast("array<double>"),
+          nBands, planesPerBand, dim)))
+      .select(col("vec_id"), col("pos").as("bid"), col("col").as("bk"))
   }
 
-  /** The literal (inlined plane arrays) form alone — ONLY JIT-safe up
-    * to [[MaxLiteralPlanes]] total planes; exposed for the parity spec
-    * and the ladder harness. Expects a pre-projected `(vec_id, e)`
-    * frame. */
-  private[graft] def literalStackedBandKeys(b: DataFrame, nBands: Int,
-      planesPerBand: Int, dim: Int): DataFrame = {
-    val signs = planeSigns(nBands * planesPerBand, dim)
-    val bandStructs = (0 until nBands).map { band =>
-      val bucket = (0 until planesPerBand).map { i =>
-        val plane = signs(band * planesPerBand + i)
-        val planeCol = array(plane.toIndexedSeq.map(v => lit(v.toDouble)): _*)
-        when(dot(col("e"), planeCol) > 0, lit(1L << i)).otherwise(lit(0L))
-      }.reduce(_ + _)
-      struct(lit(band).as("bid"), bucket.as("bk"))
-    }
-    b.select(col("vec_id"),
-        explode(array(bandStructs: _*)).as("band"))
-      .select(col("vec_id"), col("band.bid").as("bid"),
-        col("band.bk").as("bk"))
-  }
-
-  /** The past-the-ceiling band-key form: ALL nBands·planesPerBand
-    * hyperplanes ride ONE Spark broadcast (a copy per executor, not a
-    * literal array per plan node) and a deterministic Scala UDF emits
-    * the nBands bucket keys per vector, replicating the literal path's
-    * arithmetic EXACTLY: [[VectorExpressions.DotProduct]]'s sequential
-    * min-length fold per plane, `> 0` sign test, bit i set via the same
-    * `1L << i` addition, and the literal `when(...).otherwise(0)` null
-    * contract (null embedding → every band key 0, because a null dot
-    * comparison falls to the otherwise branch). Returns an
-    * `array<long>` of length nBands — position = band id, so
-    * `posexplode` reproduces the literal output rows bit-for-bit. */
+  /** The sign-LSH band-key kernel: ALL nBands·planesPerBand hyperplanes
+    * ride ONE Spark broadcast (a copy per executor, not a literal array
+    * per plan node, so the plan and its generated code stay the same at
+    * any plane count) and a deterministic Scala UDF emits the nBands
+    * bucket keys per vector: per plane, [[VectorExpressions.DotProduct]]'s
+    * sequential fold over the common prefix and a `> 0` sign test
+    * setting bit i (`1L << i`) of its band's key. Null embedding → every
+    * band key 0. Returns an `array<long>` of length nBands — position =
+    * band id. */
   private[graft] def broadcastBandKeys(e: Column, nBands: Int,
       planesPerBand: Int, dim: Int): Column = {
     val signs = planeSigns(nBands * planesPerBand, dim)

@@ -70,10 +70,9 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     require(nMerges >= 1, s"need nMerges >= 1, got $nMerges")
-    var words = wordTable(docs, textCol)
     // each iteration re-reads the evolving word table twice (argmax +
     // apply) — checkpoint-free persist keeps the chain linear
-    words.persist()
+    var words = Checkpoints.scratch(wordTable(docs, textCol))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var done = false
     for (step <- 1 to nMerges if !done) {
@@ -85,9 +84,8 @@ object Bpe {
         val row = top(0)
         val (l, r) = (row.getString(0), row.getString(1))
         merges += ((step, l, r, row.getLong(2)))
-        val next = words.select(mergePair(col("seq"), l, r).as("seq"),
-          col("cnt"))
-        val applied = next.persist()
+        val applied = Checkpoints.scratch(words.select(
+          mergePair(col("seq"), l, r).as("seq"), col("cnt")))
         applied.count() // materialize before unpersisting the parent
         words.unpersist()
         words = applied

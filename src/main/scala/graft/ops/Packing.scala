@@ -328,14 +328,15 @@ object Packing {
   def writeTokenShards(docs: DataFrame, outDir: String, tokensPerShard: Long,
       textCol: String = "text", idCol: String = "doc_id"): (Long, DataFrame) = {
     val spark = docs.sparkSession
-    val assign = tokenShardAssignment(docs, tokensPerShard, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assign = Checkpoints.scratch(
+      tokenShardAssignment(docs, tokensPerShard, textCol, idCol))
     try {
       writePreSharded(docs.join(assign.select(col(idCol), col("shard")), idCol),
         outDir, shardCol = "shard", orderCol = idCol)
       // after the shard write: writePreSharded's static overwrite truncates
       // outDir, which would delete an assignment written before it
-      assign.write.mode("overwrite").parquet(s"$outDir/_assignment")
+      assign.drop(Checkpoints.ScratchCol)
+        .write.mode("overwrite").parquet(s"$outDir/_assignment")
     } finally assign.unpersist()
     val ids = shardIds(spark, outDir)
     (if (ids.isEmpty) 0L else ids.max + 1,

@@ -28,8 +28,7 @@ object Selection {
     // once (spilling to disk beyond memory) instead of re-scanning the
     // source per refinement round — the recompute-vs-cache tradeoff
     // documented for a fat source table; unpersisted before returning
-    val vals = valsIn
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vals = Checkpoints.scratch(valsIn)
     try {
       val head = vals.agg(sum(col("_w")).as("n"), min(col("_v")).as("lo"),
         max(col("_v")).as("hi")).collect()(0)

@@ -1,114 +1,85 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Pins the literal-inlining ceiling of the driver-side centroid /
-  * hyperplane families (round-17 verdict Next #3 / What's wrong #2) —
-  * REDEFINED in round 18 by the measured JIT cliff, which bites far
-  * below Janino's 64 KB compile limit: HotSpot refuses to JIT methods
-  * over ~8,000 bytecode bytes, so a literal argmax at k = 32..128
-  * COMPILES fine and then runs interpreted (measured 35–75 s vs
-  * 0.4–0.8 s broadcast on a 200k-row corpus — PLANS.md round-18 A/B).
-  * nearestCell / withNearestCellSim therefore route to the
-  * broadcast-matrix twins past MaxLiteralCentroids = 16, and this spec
-  * pins three contracts:
-  *   1. the literal form at the bound is JIT-SAFE (method < 8,000 B),
-  *      and the cliff the bound protects against is real (k = 32
-  *      generates an un-JIT-able method);
-  *   2. literal and broadcast forms are BITWISE identical (cell AND
-  *      sim), so routing can never change a result;
-  *   3. past the bound everything still works map-only — assignment,
-  *      and the Lloyd loop training at k > bound.
+import graft.functions.Similarity
+
+/** Golden values for the driver-side vector families of `Similarity`:
+  * nearest-centroid argmax (`nearestCell`, `withNearestCellSim`) and
+  * sign-LSH band keys (`stackedEmbeddingBandKeys`, `lshBucket`). The
+  * literals were recorded from the plan-inlined literal forms these
+  * functions used up to 16 centroids and 32 planes (one `typedLit`
+  * centroid or plane array per expression), so the table pins the
+  * broadcast-matrix kernels that replaced them to those outputs bit for
+  * bit, output types included. The fixture holds a null embedding (null
+  * cell and sim, every band key 0), an embedding shorter than `dim`
+  * (the dot and cosine fold over the common prefix), an all-zero
+  * embedding (NaN sim, which orders largest, so the smallest cent_id
+  * wins) and, at k = 8 and 16, two identical centroids with a vector
+  * equal to them (the tie goes to the smaller cent_id).
+  *
+  * Each table is checked with whole-stage codegen on and with codegen
+  * off. The other tests pin the plan shape (map-only: no join, window
+  * or exchange) at 80 centroids and 48 planes, the k = 80 argmax
+  * against a driver replay, and the minhash hash-function cap.
   */
 class CodegenCeilingSpec extends SparkSuite {
-  import graft.functions.Similarity
+  import CodegenCeilingSpec._
 
-  private def vecs(n: Int, d: Int) = {
-    import spark.implicits._
+  private def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def check(actual: Seq[(String, String)]): Unit = {
+    assert(actual.map(_._1) == Golden.map(_._1), "golden case list drifted")
+    val diffs = actual.zip(Golden).collect {
+      case ((k, got), (_, want)) if got != want =>
+        s"$k:\n  got  $got\n  want $want"
+    }
+    assert(diffs.isEmpty, diffs.mkString("\n"))
+  }
+
+  private def vecs(n: Int, d: Int) =
     spark.range(n).select(col("id").as("vec_id"),
       transform(sequence(lit(1), lit(d)),
         i => (i * (col("id") + 1) % 97).cast("double") / 97.0)
         .as("embedding"))
-  }
 
   private def cents(k: Int, d: Int): Seq[(Long, Seq[Double])] =
     (0L until k).map(c =>
       c -> (0 until d).map(i => ((c * 31 + i * 7) % 101).toDouble / 101.0))
 
-  private def maxMethodSize(df: org.apache.spark.sql.DataFrame): Int = {
-    val plan = df.queryExecution.executedPlan
-    assert(plan.collectFirst {
-      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
-    }.nonEmpty, "projection left whole-stage codegen:\n" +
-      plan.toString.take(2000))
-    val stats = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
-    assert(stats.nonEmpty, "no codegen subtrees found")
-    stats.map(_._3.maxMethodCodeSize).max
-  }
-
-  test("literal argmax at the routing bound is JIT-safe (< 8000 bytecode " +
-      "bytes — the HotSpot limit, not Janino's 64KB)") {
-    // the cliff the bound protects against is committed evidence, not
-    // re-measured here (bestCentroid itself refuses k > bound, so the
-    // un-JIT-able shape is unreachable): at k=32/d=64 the generated
-    // method measured 8,641 B and ran 35 s interpreted on 200k rows vs
-    // 0.5 s broadcast (PLANS.md round-18 A/B). This test pins the SAFE
-    // side: if Spark's codegen ever grows the bound shape past 8000 B,
-    // MaxLiteralCentroids must come down.
-    val e = col("embedding").cast("array<double>")
-    val atBound = maxMethodSize(vecs(40, 64).select(col("vec_id"),
-      Similarity.literalNearestCell(e,
-        cents(Similarity.MaxLiteralCentroids, 64)).as("cell")))
-    assert(atBound > 0 && atBound < 8000,
-      s"literal argmax at k=${Similarity.MaxLiteralCentroids} generates " +
-        s"a $atBound-byte method — HotSpot stops JIT-compiling at " +
-        "~8000 and the routing bound must keep the literal form under " +
-        "it (lower MaxLiteralCentroids if codegen grew)")
-  }
-
-  test("broadcast-matrix argmax is BITWISE the literal argmax, cell AND " +
-      "sim, INCLUDING null embeddings (routing must never change a " +
-      "result)") {
-    val cs = cents(Similarity.MaxLiteralCentroids, 64)
-    val e = col("embedding").cast("array<double>")
-    // a null-embedding row rides along: both forms must agree there too
-    // (round-18 ADVICE — the bare literal greatest used to resolve the
-    // all-null-sim tie to the smallest cent_id while the UDF said null)
-    def corpus = vecs(300, 64).union(spark.range(1).select(
-      lit(9999L).as("vec_id"), lit(null).cast("array<double>").as("embedding")))
-    val both = corpus.select(col("vec_id"),
-      Similarity.literalNearestCell(e, cs).as("lit_cell"),
-      Similarity.broadcastNearestCell(e, cs).as("bc_cell"))
-    assert(both.filter(!(col("lit_cell") <=> col("bc_cell"))).count() == 0,
-      "cell assignments diverged between literal and broadcast forms")
-    assert(both.filter(col("vec_id") === 9999L)
-      .filter(col("lit_cell").isNull && col("bc_cell").isNull).count() == 1,
-      "null embedding must map to a NULL cell in BOTH forms")
-    // cell+sim twin: literal withNearestCellSim vs the broadcast UDF
-    val litSim = Similarity.withNearestCellSim(corpus, e, cs)
-      .select(col("vec_id"), col("cell"), col("sim"))
-    val bcSim = corpus.select(col("vec_id"),
-        Similarity.broadcastNearestCellSim(e, cs).as("_b"))
-      .select(col("vec_id"), col("_b._1").as("cell"), col("_b._2").as("sim"))
-    val joined = litSim.as("l").join(bcSim.as("b"), "vec_id")
-      .filter(!(col("l.cell") <=> col("b.cell")) ||
-        !(col("l.sim") <=> col("b.sim")))
-    assert(joined.count() == 0,
-      "cell+sim diverged between literal and broadcast forms")
-  }
-
-  test("past MaxLiteralCentroids, nearestCell routes to the broadcast " +
-      "matrix: still map-only, still the right argmax — straight " +
-      "through the old k=32..128 interpreted-cliff zone") {
-    val k = Similarity.MaxLiteralCentroids + 64 // k=80: inside the cliff
-    val cs = cents(k, 64)
-    val df = vecs(40, 64).select(col("vec_id"), Similarity.nearestCell(
-      col("embedding").cast("array<double>"), cs).as("cell"))
+  private def assertMapOnly(df: DataFrame): Unit = {
     val plan = df.queryExecution.executedPlan.toString
     for (bad <- Seq("Join", "Window", "Exchange"))
       assert(!plan.contains(bad),
-        s"broadcast assignment must stay map-only, found $bad:\n" +
-          plan.take(2000))
+        s"plan must stay map-only, found $bad:\n" + plan.take(2000))
+  }
+
+  test("golden values under whole-stage codegen") {
+    check(table(spark))
+  }
+
+  test("golden values with codegen off") {
+    withConfs("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      check(table(spark))
+    }
+  }
+
+  test("nearestCell at k = 80: map-only, driver-replay argmax") {
+    val cs = cents(80, 64)
+    val df = vecs(40, 64).select(col("vec_id"), Similarity.nearestCell(
+      col("embedding").cast("array<double>"), cs).as("cell"))
+    assertMapOnly(df)
     val got = df.orderBy("vec_id").limit(3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val vs = vecs(40, 64).orderBy("vec_id").limit(3).collect()
@@ -123,75 +94,20 @@ class CodegenCeilingSpec extends SparkSuite {
       }.max
       assert(got(id) == -best._2, s"vec $id: got ${got(id)}, want ${-best._2}")
     }
-    // the Lloyd loop inherits the routing: training past the literal
-    // ceiling must work end-to-end (one iteration, tiny corpus)
+    // the Lloyd loop trains through the same kernel (one iteration)
     val trained = Similarity.kmeansCentroids(vecs(40, 64),
-      nCells = Similarity.MaxLiteralCentroids + 8, iters = 1)
+      nCells = 24, iters = 1)
     assert(trained.count() == 24L) // init = first-nCells vectors
   }
 
-  test("literal-family census: every OTHER bounded literal family stays " +
-      "under the 8000-byte JIT budget at its own cap (lshBucket's 31 " +
-      "planes; minhash's 16 hash functions)") {
-    // lshBucket inlines up to 31 plane arrays into ONE Int-bucket
-    // expression — right at the measured plane cliff (32 planes =
-    // 5.7KB, 48 = 9.1KB), so the cap is safe ONLY while codegen stays
-    // ~170 B/plane; this reads the real size so growth can't silently
-    // re-open the cliff for the IVF/outlier bucket family
-    val atCap = maxMethodSize(vecs(40, 64).select(col("vec_id"),
-      graft.functions.Similarity.lshBucket(
-        col("embedding").cast("array<double>"), 31, 64).as("bucket")))
-    assert(atCap > 0 && atCap < 8000,
-      s"lshBucket at its 31-plane cap generates a $atCap-byte method " +
-        "— lower the cap or route to a broadcast matrix")
-    // minhash signatures: k is capped at MinhashA.size = 16 small
-    // (hm*A+B)%P min-aggregates — two orders of magnitude below the
-    // budget, pinned so a cap raise revisits this
-    assert(graft.ops.Dedup.MinhashA.size <= 16,
-      "raising the minhash hash-function cap re-opens the bytecode " +
-        "budget question — re-run the ladder for the aggregate family")
-  }
-
-  test("broadcast band keys are BITWISE the literal band keys, " +
-      "INCLUDING null embeddings (plane routing must never change a " +
-      "bucket)") {
-    def corpus = vecs(300, 64).select(col("vec_id"),
-        col("embedding").cast("array<double>").as("e"))
-      .union(spark.range(1).select(lit(9999L).as("vec_id"),
-        lit(null).cast("array<double>").as("e")))
-    val lit0 = Similarity.literalStackedBandKeys(corpus, 16, 8, 64)
-    val bc = corpus.select(col("vec_id"),
-        posexplode(Similarity.broadcastBandKeys(col("e"), 16, 8, 64)))
-      .select(col("vec_id"), col("pos").as("bid"), col("col").as("bk"))
-    assert(lit0.schema.map(f => (f.name, f.dataType)) ==
-      bc.schema.map(f => (f.name, f.dataType)),
-      s"schemas diverged: ${lit0.schema} vs ${bc.schema}")
-    val joined = lit0.as("l").join(bc.as("b"), Seq("vec_id", "bid"))
-      .filter(!(col("l.bk") <=> col("b.bk")))
-    assert(joined.count() == 0,
-      "band keys diverged between literal and broadcast forms")
-    // the literal null contract rides through: null embedding → one
-    // row per band with bucket 0 (when(null > 0, ...).otherwise(0)) —
-    // the broadcast UDF must reproduce it, not emit null/no rows
-    assert(bc.filter(col("vec_id") === 9999L && col("bk") === 0L)
-      .count() == 16)
-  }
-
-  test("past MaxLiteralPlanes, stackedEmbeddingBandKeys routes to the " +
-      "broadcast plane matrix: no refusal, still a map-only " +
-      "generate+project plan, right bucket bits") {
-    // smallest past-the-bound shape with the production r=16
-    val nb = Similarity.MaxLiteralPlanes / 16 + 1
+  test("stackedEmbeddingBandKeys at 3x16: map-only, right bucket bits") {
+    val nb = 3
     val df = Similarity.stackedEmbeddingBandKeys(vecs(20, 64),
       nBands = nb, planesPerBand = 16, dim = 64)
-    val plan = df.queryExecution.executedPlan.toString
-    for (bad <- Seq("Join", "Window", "Exchange"))
-      assert(!plan.contains(bad),
-        s"broadcast band keys must stay map-only, found $bad:\n" +
-          plan.take(2000))
+    assertMapOnly(df)
     assert(df.count() == 20L * nb)
-    // spot-check band 0 of vector 0 against a driver replay of the
-    // exact literal arithmetic (sequential dot, sign bit per plane)
+    // band 0 of vector 0 against a driver replay (sequential dot, one
+    // sign bit per plane)
     val signs = Similarity.planeSigns(nb * 16, 64)
     val emb = vecs(1, 64).collect().head.getSeq[Double](1)
     val want = (0 until 16).map { i =>
@@ -203,27 +119,102 @@ class CodegenCeilingSpec extends SparkSuite {
     assert(got == want, s"band 0 bucket: got $got, want $want")
   }
 
-  test("banded plane inlining at MaxLiteralPlanes stays JIT-safe: the " +
-      "bound shape's generated methods are under 8000 bytecode bytes " +
-      "(the measured plane ladder, PLANS.md round 19 — not asserted)") {
-    val r = 16
-    val nb = Similarity.MaxLiteralPlanes / r
-    val atBound = maxMethodSize(Similarity.literalStackedBandKeys(
-      vecs(40, 64).select(col("vec_id"),
-        col("embedding").cast("array<double>").as("e")), nb, r, 64))
-    assert(atBound > 0 && atBound < 8000,
-      s"literal band keys at ${nb}x$r generate a $atBound-byte method " +
-        "— HotSpot stops JIT-compiling at ~8000 and MaxLiteralPlanes " +
-        "must keep the literal form under it (lower the bound if " +
-        "codegen grew)")
-    // the committed production shapes (x256 16x8, x257 8x16 = 128
-    // planes) sit PAST the measured bound — they were generating 26 KB
-    // un-JIT-able methods all along (round-19 ladder) — so they must
-    // now route to the broadcast form, not the literal one
-    assert(16 * 8 > Similarity.MaxLiteralPlanes,
-      "production 128-plane shapes must be past the measured bound")
-    val df = Similarity.stackedEmbeddingBandKeys(vecs(40, 64),
-      nBands = 16, planesPerBand = 8, dim = 64)
-    assert(df.count() == 40L * 16)
+  test("minhash keeps at most 16 hash functions") {
+    // each signature is MinhashA.size small (hm*A+B)%P min-aggregates in
+    // one generated method; a larger cap has not been measured against
+    // HotSpot's ~8000-byte JIT limit
+    assert(graft.ops.Dedup.MinhashA.size <= 16,
+      "raising the minhash hash-function cap re-opens the bytecode " +
+        "budget question: measure the aggregate's method size first")
   }
+}
+
+object CodegenCeilingSpec {
+
+  val Dim = 16
+
+  private def mixed(seed: Long): Seq[Double] =
+    (0 until Dim).map(i => ((seed * 37 + i * 11) % 23 - 11) / 7.0)
+
+  /** k centroids with ids 10, 13, 16, …; from k = 8 on, the last one
+    * is a copy of the second (id 13), so a vector equal to it ties. */
+  def centroids(k: Int): Seq[(Long, Seq[Double])] = (0 until k).map { c =>
+    val src = if (k >= 8 && c == k - 1) 1 else c
+    (10L + 3 * c) ->
+      (0 until Dim).map(i => ((src * 31 + i * 7) % 101 - 50) / 50.0)
+  }
+
+  /** (vec_id, embedding): null, shorter than Dim, all zero, a copy of
+    * centroid 13, and eight mixed-sign vectors. */
+  def embeddings(spark: SparkSession): DataFrame = {
+    val es: Seq[Seq[Double]] = Seq(null,
+      Seq(0.5, -0.25, 1.0, 0.75, -1.0),
+      Seq.fill(Dim)(0.0),
+      centroids(8)(1)._2) ++ (4L to 11L).map(mixed)
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        es.zipWithIndex.map { case (e, i) => Row(i.toLong, e) }, 2),
+      StructType(Seq(StructField("vec_id", LongType, nullable = false),
+        StructField("embedding", ArrayType(DoubleType), nullable = true))))
+  }
+
+  def render(v: Any): String = v match {
+    case null => "null"
+    case d: Double => java.lang.Double.toString(d)
+    case xs: scala.collection.Seq[_] => xs.map(render).mkString("[", "|", "]")
+    case other => other.toString
+  }
+
+  /** One case: the output columns' types, then each vector's values in
+    * vec_id order (band keys as one list per vector, in band order). */
+  private def byVec(df: DataFrame): String = {
+    val types = df.schema.fields.tail.map(_.dataType.simpleString)
+    val perVec = df.collect().toSeq.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+      .map { case (_, rs) =>
+        if (rs.size == 1) rs.head.toSeq.tail.map(render).mkString(",")
+        else render(rs.sortBy(_.getInt(1)).map(_.get(2)))
+      }
+    types.mkString("<", ",", "> ") + perVec.mkString(" ")
+  }
+
+  /** (function and shape, rendered output) for every golden case. */
+  def table(spark: SparkSession): Seq[(String, String)] = {
+    val vecs = embeddings(spark)
+    val e = col("embedding")
+    Seq(1, 8, 16).flatMap { k =>
+      Seq(s"nearestCell k=$k" -> byVec(vecs.select(col("vec_id"),
+          Similarity.nearestCell(e, centroids(k)).as("cell"))),
+        s"withNearestCellSim k=$k" -> byVec(Similarity
+          .withNearestCellSim(vecs, e, centroids(k))
+          .select("vec_id", "cell", "sim")))
+    } ++ Seq((4, 8), (2, 16)).map { case (nb, r) =>
+      s"stackedEmbeddingBandKeys ${nb}x$r" -> byVec(
+        Similarity.stackedEmbeddingBandKeys(vecs, nb, r, Dim))
+    } ++ Seq(8, 31).map { n =>
+      s"lshBucket $n" -> byVec(vecs.select(col("vec_id"),
+        Similarity.lshBucket(e, n, Dim).as("bucket")))
+    }
+  }
+
+  val Golden: Seq[(String, String)] = Seq(
+    "nearestCell k=1" ->
+      "<bigint> null 10 10 10 10 10 10 10 10 10 10 10",
+    "withNearestCellSim k=1" ->
+      "<bigint,double> null,null 10,-0.353211 10,NaN 10,-0.225357 10,-0.37173 10,0.348279 10,0.167656 10,0.065663 10,-0.160901 10,-0.376608 10,0.472154 10,0.064967",
+    "nearestCell k=8" ->
+      "<bigint> null 28 10 13 16 10 28 16 25 16 10 28",
+    "withNearestCellSim k=8" ->
+      "<bigint,double> null,null 28,0.377525 10,NaN 13,1.0 16,0.247371 10,0.348279 28,0.367933 16,0.268253 25,0.231767 16,0.245611 10,0.472154 28,0.414293",
+    "nearestCell k=16" ->
+      "<bigint> null 37 10 13 34 31 28 16 43 16 10 28",
+    "withNearestCellSim k=16" ->
+      "<bigint,double> null,null 37,0.844746 10,NaN 13,1.0 34,0.267367 31,0.385778 28,0.367933 16,0.268253 43,0.239127 16,0.245611 10,0.472154 28,0.414293",
+    "stackedEmbeddingBandKeys 4x8" ->
+      "<int,bigint> [0|0|0|0] [150|34|24|72] [0|0|0|0] [190|206|198|91] [228|122|12|249] [95|151|231|138] [193|34|60|164] [170|94|7|23] [79|133|99|82] [228|122|12|249] [23|197|195|202] [227|179|56|55]",
+    "stackedEmbeddingBandKeys 2x16" ->
+      "<int,bigint> [0|0] [8854|18456] [0|0] [52926|23494] [31460|63756] [38751|35559] [8897|42044] [24234|5895] [34127|21091] [31460|63756] [50455|51907] [46051|14136]",
+    "lshBucket 8" ->
+      "<int> 0 150 0 190 228 95 193 170 79 228 23 227",
+    "lshBucket 31" ->
+      "<int> 0 1209541270 0 1539755710 2030861028 182949727 607920833 386358954 1382253903 2030861028 1254343959 926462947")
 }

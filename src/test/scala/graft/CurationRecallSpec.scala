@@ -150,6 +150,37 @@ class CurationRecallSpec extends SparkSuite {
     } finally { a.unpersist(); b.unpersist() }
   }
 
+  /** Runs `body` while the caller holds its own cache of `mine`, a frame
+    * equal to one that `body` caches as scratch state, and asserts that
+    * the caller's cache survives. */
+  private def keepsCallersCache(mine: org.apache.spark.sql.DataFrame)(
+      body: => Unit): Unit = {
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    mine.persist(level).count()
+    try {
+      body
+      assert(mine.storageLevel === level,
+        "the caller's cached frame was unpersisted by the callee")
+    } finally mine.unpersist()
+  }
+
+  private val scratchDocs = Seq("a b c d e", "f g", "h i j k l m n", "a b")
+
+  test("writeTokenShards leaves a caller's cached assignment frame cached") {
+    val docs = frame("doc_id" -> Seq(1L, 2L, 3L, 4L), "text" -> scratchDocs)
+    val out = java.nio.file.Files.createTempDirectory("shards").toString
+    keepsCallersCache(graft.ops.Packing.tokenShardAssignment(docs, 4)) {
+      graft.ops.Packing.writeTokenShards(docs, out, 4)
+    }
+  }
+
+  test("learnMerges leaves a caller's cached word table cached") {
+    val docs = frame("text" -> scratchDocs)
+    keepsCallersCache(graft.ops.Bpe.wordTable(docs)) {
+      graft.ops.Bpe.learnMerges(docs, 2)
+    }
+  }
+
   test("concurrent append probe: x61 run from 8 threads at once agrees " +
       "with its solo result (appendCurated's scratch persist)") {
     concurrentProbe("x61_corpus_append")

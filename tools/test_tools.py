@@ -9,14 +9,17 @@ Pins the round-17 verdict Next #1 contract:
     divergence recurs in two consecutive rounds, and passes on a
     first occurrence;
 and the bench_regress.py retirement contract (Next #8): a query named
-in the candidate's `excluded` list is RETIRED, not MISSING; and the
+in the candidate's `excluded` list is RETIRED, not MISSING; the
 spans_report.py per-query job table and per-query job timeline of a
-traced perfbench run.
+traced perfbench run; and that every `runMain graft.<Name>` in README.md
+and tools/*.sh names an object with a `def main` under src/main/scala.
 
 No Spark, no sbt — pure JSON fixtures through the real scripts.
 """
+import glob
 import json
 import os
+import re
 import subprocess
 import sys
 import tempfile
@@ -181,6 +184,54 @@ def test_spans_report(tmp):
     assert r.returncode == 1, r.stdout + r.stderr
 
 
+def stale_run_mains(root):
+    """`runMain graft.<Name>` references in README.md and tools/*.sh with
+    no `object <Name>` holding a `def main` under src/main/scala, as
+    "file:line: graft.<Name>"."""
+    mains = set()
+    for d, _, files in os.walk(os.path.join(root, "src", "main", "scala")):
+        for name in files:
+            if not name.endswith(".scala"):
+                continue
+            with open(os.path.join(d, name), encoding="utf-8") as f:
+                text = f.read()
+            for m in re.finditer(r"^object (\w+)", text, re.M):
+                # a top-level object's body ends at the first column-0 "}"
+                end = text.find("\n}", m.end())
+                if "def main(" in text[m.end():end if end >= 0 else None]:
+                    mains.add(m.group(1))
+    stale = []
+    docs = [os.path.join(root, "README.md")] + sorted(
+        glob.glob(os.path.join(root, "tools", "*.sh")))
+    for path in docs:
+        with open(path, encoding="utf-8") as f:
+            for n, line in enumerate(f, 1):
+                for name in re.findall(r"runMain graft\.(\w+)", line):
+                    if name not in mains:
+                        stale.append(
+                            f"{os.path.relpath(path, root)}:{n}: graft.{name}")
+    return stale
+
+
+def test_run_main_targets(tmp):
+    stale = stale_run_mains(os.path.dirname(HERE))
+    assert stale == [], stale
+    # fixture tree: one main, one object without one, one missing object
+    src = os.path.join(tmp, "mains", "src", "main", "scala", "graft")
+    os.makedirs(src)
+    os.makedirs(os.path.join(tmp, "mains", "tools"))
+    with open(os.path.join(src, "A.scala"), "w") as f:
+        f.write("package graft\n\nobject A {\n  def main(args: Array[String]): "
+                "Unit = ()\n}\n\nobject B {\n  def run(): Unit = ()\n}\n")
+    with open(os.path.join(tmp, "mains", "README.md"), "w") as f:
+        f.write('sbt "runMain graft.A"\nsbt "runMain graft.B"\n'
+                'sbt "runMain graft.Gone x"\n')
+    with open(os.path.join(tmp, "mains", "tools", "t.sh"), "w") as f:
+        f.write('sbt -batch "runMain graft.A"\n')
+    assert stale_run_mains(os.path.join(tmp, "mains")) == [
+        "README.md:2: graft.B", "README.md:3: graft.Gone"]
+
+
 def main():
     with tempfile.TemporaryDirectory() as tmp:
         test_regress_retired_vs_missing(tmp)
@@ -188,6 +239,7 @@ def main():
         test_reprobe_leak_gate(tmp)
         test_oracle_ratio_report(tmp)
         test_spans_report(tmp)
+        test_run_main_targets(tmp)
     print("tools self-test: OK")
 
 
