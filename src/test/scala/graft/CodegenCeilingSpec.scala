@@ -20,8 +20,8 @@ import graft.functions.Similarity
   * wins) and, at k = 8 and 16, two identical centroids with a vector
   * equal to them (the tie goes to the smaller cent_id).
   *
-  * Each table is checked with whole-stage codegen on and with codegen
-  * off. The other tests pin the plan shape (map-only: no join, window
+  * The argmax cases and the band-key cases are one test each, and each
+  * is checked with whole-stage codegen on and with codegen off. The other tests pin the plan shape (map-only: no join, window
   * or exchange) at 80 centroids and 48 planes, the k = 80 argmax
   * against a driver replay, and the minhash hash-function cap.
   */
@@ -38,9 +38,23 @@ class CodegenCeilingSpec extends SparkSuite {
     }
   }
 
-  private def check(actual: Seq[(String, String)]): Unit = {
-    assert(actual.map(_._1) == Golden.map(_._1), "golden case list drifted")
-    val diffs = actual.zip(Golden).collect {
+  /** The golden cases whose name starts with one of `families`, with
+    * whole-stage codegen on and then off. */
+  private def check(families: String*): Unit = {
+    def mine(name: String) = families.exists(f => name.startsWith(f + " "))
+    val want = Golden.filter(g => mine(g._1))
+    assert(want.nonEmpty, s"no golden cases for ${families.mkString(", ")}")
+    compare(table(spark, mine), want)
+    withConfs("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      compare(table(spark, mine), want)
+    }
+  }
+
+  private def compare(actual: Seq[(String, String)],
+      golden: Seq[(String, String)]): Unit = {
+    assert(actual.map(_._1) == golden.map(_._1), "golden case list drifted")
+    val diffs = actual.zip(golden).collect {
       case ((k, got), (_, want)) if got != want =>
         s"$k:\n  got  $got\n  want $want"
     }
@@ -64,15 +78,16 @@ class CodegenCeilingSpec extends SparkSuite {
         s"plan must stay map-only, found $bad:\n" + plan.take(2000))
   }
 
-  test("golden values under whole-stage codegen") {
-    check(table(spark))
+  test("broadcast-matrix argmax is BITWISE the literal argmax, cell AND " +
+      "sim, INCLUDING null embeddings (routing must never change a " +
+      "result)") {
+    check("nearestCell", "withNearestCellSim")
   }
 
-  test("golden values with codegen off") {
-    withConfs("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
-      check(table(spark))
-    }
+  test("broadcast band keys are BITWISE the literal band keys, " +
+      "INCLUDING null embeddings (plane routing must never change a " +
+      "bucket)") {
+    check("stackedEmbeddingBandKeys", "lshBucket")
   }
 
   test("nearestCell at k = 80: map-only, driver-replay argmax") {
@@ -177,23 +192,27 @@ object CodegenCeilingSpec {
     types.mkString("<", ",", "> ") + perVec.mkString(" ")
   }
 
-  /** (function and shape, rendered output) for every golden case. */
-  def table(spark: SparkSession): Seq[(String, String)] = {
+  /** (function and shape, rendered output) for each golden case whose
+    * name `keep` accepts; the others are not run. */
+  def table(spark: SparkSession,
+      keep: String => Boolean = _ => true): Seq[(String, String)] = {
     val vecs = embeddings(spark)
     val e = col("embedding")
-    Seq(1, 8, 16).flatMap { k =>
-      Seq(s"nearestCell k=$k" -> byVec(vecs.select(col("vec_id"),
+    val cases: Seq[(String, () => DataFrame)] = Seq(1, 8, 16).flatMap { k =>
+      Seq[(String, () => DataFrame)](
+        s"nearestCell k=$k" -> (() => vecs.select(col("vec_id"),
           Similarity.nearestCell(e, centroids(k)).as("cell"))),
-        s"withNearestCellSim k=$k" -> byVec(Similarity
+        s"withNearestCellSim k=$k" -> (() => Similarity
           .withNearestCellSim(vecs, e, centroids(k))
           .select("vec_id", "cell", "sim")))
     } ++ Seq((4, 8), (2, 16)).map { case (nb, r) =>
-      s"stackedEmbeddingBandKeys ${nb}x$r" -> byVec(
+      s"stackedEmbeddingBandKeys ${nb}x$r" -> (() =>
         Similarity.stackedEmbeddingBandKeys(vecs, nb, r, Dim))
     } ++ Seq(8, 31).map { n =>
-      s"lshBucket $n" -> byVec(vecs.select(col("vec_id"),
+      s"lshBucket $n" -> (() => vecs.select(col("vec_id"),
         Similarity.lshBucket(e, n, Dim).as("bucket")))
     }
+    cases.collect { case (name, df) if keep(name) => name -> byVec(df()) }
   }
 
   val Golden: Seq[(String, String)] = Seq(
