@@ -57,12 +57,12 @@ object X61Prof {
       }
       if (rep == 2 && sys.env.contains("X61_EXPLAIN")) {
         println("[x61] ===== vsCorpus lazy plan =====")
-        Dedup.verifiedNearDupRejectStacked(exact, bandState,
+        Dedup.verifiedNearDupReject(exact, bandState,
           bands = 8, rowsPerBand = 2, minJaccard = 0.5).explain("formatted")
       }
-      val vsCorpus = t("vsCorpus (stacked reject)") {
+      val vsCorpus = t("vsCorpus (verified reject)") {
         Checkpoints.materialize(
-          Dedup.verifiedNearDupRejectStacked(exact, bandState,
+          Dedup.verifiedNearDupReject(exact, bandState,
             bands = 8, rowsPerBand = 2, minJaccard = 0.5))
       }
       val nearDrop = Dedup.clusterPairs(

@@ -52,10 +52,12 @@ object Checkpoints {
     * concurrent calls over equal inputs would share an entry and the first
     * caller's `unpersist` would clear it while the other still reads it.
     * A per-call literal column ([[ScratchCol]]) keeps each call's plan,
-    * and so its cache entry, its own.
+    * and so its cache entry, its own. The tag is a STRING: generated code
+    * inlines a numeric literal's value but reads a string literal from
+    * its reference array, so per-call tags still hit the codegen cache.
     */
   def scratch(df: DataFrame): DataFrame =
-    df.withColumn(ScratchCol, lit(scratchIds.incrementAndGet()))
+    df.withColumn(ScratchCol, lit(scratchIds.incrementAndGet().toString))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
   private val scratchIds = new java.util.concurrent.atomic.AtomicLong

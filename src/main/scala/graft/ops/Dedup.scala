@@ -319,13 +319,15 @@ object Dedup {
     * mins → banded md5 keys, in ONE native codegen'd expression
     * ([[graft.functions.TextExpressions.MinhashBandKeys]]; no explode,
     * no groupBy). Produces byte-identical keys to the explode/groupBy
-    * pipeline (bandKeys∘minhashSignature) — verified in ExtensionSpec —
-    * but as a STATELESS projection, so it composes with Structured
-    * Streaming before stream-static joins (streaming aggregations would
-    * forbid the downstream join). The kernel parses the digest's first
-    * 12 hex chars directly instead of the engine-portable hex parser:
-    * this form never meets the DuckDB oracle, the batch pipeline remains
-    * the oracle-checked one. Null text keys as the empty text.
+    * pipeline (bandKeysArray == bandKeys∘minhashSignature, pinned in
+    * ExtensionSpec) but as a STATELESS projection, so it composes with
+    * Structured Streaming before stream-static joins (streaming
+    * aggregations would forbid the downstream join) and costs no shuffle
+    * in batch. Every band-key path uses it: the LSH candidate pairs, the
+    * corpus states ([[corpusBandKeys]], [[corpusBandDocs]]) and both
+    * near-dup reject cores. The kernel parses the digest's first 12 hex
+    * chars directly; the DuckDB oracles replay the same value through
+    * [[digestModSql]]. Null text keys as the empty text.
     */
   def bandKeysArray(text: Column, bands: Int, rowsPerBand: Int,
       shingleN: Int = 5): Column = {
@@ -402,83 +404,42 @@ object Dedup {
     docs.filter(!probe)
   }
 
-  /** The corpus's distinct band-key set — the distilled dedup state a
-    * streaming ingest filter holds against (bands·docs short rows).
-    *
-    * Uses the CODEGEN explode/groupBy signature route (the measured-faster
-    * batch path — PLANS.md's negative result on the HOF form), keyed by
-    * md5(text) instead of a document id: rows with identical text merge
-    * into one signature computation (identical shingle sets — harmless
-    * for a DISTINCT key set, and it dedups the corpus's exact dups for
-    * free), rows with different texts never collide, and the key is a
-    * deterministic function of the row (no synthetic-id recomputation
-    * hazard). Only the batch side may aggregate — the per-row
-    * [[withBandKeys]]/[[bandKeysArray]] forms remain the streaming path.
+  /** The corpus's distinct band-key set — the distilled dedup state the
+    * unverified near-dup gates ([[mergeNewDocs]],
+    * [[graft.streaming.StreamingWindows.streamingNearDupFilterAtScale]])
+    * reject against (≤ bands·|distinct texts| short rows). One map-only
+    * [[bandKeysArray]] projection per row, exploded, then one DISTINCT
+    * on the narrow key: no signature groupBy, no join. A null text keys
+    * as the empty text, like every [[bandKeysArray]] caller.
     */
   def corpusBandKeys(docs: DataFrame, bands: Int, rowsPerBand: Int,
-      textCol: String = "text"): DataFrame = {
-    val h = freshName(docs.columns.toSeq, "_cbh")
-    val sig = bandKeys(
-      minhashSignature(docs.select(md5(col(textCol)).as(h), col(textCol)),
-        bands * rowsPerBand, textCol, h),
-      bands, rowsPerBand)
-    sig.select(explode(array((0 until bands).map(b => col(s"band$b")): _*)).as("bk"))
-      .distinct()
-  }
+      textCol: String = "text"): DataFrame =
+    docs.select(explode(bandKeysArray(col(textCol), bands, rowsPerBand))
+      .as("bk")).distinct()
 
   /** Batch corpus merge (the daily-crawl ingest step): keep only new
     * documents that are neither exact duplicates (md5) nor near-duplicates
     * (shared LSH band) of the existing corpus, then union.
     *
-    * Every step is a HASH join on uniform md5 keys: the near-dup rejection
-    * explodes each new doc's band keys to (id, bk) rows, equi-SEMI-joins
-    * them against the corpus band-key set on `bk` to mark matched ids,
-    * then LEFT-ANTI-joins the fresh docs on id. (An `array_contains(_bks,
-    * bk)` anti-join would have no equi-key — Spark plans it as a nested
-    * loop over the O(|corpus|·bands) key set, which can neither broadcast
-    * nor finish at corpus scale.) Batch twin of
-    * StreamingWindows.streamingNearDupFilter.
-    *
-    * Rejection is PER-ROW in effect, keyed on the CONTENT pair
-    * (`idCol`, text digest) rather than a synthetic per-row id: the band
-    * keys (and hence the match decision) are a pure function of the text,
-    * so two rows sharing both id and text necessarily receive the same
-    * verdict — keying on content loses nothing vs a per-row counter,
-    * while rows sharing an id but carrying different text still decide
-    * independently. Unlike `monotonically_increasing_id`, the key is a
-    * deterministic function of the ROW, so the two consumers of `fresh`
-    * below agree by construction even if the upstream lineage is
-    * re-evaluated in a different partitioning/order (repartition, shuffle
-    * join, sample upstream — the round-4 verdict's hazard).
-    *
-    * NULL handling (round-5 advice): the digest and id joins are
-    * NULL-SAFE (`<=>`), so a null `textCol` (digest null) or null `idCol`
-    * row still participates in rejection — two null-text docs are exact
-    * duplicates of each other, and a matched null-id row is still dropped
-    * — instead of silently passing every equi-join as SQL nulls would.
+    * Exact rejection is a NULL-SAFE (`<=>`) anti-join on the text digest,
+    * so two null-text docs are exact duplicates of each other. Near-dup
+    * rejection is the batch core of [[bandKeyReject]] against
+    * [[corpusBandKeys]], unverified: every step is a hash join on uniform
+    * md5 keys, and the verdict is a function of the text alone, so a
+    * matched row is dropped whatever its `idCol` holds (null included).
+    * `idCol` no longer takes part in the decision.
     */
   def mergeNewDocs(corpus: DataFrame, newDocs: DataFrame,
       bands: Int = Pipeline.DefaultBands,
       rowsPerBand: Int = Pipeline.DefaultRowsPerBand,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val h = freshName(newDocs.columns.toSeq, "_h")
-    val bksCol = freshName(newDocs.columns.toSeq :+ h, "_bks")
-    val bkCol = freshName(newDocs.columns.toSeq :+ h, "_bk")
-    val exactKeys = corpus.select(md5(col(textCol)).as(h + "_c")).distinct()
-    val corpusKeys = corpusBandKeys(corpus, bands, rowsPerBand, textCol)
-      .withColumnRenamed("bk", bkCol)
-    val fresh = newDocs
-      .withColumn(h, md5(col(textCol)))
-      .join(exactKeys, col(h) <=> col(h + "_c"), "left_anti")
-    val matched = withBandKeys(fresh.select(col(idCol), col(h), col(textCol)),
-        textCol, bksCol, bands, rowsPerBand)
-      .select(col(idCol).as("_mid"), col(h).as("_mh"), explode(col(bksCol)).as(bkCol))
-      .join(corpusKeys, Seq(bkCol), "left_semi")
-      .select(col("_mid"), col("_mh")).distinct()
-    corpus.unionByName(
-      fresh.join(matched,
-        col(idCol) <=> col("_mid") && col(h) <=> col("_mh"), "left_anti")
-        .drop(h))
+    val exactKeys = corpus.select(md5(col(textCol)).as(h)).distinct()
+    val fresh = newDocs.join(exactKeys, md5(col(textCol)) <=> col(h),
+      "left_anti")
+    corpus.unionByName(nearDupRejectStacked(fresh,
+      corpusBandKeys(corpus, bands, rowsPerBand, textCol), bands,
+      rowsPerBand, textCol, None))
   }
 
   /** Benchmark DECONTAMINATION: for each corpus document, how many of its
@@ -720,8 +681,8 @@ object Dedup {
   }
 
   /** |A∩B| / (|A|+|B|−|A∩B|) of two DISTINCT token-set columns — the one
-    * Jaccard formula behind [[jaccard]], [[jaccardScalar]] and both
-    * verified near-dup rejects. Null when either set is null. */
+    * Jaccard formula behind [[jaccard]], [[jaccardScalar]] and the
+    * verified near-dup reject. Null when either set is null. */
   private def setJaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
     inter / (size(a).cast("double") + size(b).cast("double") - inter)
@@ -841,7 +802,10 @@ object Dedup {
     * Scale shape: the signature frame is computed ONCE and materialized
     * ([[Checkpoints.materialize]]) — it feeds band-key pair generation
     * AND the per-pair agreement count without re-running the per-shingle
-    * md5 pass (the x54 backbone rule). Exact Jaccard tokenizes only
+    * md5 pass (the x54 backbone rule). Candidate pairs come from
+    * [[pairJoin]] over the stacked band keys, so mega-buckets above
+    * [[DefaultMaxBucket]] emit star edges exactly as in
+    * [[lshCandidatePairs]] (and the x85 oracle). Exact Jaccard tokenizes only
     * semi-joined pair members (the [[verifiedCandidatePairs]] prune) —
     * O(pairs), never a corpus pass. All joins are hash equi-joins on ids
     * or uniform md5 band keys.
@@ -852,15 +816,11 @@ object Dedup {
     val k = bands * rowsPerBand
     val sig = Checkpoints.materialize(
       minhashSignature(docs, k, textCol, idCol, shingleN))
-    val banded = bandKeys(sig, bands, rowsPerBand)
-    val stacked = (0 until bands).map(b =>
-        banded.select(col(idCol), lit(b).as("_bid"), col(s"band$b").as("_bk")))
-      .reduce(_.union(_))
-    val pairs = stacked.alias("a").join(stacked.alias("b"),
-        col("a._bid") === col("b._bid") && col("a._bk") === col("b._bk") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .distinct()
+    val stacked = bandKeys(sig, bands, rowsPerBand)
+      .select(col(idCol),
+        posexplode(array((0 until bands).map(b => col(s"band$b")): _*)))
+      .select(col(idCol), col("pos").cast("int").as("bid"), col("col").as("bk"))
+    val pairs = pairJoin(stacked, idCol, DefaultMaxBucket)
     val members = pairs.select(col("id_a").as(idCol))
       .union(pairs.select(col("id_b").as(idCol))).distinct()
     val pruned = Checkpoints.materialize(
@@ -904,19 +864,15 @@ object Dedup {
   def jaccardScalar(a: Column, b: Column): Column =
     setJaccard(array_distinct(tokens(a)), array_distinct(tokens(b)))
 
-  /** The corpus's (band key, text) VERIFICATION state — what the
-    * Jaccard-verified streaming ingest gate
-    * ([[graft.streaming.StreamingWindows.streamingVerifiedNearDupFilter]])
-    * joins against: `bands` rows per distinct corpus text, the text
-    * riding along so candidate verification is a scalar expression at the
-    * join site (no second lookup). Distinct-text keyed like
-    * [[corpusBandKeys]] (exact dups merge; ~bands·|distinct texts| rows —
-    * heavier than the bare key set by the token column, the price of
-    * precision). Uses the CODEGEN explode/groupBy signature route like
-    * [[corpusBandKeys]] (the measured-faster batch path — PLANS.md's
-    * negative result on the HOF form), keyed by the text digest, with
-    * one digest-keyed join to carry the verification payload back onto
-    * its band rows.
+  /** The corpus's (band key, token set) VERIFICATION state — what the
+    * Jaccard-verified near-dup gate ([[verifiedNearDupReject]], batch and
+    * streaming) joins against: one `(bk, ctoks)` row per distinct
+    * non-null corpus text and distinct band key of that text, the
+    * payload riding along so candidate verification is a scalar
+    * expression at the join site (no second lookup). ~bands·|distinct
+    * texts| rows — heavier than [[corpusBandKeys]] by the token column,
+    * the price of precision. One DISTINCT on the text, then one map-only
+    * [[bandKeysArray]] projection: no signature groupBy, no join.
     *
     * The payload is the DISTINCT TOKEN SET (`ctoks`), not the raw text:
     * the verification residual needs only the set, and pre-tokenizing
@@ -926,29 +882,13 @@ object Dedup {
     * tokenization is the quadratic-constant trap).
     */
   def corpusBandDocs(docs: DataFrame, bands: Int, rowsPerBand: Int,
-      textCol: String = "text"): DataFrame = {
-    val h = freshName(Seq("ctext", "bk"), "_cbh")
-    val withH = docs.select(col(textCol).as("ctext")).distinct()
-      .withColumn(h, md5(col("ctext")))
-    val sig = bandKeys(
-      minhashSignature(withH, bands * rowsPerBand, "ctext", h),
-      bands, rowsPerBand)
-    // DISTINCT on the narrow (digest, band key) pair BEFORE the text
-    // join (round-20, guide §2.3 "shuffle fewer bytes"): the previous
-    // post-join .distinct() exchanged and hash-compared (bk, ctoks)
-    // rows — the token ARRAY in every comparison — to drop the same
-    // duplicates the 64-char digest pair identifies. One row per
-    // distinct (text, band key) either way wherever texts' token sets
-    // differ; two distinct texts sharing both token set and band key
-    // now keep one state row each (identical verification verdicts —
-    // the reject set is unchanged, and nothing oracle-checked reads
-    // this state's row multiset).
-    sig.select(col(h),
-        explode(array((0 until bands).map(b => col(s"band$b")): _*)).as("bk"))
+      textCol: String = "text"): DataFrame =
+    docs.select(col(textCol).as("ctext")).filter(col("ctext").isNotNull)
       .distinct()
-      .join(withH, h)
-      .select(col("bk"), array_distinct(tokens(col("ctext"))).as("ctoks"))
-  }
+      .select(
+        explode(array_distinct(bandKeysArray(col("ctext"), bands,
+          rowsPerBand))).as("bk"),
+        array_distinct(tokens(col("ctext"))).as("ctoks"))
 
   /** The corpus-scale stage of [[sourceOverlapMatrix]], lazily — the
     * plan-inspectable form PlanSpec pins (the eager materialize above
@@ -983,86 +923,104 @@ object Dedup {
         expr("m * n_buckets").as("n_state_rows"))
 
   /** Jaccard-VERIFIED near-dup rejection against a corpus band state —
-    * the execution-mode-NEUTRAL core under both the streaming ingest gate
+    * the one text gate under the streaming ingest filter
     * ([[graft.streaming.StreamingWindows.streamingVerifiedNearDupFilter]])
     * and the batch append pipeline ([[graft.ops.Pipeline.appendCurated]]):
     * a document is dropped only when it shares an LSH band key with a
     * corpus text ([[corpusBandDocs]]) AND its exact token-set Jaccard
-    * against THAT text clears `minJaccard`. One stateless map-only
-    * projection computes the doc's band keys ([[bandKeysArray]] — no
-    * aggregation, so the same plan is legal in a micro-batch), then one
-    * hash ANTI-join per band on the band key with the Jaccard check as
-    * the join's residual condition — verification is priced only on
-    * band-colliding pairs, and there is no broadcast limit and no state.
+    * against THAT text clears `minJaccard`. The doc's band keys are one
+    * stateless map-only projection ([[bandKeysArray]]); the join shape
+    * follows the execution mode ([[bandKeyReject]]). Verification is
+    * priced only on band-colliding pairs, with no broadcast limit and no
+    * state store.
     *
     * Both sides pre-stage their DISTINCT TOKEN SETS (the doc side as a
     * map-only projection, the corpus side inside [[corpusBandDocs]]), so
     * the residual is one `array_intersect` of two ready arrays — never
     * per-pair re-tokenization, which would multiply by the fan-out of a
-    * hot band key.
+    * hot band key. The verdict is a function of the text alone: a null
+    * text is never rejected (its token set is null), and a row's id
+    * plays no part.
     */
   def verifiedNearDupReject(docs: DataFrame, bandDocs: DataFrame,
       bands: Int = Pipeline.DefaultBands,
       rowsPerBand: Int = Pipeline.DefaultRowsPerBand,
       minJaccard: Double = 0.5,
-      textCol: String = "text"): DataFrame = {
-    val withBands = (0 until bands).foldLeft(
-      docs.withColumn("_bks", bandKeysArray(col(textCol), bands, rowsPerBand))
-        .withColumn("_vtoks", array_distinct(tokens(col(textCol))))) {
-      (d, b) => d.withColumn(s"_bk$b", element_at(col("_bks"), b + 1))
-    }.drop("_bks")
-    (0 until bands).foldLeft(withBands) { (d, b) =>
-      val r = bandDocs.select(col("bk").as(s"_cbk$b"), col("ctoks").as(s"_ct$b"))
-      d.join(r, d(s"_bk$b") === r(s"_cbk$b") &&
-        setJaccard(d("_vtoks"), r(s"_ct$b")) >= minJaccard, "left_anti")
-    }.drop("_vtoks" +: (0 until bands).map(b => s"_bk$b"): _*)
+      textCol: String = "text"): DataFrame =
+    bandKeyReject(docs, bandDocs, bands, rowsPerBand, textCol,
+      Some(minJaccard))
+
+  /** Drop every row of `docs` that shares a band key with the corpus
+    * `state` (`bk`, plus `ctoks` when `minJaccard` is set, which then
+    * also requires the exact token-set Jaccard to clear it). A streaming
+    * `docs` runs [[nearDupRejectChain]], a batch one
+    * [[nearDupRejectStacked]]; both return the same rows. */
+  private[graft] def bandKeyReject(docs: DataFrame, state: DataFrame,
+      bands: Int, rowsPerBand: Int, textCol: String,
+      minJaccard: Option[Double]): DataFrame =
+    if (docs.isStreaming)
+      nearDupRejectChain(docs, state, bands, rowsPerBand, textCol, minJaccard)
+    else
+      nearDupRejectStacked(docs, state, bands, rowsPerBand, textCol,
+        minJaccard)
+
+  /** Band-key match of a doc row against a state row, with the optional
+    * Jaccard residual on their token sets — the join condition of both
+    * reject cores. */
+  private def bandHit(bk: Column, cbk: Column, toks: Column, ctoks: Column,
+      minJaccard: Option[Double]): Column =
+    minJaccard.fold(bk === cbk)(j => bk === cbk && setJaccard(toks, ctoks) >= j)
+
+  /** The STREAMING reject core: one stream-static hash ANTI-join per band
+    * on that band's key, with the Jaccard residual (if any) at the join
+    * site. A stream may not join against an aggregate of itself, so each
+    * per-band anti-join must stay stream-static; no streaming
+    * aggregation, no state store, and the static side may be arbitrarily
+    * large (store it bucketed by `bk` and its shuffle is done once, not
+    * per micro-batch). A doc survives iff it survives every band. Kept
+    * `private[graft]` so PlanSpec/StreamingSpec can audit its plan on a
+    * batch frame.
+    */
+  private[graft] def nearDupRejectChain(docs: DataFrame, state: DataFrame,
+      bands: Int, rowsPerBand: Int, textCol: String,
+      minJaccard: Option[Double]): DataFrame = {
+    val withBks = docs.withColumn("_bks",
+      bandKeysArray(col(textCol), bands, rowsPerBand))
+    val staged = minJaccard.fold(withBks)(_ =>
+      withBks.withColumn("_vtoks", array_distinct(tokens(col(textCol)))))
+    (0 until bands).foldLeft(staged) { (d, b) =>
+      val r = state.select(col("bk").as(s"_cbk$b") +:
+        minJaccard.map(_ => col("ctoks").as(s"_ct$b")).toSeq: _*)
+      d.join(r, bandHit(element_at(col("_bks"), b + 1), col(s"_cbk$b"),
+        col("_vtoks"), col(s"_ct$b"), minJaccard), "left_anti")
+    }.drop("_bks", "_vtoks")
   }
 
-  /** BATCH twin of [[verifiedNearDupReject]] — the identical reject set
-    * (spec-pinned set-equality) through ONE join instead of `bands`
-    * chained anti-joins. The chain form exists because a STREAMING plan
-    * may not join the stream against an aggregate derived from itself —
-    * each per-band anti-join must stay stream-static. A batch caller has
-    * no such constraint, and the chain's plan is expensive at scale:
-    * every anti-join re-shuffles the surviving batch WITH its payload
-    * (text, pre-tokenized set, all band keys) on the next band key, and
-    * re-exchanges + re-sorts the corpus-scale state — 2·bands
-    * corpus/batch exchanges for one logical membership test (guide
-    * §2.3 "shuffle fewer bytes", §2.4 "remove shuffles outright";
-    * round-20, measured 2.6× on the x61 vsCorpus stage).
-    *
-    * Here the batch's band keys EXPLODE into (id, token set, bk) rows —
-    * one exchange of the stacked frame, one of the state — and a single
-    * hash semi-join with the Jaccard residual yields the rejected-id
-    * set (DISTINCT ids, bounded by the batch), which anti-joins back
-    * broadcast-sized. OR-over-bands ≡ EXISTS over stacked rows, so the
-    * reject set is exactly the chain's.
+  /** The BATCH reject core: the docs' band keys EXPLODE into (digest,
+    * token set, bk) rows, ONE hash semi-join against the state (with the
+    * residual) yields the rejected text digests, and one null-safe
+    * (`<=>`) anti-join on `md5(text)` drops them. OR-over-bands ≡ EXISTS
+    * over stacked rows, so the reject set is exactly the chain's; the
+    * chain instead re-shuffles the surviving batch with its payload and
+    * re-exchanges the state once PER BAND (round 20 measured 2.6× on
+    * x61's vsCorpus stage). Keying on the digest alone is exact because
+    * the verdict depends only on the text, and `<=>` keeps null-text
+    * rows deciding like the chain's.
     */
-  def verifiedNearDupRejectStacked(docs: DataFrame, bandDocs: DataFrame,
-      bands: Int = Pipeline.DefaultBands,
-      rowsPerBand: Int = Pipeline.DefaultRowsPerBand,
-      minJaccard: Double = 0.5,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    // rejection keyed on the CONTENT pair (id, text digest) — the
-    // mergeNewDocs discipline — so rows sharing an id but carrying
-    // different text still decide independently, exactly as the
-    // per-row chain does. A rejected row's digest is never null (a
-    // null text yields null token sets, and the Jaccard residual's
-    // null comparison never matches), so the plain equi anti-join is
-    // exact: null-digest rows simply never appear in `rejected`.
-    val stacked = docs
-      .withColumn("_bks", bandKeysArray(col(textCol), bands, rowsPerBand))
-      .withColumn("_vtoks", array_distinct(tokens(col(textCol))))
-      .select(col(idCol).as("_vid"), md5(col(textCol)).as("_vh"),
-        col("_vtoks"), explode(col("_bks")).as("_bk"))
-    val r = bandDocs.select(col("bk").as("_cbk"), col("ctoks"))
+  private def nearDupRejectStacked(docs: DataFrame, state: DataFrame,
+      bands: Int, rowsPerBand: Int, textCol: String,
+      minJaccard: Option[Double]): DataFrame = {
+    val h = freshName(docs.columns.toSeq, "_vh")
+    val stacked = docs.select(Seq(md5(col(textCol)).as(h),
+        explode(bandKeysArray(col(textCol), bands, rowsPerBand)).as("_bk")) ++
+      minJaccard.map(_ => array_distinct(tokens(col(textCol))).as("_vtoks")): _*)
+    val r = state.select(col("bk").as("_cbk") +:
+      minJaccard.map(_ => col("ctoks")).toSeq: _*)
     val rejected = stacked
-      .join(r, col("_bk") === col("_cbk") &&
-        setJaccard(col("_vtoks"), col("ctoks")) >= minJaccard, "left_semi")
-      .select(col("_vid"), col("_vh")).distinct()
-    docs.join(rejected,
-      col(idCol) === col("_vid") && md5(col(textCol)) === col("_vh"),
-      "left_anti")
+      .join(r, bandHit(col("_bk"), col("_cbk"), col("_vtoks"), col("ctoks"),
+        minJaccard), "left_semi")
+      .select(col(h)).distinct()
+    docs.join(rejected, md5(col(textCol)) <=> col(h), "left_anti")
   }
 
   /** Multi-signal near-dup clustering: union several candidate-pair
@@ -1100,8 +1058,10 @@ object Dedup {
     * identity labels it is the minimum id in each closed neighbourhood.
     * At production scale `checkpointEvery` cuts lineage every few rounds.
     *
-    * Cache lifecycle: the final labels (one short row per clustered doc)
-    * are materialized eagerly so the persisted edge list can be
+    * Cache lifecycle: the edge list is per-call scratch state
+    * ([[Checkpoints.scratch]]), so a caller holding an equal cached frame
+    * keeps its own cache entry. The final labels (one short row per
+    * clustered doc) are materialized eagerly so the edge list can be
     * unpersisted before returning — repeated invocations leave no cache
     * entries behind.
     */
@@ -1114,8 +1074,8 @@ object Dedup {
     // next to the corpus, the textbook cache for iterative algorithms.
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-    val hood = edges.union(edges.select(col("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val hood = Checkpoints.scratch(
+      edges.union(edges.select(col("src"), col("src").as("dst"))))
     var labels = hood.groupBy(col("src").as("id")).agg(min(col("dst")).as("lbl"))
     for (r <- 2 to rounds) {
       // each round stacks a join+agg on the labels lineage; past a few

@@ -595,10 +595,10 @@ object Pipeline {
     * the corpus, so the within-batch LSH/jaccard stages are O(batch).
     * Cross-corpus verification prices Jaccard only on band-colliding
     * pairs (the anti-join's residual condition) via
-    * [[Dedup.verifiedNearDupReject]] — the SAME execution-mode-neutral
-    * core the streaming ingest gate delegates to, so batch append and
-    * streaming ingest share one rejection implementation by
-    * construction.
+    * [[Dedup.verifiedNearDupReject]] — the SAME gate the streaming
+    * ingest filter delegates to, so batch append and streaming ingest
+    * reject the same rows (each through the join shape its execution
+    * mode allows).
     */
   def appendCurated(corpus: DataFrame, newDocs: DataFrame, evalSet: DataFrame,
       minQuality: Double = 0.3, maxSharedShingles: Long = 4L,
@@ -656,17 +656,13 @@ object Pipeline {
     }
     // vsCorpus feeds three consumers (LSH candidates, the jaccard member
     // prune, the dedup anti-join) — materialize it or each re-executes
-    // the verified rejection. Round-20: the BATCH path uses the STACKED
-    // one-join form (explode the batch's band keys once, one semi-join
-    // against the state with the Jaccard residual, one anti-join of the
-    // tiny rejected-id set) instead of the `bands` chained anti-joins,
-    // which re-shuffled the batch payload (text + token set + all band
-    // keys) AND re-exchanged + re-sorted the corpus-scale state once
-    // PER BAND (guide §2.3/§2.4; measured 2.6x on this stage). Same
-    // reject set — spec-pinned against the chain form, which remains
-    // the streaming-legal core the ingest gate runs.
+    // the verified rejection. On this batch frame verifiedNearDupReject
+    // runs its one-join core (explode the batch's band keys once, one
+    // semi-join against the state with the Jaccard residual, one
+    // anti-join of the rejected digests); a streaming ingest gate runs
+    // the per-band chain over the same state and rejects the same rows.
     val vsCorpus = Checkpoints.materialize(
-      Dedup.verifiedNearDupRejectStacked(exact, bandState,
+      Dedup.verifiedNearDupReject(exact, bandState,
         bands = bands, rowsPerBand = rowsPerBand, minJaccard = minJaccard))
 
     // within-batch verified near-dup dedup (batch survivors are small —

@@ -73,10 +73,6 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object StageCache {
 
-  // SPARK_GRAFT_STAGE_CACHE=0 disables memoization process-wide (A/B
-  // measurement and forced-cold debugging); default on.
-  private val enabled = !sys.env.get("SPARK_GRAFT_STAGE_CACHE").contains("0")
-
   private final class Box(f: () => AnyRef, val fixture: Boolean) {
     val owned = new java.util.concurrent.ConcurrentLinkedQueue[
       org.apache.spark.rdd.RDD[_]]
@@ -176,7 +172,7 @@ object StageCache {
 
   private def memoImpl[T <: AnyRef](tag: String, frames: Seq[DataFrame],
       params: Seq[Any], fixture: Boolean, inherit: Boolean)(stage: => T): T = {
-    if (!enabled || frames.isEmpty) return stage
+    if (frames.isEmpty) return stage
     val sess: AnyRef = frames.head.sparkSession
     val plans = frames.map(_.queryExecution.analyzed)
     var evicted: Box = null
@@ -253,7 +249,7 @@ object StageCache {
     */
   def lookup[T <: AnyRef](tag: String, frames: Seq[DataFrame],
       params: Seq[Any]): Option[T] = {
-    if (!enabled || frames.isEmpty) return None
+    if (frames.isEmpty) return None
     val sess: AnyRef = frames.head.sparkSession
     val plans = frames.map(_.queryExecution.analyzed)
     val boxOpt = entries.synchronized {

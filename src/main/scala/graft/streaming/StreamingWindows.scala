@@ -245,67 +245,36 @@ object StreamingWindows {
   def enrichWithStatic(events: DataFrame, dim: DataFrame, key: String): DataFrame =
     events.join(broadcast(dim), Seq(key), "left")
 
-  /** Streaming near-dup rejection at ingest: an arriving document is
-    * dropped when ANY of its LSH band keys already exists in the corpus.
-    * The stream side computes band keys as a stateless projection
-    * (Dedup.bandKeysArray — no streaming aggregation, so the join stays
-    * legal); the corpus key set is the distilled dedup state, broadcast
-    * per micro-batch. The anti-join condition is array_contains, planned
-    * as a broadcast join against the (small) key set — for corpora whose
-    * key set outgrows broadcast, swap in an explode + watermark +
-    * dropDuplicatesWithinWatermark pipeline.
-    */
-  def streamingNearDupFilter(docs: DataFrame, corpusKeys: DataFrame,
-      bands: Int = graft.ops.Pipeline.DefaultBands,
-      rowsPerBand: Int = graft.ops.Pipeline.DefaultRowsPerBand, textCol: String = "text"): DataFrame =
-    docs
-      .withColumn("_bks",
-        graft.ops.Dedup.bandKeysArray(col(textCol), bands, rowsPerBand))
-      .join(broadcast(corpusKeys), expr("array_contains(_bks, bk)"), "left_anti")
-      .drop("_bks")
-
-  /** [[streamingNearDupFilter]] past the broadcast limit: when the corpus
-    * band-key set outgrows what a micro-batch can broadcast, reject-on-
-    * any-band decomposes into `bands` successive stream-static equi
-    * ANTI-joins — one per band column. Each is a plain HASH join on a
-    * uniform md5 key (stream-static left_anti is a supported streaming
-    * join; no streaming aggregation, no state store), so the key set may
-    * be arbitrarily large. A doc survives iff it survives every per-band
-    * anti-join == none of its band keys exist in the corpus — exactly the
-    * array_contains semantics of the broadcast form (asserted equal in
-    * StreamingSpec). At production scale, store `corpusKeys` bucketed by
-    * `bk` so the static side's shuffle is pre-done once, not per
-    * micro-batch.
+  /** Near-dup rejection at ingest: an arriving document is dropped when
+    * ANY of its LSH band keys already exists in the corpus key set
+    * ([[graft.ops.Dedup.corpusBandKeys]]). Hash joins on the uniform md5
+    * band key (Dedup.bandKeyReject: per-band stream-static anti-joins on
+    * a stream, one semi-join on a batch frame; StreamingSpec pins stream
+    * == batch), so the key set may be arbitrarily large: no broadcast
+    * limit, no state store. At production scale, store `corpusKeys`
+    * bucketed by `bk` so the static side's shuffle is pre-done once, not
+    * per micro-batch.
     */
   def streamingNearDupFilterAtScale(docs: DataFrame, corpusKeys: DataFrame,
       bands: Int = graft.ops.Pipeline.DefaultBands,
-      rowsPerBand: Int = graft.ops.Pipeline.DefaultRowsPerBand, textCol: String = "text"): DataFrame = {
-    // one staged projection for the key array (hash pass runs once), then
-    // per-band columns extracted as cheap element_at references
-    val withBands = (0 until bands).foldLeft(
-      docs.withColumn("_bks",
-        graft.ops.Dedup.bandKeysArray(col(textCol), bands, rowsPerBand))) {
-      (d, b) => d.withColumn(s"_bk$b", element_at(col("_bks"), b + 1))
-    }.drop("_bks")
-    (0 until bands).foldLeft(withBands) { (d, b) =>
-      d.join(corpusKeys.select(col("bk").as(s"_bk$b")), Seq(s"_bk$b"), "left_anti")
-    }.drop((0 until bands).map(b => s"_bk$b"): _*)
-  }
+      rowsPerBand: Int = graft.ops.Pipeline.DefaultRowsPerBand, textCol: String = "text"): DataFrame =
+    graft.ops.Dedup.bandKeyReject(docs, corpusKeys, bands, rowsPerBand,
+      textCol, None)
 
   /** Jaccard-VERIFIED streaming near-dup rejection — the precision gate
     * the batch pipeline applies before deleting anything
     * (Dedup.verifiedCandidatePairs), brought to ingest: an arriving
     * document is dropped only when it shares an LSH band with a corpus
     * text AND its exact token-set Jaccard against THAT text clears
-    * `minJaccard`. The unverified forms above reject on band collision
+    * `minJaccard`. The unverified form above rejects on band collision
     * alone, so a banding false positive silently drops a good incoming
-    * document (round-6 verdict #3); here the verification is a scalar
-    * expression (Dedup.jaccardScalar) evaluated per candidate pair inside
-    * the anti-join condition — still stateless, still a per-band
-    * stream-static HASH anti-join on the band key (the Jaccard predicate
-    * is the join's residual filter, priced only on band-colliding pairs),
-    * so there is no broadcast limit and no state store. Corpus state is
-    * Dedup.corpusBandDocs — the band-key set with the text riding along.
+    * document (round-6 verdict #3); here the exact Jaccard of the two
+    * pre-staged token sets is the join's residual, priced only on
+    * band-colliding pairs. Same join shapes as the unverified form (per
+    * band stream-static HASH anti-joins on a stream, one semi-join on a
+    * batch frame; Dedup.verifiedNearDupReject), so there is no broadcast
+    * limit and no state store. Corpus state is Dedup.corpusBandDocs —
+    * the band-key set with each text's token set riding along.
     */
   def streamingVerifiedNearDupFilter(docs: DataFrame, corpusBandDocs: DataFrame,
       bands: Int = graft.ops.Pipeline.DefaultBands,
@@ -381,10 +350,12 @@ object StreamingWindows {
     * stateless/broadcast-free filters above: quality threshold (pure
     * codegen'd expression), exact-dup rejection against the corpus Bloom
     * filter (map-only probe of the broadcast bit array), then near-dup
-    * rejection against the corpus band-key set (per-band stream-static
-    * hash anti-joins — no broadcast limit, static side bucketable). No
-    * watermark, no state store, no streaming aggregation: the whole gate
-    * is legal in any micro-batch plan. The corpus-WIDE stages — global
+    * rejection against the corpus band-key set
+    * ([[streamingNearDupFilterAtScale]]: per-band stream-static hash
+    * anti-joins on a stream, one semi-join on a batch frame — no
+    * broadcast limit, static side bucketable). No watermark, no state
+    * store, no streaming aggregation: the whole gate is legal in any
+    * micro-batch plan. The corpus-WIDE stages — global
     * keeper election, decontamination, shuffle/shard — need full-corpus
     * state and remain batch jobs over the accumulated store, which is
     * exactly how production ingest splits stream-time vs batch-time work.

@@ -150,6 +150,20 @@ class CurationRecallSpec extends SparkSuite {
     } finally { a.unpersist(); b.unpersist() }
   }
 
+  test("Checkpoints.scratch: a second call over an equal frame compiles " +
+      "no new code (the per-call tag stays out of generated code)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val df = spark.range(100).select((col("id") * 2).as("y"))
+    def oneCall(): Unit = {
+      val s = Checkpoints.scratch(df)
+      try s.count() finally s.unpersist(blocking = true)
+    }
+    oneCall()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    oneCall()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiled)
+  }
+
   /** Runs `body` while the caller holds its own cache of `mine`, a frame
     * equal to one that `body` caches as scratch state, and asserts that
     * the caller's cache survives. */
@@ -178,6 +192,18 @@ class CurationRecallSpec extends SparkSuite {
     val docs = frame("text" -> scratchDocs)
     keepsCallersCache(graft.ops.Bpe.wordTable(docs)) {
       graft.ops.Bpe.learnMerges(docs, 2)
+    }
+  }
+
+  test("clusterPairs leaves a caller's cached edge list cached") {
+    val pairs = frame("id_a" -> Seq(1L, 2L, 5L), "id_b" -> Seq(2L, 3L, 6L))
+    // the closed neighbourhood clusterPairs propagates over: both edge
+    // directions plus the self-loops
+    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    keepsCallersCache(
+        edges.union(edges.select(col("src"), col("src").as("dst")))) {
+      Dedup.clusterPairs(pairs, 2)
     }
   }
 

@@ -535,6 +535,30 @@ class ExtensionSpec extends SparkSuite {
     assert(viaArray == viaBatch)
   }
 
+  /** The `doc_id`s (None for a null id) that `gate` keeps when `input`
+    * arrives as a file stream: `input` is written to a fresh parquet dir,
+    * read back with `readStream`, and run to completion in a memory sink.
+    * On a stream the band-key gates run their per-band chain core. */
+  private def streamedIds(input: org.apache.spark.sql.DataFrame, name: String)(
+      gate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : Set[Option[Long]] = {
+    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    input.write.mode("overwrite").parquet(dir)
+    val stream = spark.readStream.schema(input.schema).parquet(dir)
+    assert(stream.isStreaming)
+    val q = gate(stream).select("doc_id")
+      .writeStream.outputMode("append").format("memory")
+      .queryName(name).start()
+    try {
+      q.processAllAvailable()
+      ids(spark.table(name))
+    } finally q.stop()
+  }
+
+  private def ids(d: org.apache.spark.sql.DataFrame): Set[Option[Long]] =
+    d.select("doc_id").collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSet
+
   test("stacked batch verified reject == chained per-band anti-joins " +
       "(round-20: the one-join batch twin keeps the chain's reject set)") {
     val dir = "/root/testdata/sf0.001"
@@ -544,12 +568,11 @@ class ExtensionSpec extends SparkSuite {
     val state = Dedup.corpusBandDocs(corpus, bands = 2, rowsPerBand = 4)
       .cache()
     try {
-      def ids(d: org.apache.spark.sql.DataFrame) =
-        d.select("doc_id").collect().map(_.getLong(0)).toSet
-      val chain = ids(Dedup.verifiedNearDupReject(batch, state,
-        bands = 2, rowsPerBand = 4, minJaccard = 0.3))
-      val stacked = ids(Dedup.verifiedNearDupRejectStacked(batch, state,
-        bands = 2, rowsPerBand = 4, minJaccard = 0.3))
+      def gate(d: org.apache.spark.sql.DataFrame) =
+        Dedup.verifiedNearDupReject(d, state,
+          bands = 2, rowsPerBand = 4, minJaccard = 0.3)
+      val chain = streamedIds(batch, "verified_chain")(gate)
+      val stacked = ids(gate(batch))
       assert(stacked == chain,
         s"forms diverge: only-chain=${chain -- stacked} " +
           s"only-stacked=${stacked -- chain}")
@@ -557,6 +580,62 @@ class ExtensionSpec extends SparkSuite {
       // the equality above is not vacuous
       assert(chain.size < batch.count())
     } finally { state.unpersist(); () }
+  }
+
+  test("verified reject drops a null-id near-dup in batch as on a stream") {
+    val corpus = frame("doc_id" -> Seq[Any](1L), "text" -> Seq[Any](
+      "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
+    val incoming = frame(
+      "doc_id" -> Seq[Any](null, 5L),
+      "text" -> Seq[Any](
+        // one-token edit of corpus doc 1: shares a band, Jaccard ≈ 0.82
+        "alpha beta gamma delta epsilon zeta eta theta iota lambda",
+        "totally novel unique content about distributed query engines"))
+    val state = Dedup.corpusBandDocs(corpus,
+      Pipeline.DefaultBands, Pipeline.DefaultRowsPerBand)
+    def gate(d: org.apache.spark.sql.DataFrame) =
+      Dedup.verifiedNearDupReject(d, state, minJaccard = 0.5)
+    val streamed = streamedIds(incoming, "verified_null_id")(gate)
+    assert(streamed == Set(Some(5L)), s"stream kept $streamed")
+    assert(ids(gate(incoming)) == streamed)
+  }
+
+  test("corpusBandKeys and corpusBandDocs rows == the bandKeys∘" +
+      "minhashSignature construction (null text, duplicate and short texts)") {
+    val corpus = frame(
+      "doc_id" -> Seq[Any](1L, 2L, 3L, 4L, 5L, 6L),
+      "text" -> Seq[Any](
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+        null,
+        "short text",
+        "one two three four five six seven eight nine ten eleven",
+        "short text"))
+    val (bands, rpb) = (4, 2)
+    // the signature route, keyed by the text digest: one signature per
+    // distinct text (a null text signs as the empty text under a null key)
+    val withH = corpus.select(col("text")).distinct()
+      .withColumn("h", md5(col("text")))
+    val viaSig = Dedup.bandKeys(
+        Dedup.minhashSignature(withH, bands * rpb, "text", "h"), bands, rpb)
+      .select(col("h"),
+        explode(array((0 until bands).map(b => col(s"band$b")): _*)).as("bk"))
+      .distinct()
+    def sortedKeys(d: org.apache.spark.sql.DataFrame) =
+      d.select("bk").collect().map(_.getString(0)).toSeq.sorted
+    val keys = sortedKeys(Dedup.corpusBandKeys(corpus, bands, rpb))
+    assert(keys == sortedKeys(viaSig.select("bk").distinct()))
+    assert(keys.distinct == keys)
+
+    def stateRows(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("bk"), concat_ws(" ", array_sort(col("ctoks"))))
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+    val want = viaSig.join(withH, "h")
+      .select(col("bk"), array_distinct(Dedup.tokens(col("text"))).as("ctoks"))
+    val got = stateRows(Dedup.corpusBandDocs(corpus, bands, rpb))
+    assert(got == stateRows(want))
+    // three distinct non-null texts, `bands` distinct keys each
+    assert(got.size == 3 * bands, got.mkString("\n"))
   }
 
   test("IVF(nprobe=2) recall@3 vs brute force stays high (ANN quality gate)") {

@@ -295,12 +295,15 @@ class PlanSpec extends SparkSuite {
       "anti-joins — residual conditions must not degrade the join to a " +
       "nested loop") {
     val docs = Tables.documents(spark, dir)
-    val textPlan = graft.ops.Dedup.verifiedNearDupReject(docs,
-        graft.ops.Dedup.corpusBandDocs(docs, 2, 4))
-      .queryExecution.executedPlan.toString
-    assert(!textPlan.contains("CartesianProduct") &&
-      !textPlan.contains("BroadcastNestedLoopJoin"),
-      "verified text gate lost its equi key:\n" + textPlan.take(2000))
+    val bandDocs = graft.ops.Dedup.corpusBandDocs(docs, 2, 4)
+    // the batch core (what a batch call runs) and the streaming chain core
+    for (textPlan <- Seq(
+        graft.ops.Dedup.verifiedNearDupReject(docs, bandDocs),
+        graft.ops.Dedup.nearDupRejectChain(docs, bandDocs, 2, 4, "text",
+          Some(0.5))).map(_.queryExecution.executedPlan.toString))
+      assert(!textPlan.contains("CartesianProduct") &&
+        !textPlan.contains("BroadcastNestedLoopJoin"),
+        "verified text gate lost its equi key:\n" + textPlan.take(2000))
     val embs = Tables.embeddings(spark, dir)
     val dim = embs.select(org.apache.spark.sql.functions.size(
       org.apache.spark.sql.functions.col("embedding"))).head().getInt(0)
@@ -311,6 +314,17 @@ class PlanSpec extends SparkSuite {
     assert(!embPlan.contains("CartesianProduct") &&
       !embPlan.contains("BroadcastNestedLoopJoin"),
       "semantic gate lost its bucket equi key:\n" + embPlan.take(2000))
+  }
+
+  test("band-key corpus states build from the map-only kernel: no join " +
+      "in corpusBandKeys' or corpusBandDocs' plan") {
+    val docs = Tables.documents(spark, dir)
+    for ((name, state) <- Seq(
+        "corpusBandKeys" -> graft.ops.Dedup.corpusBandKeys(docs, 2, 4),
+        "corpusBandDocs" -> graft.ops.Dedup.corpusBandDocs(docs, 2, 4))) {
+      val plan = state.queryExecution.executedPlan.toString
+      assert(!plan.contains("Join"), s"$name plans a join:\n" + plan.take(3000))
+    }
   }
 
   test("filter pushdown and column pruning reach the parquet scan (q02 shape)") {

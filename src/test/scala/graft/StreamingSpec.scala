@@ -119,7 +119,7 @@ class StreamingSpec extends SparkSuite {
       Pipeline.DefaultBands, Pipeline.DefaultRowsPerBand)
     val stream = spark.readStream.schema(batchDocs.schema)
       .parquet(s"$dir/documents.parque[t]")
-    val q = StreamingWindows.streamingNearDupFilter(stream, keys)
+    val q = StreamingWindows.streamingNearDupFilterAtScale(stream, keys)
       .select("doc_id")
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_neardup").start()
@@ -128,7 +128,7 @@ class StreamingSpec extends SparkSuite {
       val got = collectCol[Long](spark.table("stream_neardup").orderBy("doc_id"), "doc_id")
       // the same operator applied in batch is the ground truth
       val want = collectCol[Long](
-        StreamingWindows.streamingNearDupFilter(batchDocs, keys)
+        StreamingWindows.streamingNearDupFilterAtScale(batchDocs, keys)
           .select("doc_id").orderBy("doc_id"), "doc_id")
       assert(got == want)
       assert(got.nonEmpty && !got.exists(_ < 100), // corpus docs self-reject
@@ -158,21 +158,16 @@ class StreamingSpec extends SparkSuite {
         q.processAllAvailable()
         val got = collectCol[Long](
           spark.table("stream_neardup_scale").orderBy("doc_id"), "doc_id")
+        // the batch call runs the one-join core: same rows as the chain
         val want = collectCol[Long](
-          StreamingWindows.streamingNearDupFilter(batchDocs, keys)
+          StreamingWindows.streamingNearDupFilterAtScale(batchDocs, keys)
             .select("doc_id").orderBy("doc_id"), "doc_id")
         assert(got == want)
         assert(got.nonEmpty && !got.exists(_ < 100))
       } finally q.stop()
-      // the batch twin of the scale form agrees too (same operator shape)
-      val batchScale = collectCol[Long](
-        StreamingWindows.streamingNearDupFilterAtScale(batchDocs, keys)
-          .select("doc_id").orderBy("doc_id"), "doc_id")
-      assert(batchScale == collectCol[Long](
-        StreamingWindows.streamingNearDupFilter(batchDocs, keys)
-          .select("doc_id").orderBy("doc_id"), "doc_id"))
-      // and no broadcast nested loop appears in the scale plan
-      val plan = StreamingWindows.streamingNearDupFilterAtScale(batchDocs, keys)
+      // and no broadcast nested loop appears in the chain core's plan
+      val plan = Dedup.nearDupRejectChain(batchDocs, keys,
+          Pipeline.DefaultBands, Pipeline.DefaultRowsPerBand, "text", None)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
