@@ -588,16 +588,16 @@ object MDFrame {
   def bernoulliThreshold(frac: Double): Long =
     math.floor(frac * 281474976710656.0).toLong // 2^48
 
+  /** A column name not present in `taken` (temp-column collision guard). */
+  private[graft] def freshName(taken: Seq[String], base: String): String =
+    Iterator.iterate(base)(_ + "_").dropWhile(taken.contains).next()
+
   /** Stable 0-based row position in the frame's current order. RDD
     * zipWithIndex is the one legitimate non-declarative escape hatch
     * (SURVEY.md §7.4 hard part 1): positional semantics need a total order
     * that Spark does not natively carry. Prefer passing an explicit order
     * column at scale.
     */
-  /** A column name not present in `taken` (temp-column collision guard). */
-  private[graft] def freshName(taken: Seq[String], base: String): String =
-    Iterator.iterate(base)(_ + "_").dropWhile(taken.contains).next()
-
   def withRowPos(df: DataFrame, posCol: String): DataFrame = {
     val schema = df.schema.add(StructField(posCol, LongType, nullable = false))
     val rdd = df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }

@@ -438,10 +438,6 @@ object Similarity {
         col("neighbor_id"), col("sim"))
   }
 
-  /** LSH-bucketed approximate near-duplicate pairs: vectors sharing a
-    * bucket are checked exactly; pairs at or above `minCosine` survive.
-    * Scale path: equi-join on bucket — candidates per bucket ≈ n/2^planes.
-    */
   /** Semantic near-dup pairs through the TRAINED quantizer: vectors that
     * land in the same k-means cell and cosine-match above `minCosine`.
     * The IVF twin of [[lshNearDupPairs]] — same output contract, different
@@ -939,6 +935,10 @@ object Similarity {
       .toDF("cell", "rk", "vec_id", "mmr")
   }
 
+  /** LSH-bucketed approximate near-duplicate pairs: vectors sharing a
+    * bucket are checked exactly; pairs at or above `minCosine` survive.
+    * Scale path: equi-join on bucket — candidates per bucket ≈ n/2^planes.
+    */
   def lshNearDupPairs(df: DataFrame, nPlanes: Int, dim: Int, minCosine: Double,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     val b = df.select(col(idCol), col(embCol).cast("array<double>").as("e"))
@@ -1085,29 +1085,6 @@ object Similarity {
       stackedEmbeddingBandKeys(df, nBands, planesPerBand, dim, idCol, embCol),
       maxBucket)
 
-  /** Per-group centroid outliers: the `bottomK` vectors of each group
-    * (label/source/cluster) by cosine to the group's own mean vector —
-    * the standard "weird members of a topic" audit before training on a
-    * clustered corpus.
-    *
-    * Determinism at scale: a float mean over a shuffled group is
-    * order-DEPENDENT (double addition does not commute bitwise), so the
-    * centroid here is computed in EXACT integer arithmetic — components
-    * quantize to `round(x·scale)` longs, group sums of longs are exact
-    * under any arrival order, and the cosine's scaling factors cancel:
-    * cos(v, Σw) = cos(v, mean(w)). Doubles appear only in the final
-    * per-row division, computed from exact integers — bit-identical in
-    * any engine, any partitioning.
-    *
-    * Scale shape: one posexplode (rows·dim, map-side combinable into
-    * groups·dim centroid cells), one join of rows·dim against the tiny
-    * groups·dim centroid table (broadcastable), one map-side-combined
-    * per-row reduction, then the salted two-phase top-k
-    * ([[graft.ops.Ranking.topKPerGroup]]) so a giant group never funnels
-    * through one task. Long-range check: |v|≤scale·|x|, centroid sums
-    * ≤ n·scale·|x| — products stay under 2^63 for corpora up to ~10^9
-    * rows at scale=10^4 and unit-norm embeddings.
-    */
   /** D4-style PROTOTYPICALITY prune (Tirumala et al. 2023, "D4:
     * Improving LLM Pretraining via Document De-Duplication and
     * Diversification"): after semantic dedup, the published recipe also
@@ -1157,6 +1134,29 @@ object Similarity {
         (col("_rnk") <= col("_pn")).as("pruned"))
   }
 
+  /** Per-group centroid outliers: the `bottomK` vectors of each group
+    * (label/source/cluster) by cosine to the group's own mean vector —
+    * the standard "weird members of a topic" audit before training on a
+    * clustered corpus.
+    *
+    * Determinism at scale: a float mean over a shuffled group is
+    * order-DEPENDENT (double addition does not commute bitwise), so the
+    * centroid here is computed in EXACT integer arithmetic — components
+    * quantize to `round(x·scale)` longs, group sums of longs are exact
+    * under any arrival order, and the cosine's scaling factors cancel:
+    * cos(v, Σw) = cos(v, mean(w)). Doubles appear only in the final
+    * per-row division, computed from exact integers — bit-identical in
+    * any engine, any partitioning.
+    *
+    * Scale shape: one posexplode (rows·dim, map-side combinable into
+    * groups·dim centroid cells), one join of rows·dim against the tiny
+    * groups·dim centroid table (broadcastable), one map-side-combined
+    * per-row reduction, then the salted two-phase top-k
+    * ([[graft.ops.Ranking.topKPerGroup]]) so a giant group never funnels
+    * through one task. Long-range check: |v|≤scale·|x|, centroid sums
+    * ≤ n·scale·|x| — products stay under 2^63 for corpora up to ~10^9
+    * rows at scale=10^4 and unit-norm embeddings.
+    */
   def centroidOutliers(emb: DataFrame, groupCol: String = "label",
       bottomK: Int = 10, scale: Int = 10000,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
@@ -1291,25 +1291,6 @@ object Similarity {
         round(max(col("_norm")), 6).as("max_norm"))
   }
 
-  /** Product-quantization codebook assignment (Jégou et al. 2011): the
-    * embedding splits into `m` contiguous `subDim`-wide blocks, each
-    * block trains its own `k`-centroid quantizer ([[kmeansCentroids]] —
-    * the fixed-point, oracle-reproducible Lloyd's), and every vector
-    * compresses to `m` small codes. 64 dims × 8 bytes become m=4 codes —
-    * the memory step that lets an ANN index hold billions of vectors.
-    * Returns (vec_id, code_0..code_{m-1}).
-    *
-    * Scale: each block's training sees only its slice (map-only
-    * projection); assignments are broadcast-centroid passes; the m
-    * assignment frames join back on vec_id (uniform key). Codes are
-    * centroid vec_ids (the kmeans init convention), not dense 0..k-1 —
-    * stable identifiers a codebook consumer resolves via the centroid
-    * table.
-    *
-    * `dims` is the declared embedding width: m·subDim must cover it
-    * exactly, else `slice` would silently feed short/partial blocks into
-    * the quantizer (the x104-audit fail-loudly convention).
-    */
   /** Train ALL m PQ block codebooks in FUSED corpus passes: init is one
     * TakeOrdered (first k vectors, sliced per block driver-side), and
     * each Lloyd iteration is ONE pass — per vector, m (block, cell,
@@ -1373,6 +1354,25 @@ object Similarity {
       nearestCell(slice(col("_full"), b * subDim + 1, subDim), cbs(b))
         .as(s"code_$b") }: _*)
 
+  /** Product-quantization codebook assignment (Jégou et al. 2011): the
+    * embedding splits into `m` contiguous `subDim`-wide blocks, each
+    * block trains its own `k`-centroid quantizer ([[kmeansCentroids]] —
+    * the fixed-point, oracle-reproducible Lloyd's), and every vector
+    * compresses to `m` small codes. 64 dims × 8 bytes become m=4 codes —
+    * the memory step that lets an ANN index hold billions of vectors.
+    * Returns (vec_id, code_0..code_{m-1}).
+    *
+    * Scale: each block's training sees only its slice (map-only
+    * projection); assignments are broadcast-centroid passes; the m
+    * assignment frames join back on vec_id (uniform key). Codes are
+    * centroid vec_ids (the kmeans init convention), not dense 0..k-1 —
+    * stable identifiers a codebook consumer resolves via the centroid
+    * table.
+    *
+    * `dims` is the declared embedding width: m·subDim must cover it
+    * exactly, else `slice` would silently feed short/partial blocks into
+    * the quantizer (the x104-audit fail-loudly convention).
+    */
   def pqCodes(df: DataFrame, m: Int = 4, subDim: Int = 16, k: Int = 8,
       iters: Int = 2, dims: Int = 64, idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {

@@ -426,13 +426,12 @@ object Dedup {
     * rejection is the batch core of [[bandKeyReject]] against
     * [[corpusBandKeys]], unverified: every step is a hash join on uniform
     * md5 keys, and the verdict is a function of the text alone, so a
-    * matched row is dropped whatever its `idCol` holds (null included).
-    * `idCol` no longer takes part in the decision.
+    * matched row is dropped whatever its id holds (null included).
     */
   def mergeNewDocs(corpus: DataFrame, newDocs: DataFrame,
       bands: Int = Pipeline.DefaultBands,
       rowsPerBand: Int = Pipeline.DefaultRowsPerBand,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     val h = freshName(newDocs.columns.toSeq, "_h")
     val exactKeys = corpus.select(md5(col(textCol)).as(h)).distinct()
     val fresh = newDocs.join(exactKeys, md5(col(textCol)) <=> col(h),

@@ -582,27 +582,6 @@ object EventAnalytics {
       .select(col("event_type"), col("day"), col("cnt"), col("ewma"))
   }
 
-  /** Holt double-exponential (level + trend) smoothing of daily event
-    * counts, [[ewmaDaily]]'s trend-aware sibling: per event_type, fold
-    * the observed (day, cnt) series in day order with
-    * `l_t = ½·y_t + ½·(l_{t-1} + b_{t-1})`,
-    * `b_t = ½·(l_t − l_{t-1}) + ½·b_{t-1}`, initialized l₁ = y₁,
-    * b₁ = 0. ONE row per type: `(event_type, n_days, level, trend,
-    * forecast = level + trend)`, each rounded to 6.
-    *
-    * Determinism: the fold is a PINNED-ORDER sequential reduction
-    * replayed identically by the oracle (Spark `aggregate(array_sort)`
-    * == DuckDB `list_reduce(list(... ORDER BY day))`, the x176
-    * convention); α = β = ½ makes every step an exact halving, so both
-    * engines execute the same IEEE op sequence on the same operands.
-    * Gaps (days with no events) are skipped, not zero-filled — the
-    * series is the OBSERVED days, documented contract.
-    *
-    * Scale: the one events-scale op is the (event_type, day) count —
-    * map-side combinable, one shuffle. The per-type collect_list is
-    * bounded by the day span (the x153 span-bounded posture), and the
-    * fold is linear in it.
-    */
   /** STL-lite decomposition of daily event counts: a centered 7-day
     * moving-average TREND over the dense grid, weekday SEASONAL
     * indices from the detrended series, and Hyndman's seasonal
@@ -742,6 +721,27 @@ object EventAnalytics {
       round(col("_st.l") + col("_st.b") + sNext, 6).as("forecast"))
   }
 
+  /** Holt double-exponential (level + trend) smoothing of daily event
+    * counts, [[ewmaDaily]]'s trend-aware sibling: per event_type, fold
+    * the observed (day, cnt) series in day order with
+    * `l_t = ½·y_t + ½·(l_{t-1} + b_{t-1})`,
+    * `b_t = ½·(l_t − l_{t-1}) + ½·b_{t-1}`, initialized l₁ = y₁,
+    * b₁ = 0. ONE row per type: `(event_type, n_days, level, trend,
+    * forecast = level + trend)`, each rounded to 6.
+    *
+    * Determinism: the fold is a PINNED-ORDER sequential reduction
+    * replayed identically by the oracle (Spark `aggregate(array_sort)`
+    * == DuckDB `list_reduce(list(... ORDER BY day))`, the x176
+    * convention); α = β = ½ makes every step an exact halving, so both
+    * engines execute the same IEEE op sequence on the same operands.
+    * Gaps (days with no events) are skipped, not zero-filled — the
+    * series is the OBSERVED days, documented contract.
+    *
+    * Scale: the one events-scale op is the (event_type, day) count —
+    * map-side combinable, one shuffle. The per-type collect_list is
+    * bounded by the day span (the x153 span-bounded posture), and the
+    * fold is linear in it.
+    */
   def holtDaily(events: DataFrame): DataFrame = {
     val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
     val daily = events.groupBy(col("event_type"), day.as("day"))

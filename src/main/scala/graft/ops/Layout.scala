@@ -105,18 +105,6 @@ object Layout {
       .drop("_z")
   }
 
-  /** Partitioned-parquet round-trip with PARTITION PRUNING — the
-    * canonical 100 TB event-lake layout, exercised end to end: write
-    * the events day-table Hive-partitioned by epoch-week, read it
-    * back filtered to the trailing `lastWeeks` weeks (a filter ON the
-    * partition column — the scan must list only those directories,
-    * asserted by the plan spec), and aggregate per type. Returns
-    * `(event_type, n_events, n_days, n_users)` over the kept weeks.
-    *
-    * The week cut is computed from the data BEFORE the write (one-row
-    * collect), so the filter is a literal comparison the catalog can
-    * prune with — not a subquery evaluated at scan time.
-    */
   /** Small-file compaction for a parquet directory — the maintenance
     * job every streaming/incremental sink eventually needs (thousands
     * of kilobyte part files turn a scan into an open()-bound crawl).
@@ -223,6 +211,18 @@ object Layout {
       .orderBy(col("week"))
   }
 
+  /** Partitioned-parquet round-trip with PARTITION PRUNING — the
+    * canonical 100 TB event-lake layout, exercised end to end: write
+    * the events day-table Hive-partitioned by epoch-week, read it
+    * back filtered to the trailing `lastWeeks` weeks (a filter ON the
+    * partition column — the scan must list only those directories,
+    * asserted by the plan spec), and aggregate per type. Returns
+    * `(event_type, n_events, n_days, n_users)` over the kept weeks.
+    *
+    * The week cut is computed from the data BEFORE the write (one-row
+    * collect), so the filter is a literal comparison the catalog can
+    * prune with — not a subquery evaluated at scan time.
+    */
   def partitionedRoundTrip(events: DataFrame, dir: String,
       lastWeeks: Long = 4): DataFrame = {
     require(lastWeeks >= 1, s"need lastWeeks >= 1, got $lastWeeks")

@@ -73,6 +73,48 @@ object Pipeline {
     (b, r)
   }
 
+  /** Optional TRAINED-classifier gate in front of the pipeline (the
+    * fastText-style quality-model filter the published pipelines run
+    * before heuristic curation): keep only documents the weights table
+    * scores non-negative ([[TextAnalysis.classifierScoreWithWeights]]'
+    * `keep` — raw integer sum sign, one map-only scoring pass over the
+    * corpus), or, with `keepBin`, whose calibrated prob bin clears it.
+    * Memoized + materialized like every other backbone stage, so the
+    * funnel/ledger/shard views of one run score the corpus once.
+    * `None` ⇒ identity (the historical pipeline).
+    */
+  private def modelGate(docs: DataFrame,
+      classifierWeights: Option[DataFrame], dims: Int,
+      keepBin: Option[Long] = None, bins: Int = 10): DataFrame =
+    classifierWeights match {
+      case None => docs
+      case Some(wt) => StageCache.memo("curation_model", Seq(docs, wt),
+          Seq(dims, keepBin, bins)) {
+        // Round-20: PEEK for a memoized scored frame first — x253's
+        // calibration diagram scores the same corpus with the same
+        // weights and memoizes the materialized result, so its gate
+        // reuses that one scoring pass (guide §2.4, applied to a
+        // corpus scan). A lone gate (x247) misses the peek and keeps
+        // the fused scorer+filter+join single-pass plan — no extra
+        // materialization barrier.
+        val scored = TextAnalysis.memoScoredLookup(docs, wt, dims)
+          .getOrElse(TextAnalysis.classifierScoreWithWeights(docs, wt, dims))
+        // keepBin: the CALIBRATED gate (x253) — keep documents whose
+        // round-6 sigmoid prob lands in reliability bin >= keepBin, the
+        // bin chosen from the isotonic-fitted curve
+        // (TextAnalysis.trainedScoreCalibration + isotonicFitBins), not
+        // the raw integer-sum sign. None = the historical sign gate.
+        val kept = keepBin match {
+          case None => scored.filter(col("keep"))
+          case Some(kb) => scored.filter(
+            least(floor(col("prob") * bins), lit(bins - 1).cast("long"))
+              .cast("long") >= kb)
+        }
+        Checkpoints.materialize(docs.join(kept.select("doc_id"),
+          Seq("doc_id"), "left_semi"))
+      }
+    }
+
   /** The memoized corpus-scale backbone every curation view shares:
     * quality gate → (optional per-source cap) → exact dedup (min-id
     * keeper) → Jaccard-verified LSH near-dup clusters → deduped
@@ -91,52 +133,6 @@ object Pipeline {
     * the semantic variant's prefix (x60) all hit the same entry, so the
     * corpus-scale passes execute once per snapshot, not once per report.
     */
-  /** Optional TRAINED-classifier gate in front of the pipeline (the
-    * fastText-style quality-model filter the published pipelines run
-    * before heuristic curation): keep only documents the weights table
-    * scores non-negative ([[TextAnalysis.classifierScoreWithWeights]]'
-    * `keep` — raw integer sum sign, broadcast weights join, one
-    * tokenize pass). Memoized + materialized like every other backbone
-    * stage, so the funnel/ledger/shard views of one run score the
-    * corpus once. `None` ⇒ identity (the historical pipeline).
-    */
-  private def modelGate(docs: DataFrame,
-      classifierWeights: Option[DataFrame], dims: Int,
-      keepBin: Option[Long] = None, bins: Int = 10): DataFrame =
-    classifierWeights match {
-      case None => docs
-      case Some(wt) => StageCache.memo("curation_model", Seq(docs, wt),
-          Seq(dims, keepBin, bins)) {
-        // MAP-ONLY scorer: the weights table is bounded (≤ dims rows),
-        // so the gate costs one corpus pass with ZERO shuffle — the
-        // join-based scorer would explode tokens and shuffle the whole
-        // corpus on the id (bitwise-equal forms, spec-pinned).
-        // Round-20: PEEK for a memoized scored frame first — x253's
-        // calibration diagram scores the same corpus with the same
-        // weights and memoizes the materialized result, so its gate
-        // reuses that one scoring pass (guide §2.4, applied to a
-        // corpus scan). A lone gate (x247) misses the peek and keeps
-        // the fused scorer+filter+join single-pass plan — no extra
-        // materialization barrier.
-        val scored = TextAnalysis.memoScoredLookup(docs, wt, dims)
-          .getOrElse(TextAnalysis
-            .classifierScoreWithWeightsMapOnly(docs, wt, dims))
-        // keepBin: the CALIBRATED gate (x253) — keep documents whose
-        // round-6 sigmoid prob lands in reliability bin >= keepBin, the
-        // bin chosen from the isotonic-fitted curve
-        // (TextAnalysis.trainedScoreCalibration + isotonicFitBins), not
-        // the raw integer-sum sign. None = the historical sign gate.
-        val kept = keepBin match {
-          case None => scored.filter(col("keep"))
-          case Some(kb) => scored.filter(
-            least(floor(col("prob") * bins), lit(bins - 1).cast("long"))
-              .cast("long") >= kb)
-        }
-        Checkpoints.materialize(docs.join(kept.select("doc_id"),
-          Seq("doc_id"), "left_semi"))
-      }
-    }
-
   private def backbone(docs: DataFrame, minQuality: Double,
       minJaccard: Double, maxPerSource: Option[Int],
       bands: Int, rowsPerBand: Int)

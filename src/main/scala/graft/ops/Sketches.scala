@@ -148,19 +148,6 @@ object Sketches {
         col("exact_old"), col("exact_new"), col("exact_union"))
   }
 
-  /** Count-min sketch over the token stream: `depth` independent
-    * md5-salted hash rows × `width` buckets, each cell the count of
-    * tokens hashing into it. The sketch is MERGEABLE (cell-wise add
-    * across partitions, shards, or stream micro-batches) and bounded:
-    * depth×width longs regardless of corpus size — the 100 TB
-    * frequency-estimation path when the exact (group, token) aggregate
-    * is too wide.
-    *
-    * Built as ONE aggregate: every token occurrence explodes into
-    * `depth` (d, bucket) cells map-side (digest materialized once per
-    * row per depth), the groupBy combines map-side into ≤ depth×width
-    * rows. Returns (d, bucket, cnt).
-    */
   /** The map-side cell stage alone: one (d, bucket) row per token
     * occurrence per depth — shared by the batch sketch aggregate and
     * the streaming monitor's stateful cells. */
@@ -181,6 +168,19 @@ object Sketches {
       .select(col("c.d").as("d"), col("c.bucket").as("bucket"))
   }
 
+  /** Count-min sketch over the token stream: `depth` independent
+    * md5-salted hash rows × `width` buckets, each cell the count of
+    * tokens hashing into it. The sketch is MERGEABLE (cell-wise add
+    * across partitions, shards, or stream micro-batches) and bounded:
+    * depth×width longs regardless of corpus size — the 100 TB
+    * frequency-estimation path when the exact (group, token) aggregate
+    * is too wide.
+    *
+    * Built as ONE aggregate: every token occurrence explodes into
+    * `depth` (d, bucket) cells map-side (digest materialized once per
+    * row per depth), the groupBy combines map-side into ≤ depth×width
+    * rows. Returns (d, bucket, cnt).
+    */
   def cmsSketch(docs: DataFrame, depth: Int = 4, width: Int = 1024,
       textCol: String = "text"): DataFrame =
     cmsCells(docs, depth, width, textCol)

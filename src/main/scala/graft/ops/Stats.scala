@@ -368,22 +368,6 @@ object Stats {
           / (ssw / dofW.cast("double")), 6)).as("f"))
   }
 
-  /** Mutual information between two categorical columns, reported
-    * per cell (the [[graft.ops.Profiling.psiBins]] per-term shape —
-    * consumers sum `mi_term` for the scalar MI in nats):
-    * `(a, b, n_ab, n_a, n_b, share, mi_term)` with
-    * `mi_term = (n_ab/N) · ln((n_ab·N)/(n_a·n_b))`, rounded to 6.
-    * Absent (a, b) combinations contribute 0 to MI and are omitted.
-    *
-    * Determinism: the ln argument is ONE division of exact DECIMAL
-    * cross-products and p_ab one division of exact integers; ln itself
-    * is the 1-ulp libm class, bounded by the same round-6 convention
-    * PSI uses (documented tradeoff — an exact-log engine pair would
-    * need rational-log staging).
-    *
-    * Scale: one (a, b) reduce — map-side combinable; marginals reduce
-    * the cell table, not the corpus; one-row N broadcast (x57).
-    */
   /** Balanced-half-sample (BRR-style) confidence interval for a mean,
     * the survey-statistics replication method that needs NO
     * distributional assumption and ONE extra pass: replicate r ∈ 0..B−1
@@ -434,6 +418,22 @@ object Stats {
       (th + lit(1.96) * se).as("ci_hi"))
   }
 
+  /** Mutual information between two categorical columns, reported
+    * per cell (the [[graft.ops.Profiling.psiBins]] per-term shape —
+    * consumers sum `mi_term` for the scalar MI in nats):
+    * `(a, b, n_ab, n_a, n_b, share, mi_term)` with
+    * `mi_term = (n_ab/N) · ln((n_ab·N)/(n_a·n_b))`, rounded to 6.
+    * Absent (a, b) combinations contribute 0 to MI and are omitted.
+    *
+    * Determinism: the ln argument is ONE division of exact DECIMAL
+    * cross-products and p_ab one division of exact integers; ln itself
+    * is the 1-ulp libm class, bounded by the same round-6 convention
+    * PSI uses (documented tradeoff — an exact-log engine pair would
+    * need rational-log staging).
+    *
+    * Scale: one (a, b) reduce — map-side combinable; marginals reduce
+    * the cell table, not the corpus; one-row N broadcast (x57).
+    */
   def mutualInfo(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val cells = df.groupBy(col(aCol).cast("string").as("a"),
         col(bCol).cast("string").as("b"))

@@ -26,10 +26,6 @@ object TextAnalysis {
       ((length(col(textCol)) - size(tokens(col(textCol))) + 1).cast("double") /
         size(tokens(col(textCol)))).as("mean_tok_len"))
 
-  /** Quality heuristics: type-token ratio, mean token length, share of
-    * single-char tokens; composite score in [0,1]-ish. Deterministic
-    * rational arithmetic → oracle-checkable bitwise.
-    */
   /** The scalar quality score as a pure expression — usable as a
     * stateless filter anywhere, including streaming plans (no
     * aggregation, no state). One native codegen'd expression
@@ -38,6 +34,10 @@ object TextAnalysis {
     * one loop. */
   def qualityExpr(text: Column): Column = tokenQuality(text, scoreOnly = true)
 
+  /** Quality heuristics: type-token ratio, mean token length, share of
+    * single-char tokens; composite score in [0,1]-ish. Deterministic
+    * rational arithmetic → oracle-checkable bitwise.
+    */
   def quality(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     // one kernel call yields the (ttr, short) struct, projected apart in
     // an outer select (the struct alias is non-cheap and multiply-
@@ -105,6 +105,13 @@ object TextAnalysis {
     */
   def tokenHashSql(tokExpr: String, nChars: Int = 8): String =
     hexToIntSql(s"md5($tokExpr)", nChars)
+
+  /** The hashed-token feature bucket: pmod(first 8 hex chars of the md5
+    * `digest` column as an integer, `dims`). One rule for the trainer,
+    * the scorers and the DSIR weights, so a bucket id means the same
+    * token set everywhere. */
+  private def md5BucketSql(digest: String, dims: Int): String =
+    s"pmod(${hexToIntSql(digest, 8)}, ${dims}L)"
 
   /** TF-IDF top-k terms per document: tf = in-doc occurrences, idf =
     * ln(N/df) over the whole corpus. Scores rounded (ln is not bit-stable
@@ -279,7 +286,7 @@ object TextAnalysis {
     * document by the mean log-likelihood ratio of a TARGET hashed-unigram
     * LM to the CORPUS LM — the published recipe for selecting pretraining
     * data that "looks like" a small high-quality target set. Features are
-    * hashed token buckets (md5-prefix parse — engine-portable, reference
+    * hashed token buckets ([[md5BucketSql]] — engine-portable, reference
     * DSIR uses hashed n-grams for exactly this dimensionality bound);
     * add-one smoothing on both sides; score = mean over tokens of
     * ln(p_target/p_corpus), rounded to 6 (the x39-proven tolerance for
@@ -302,8 +309,8 @@ object TextAnalysis {
       idCol: String = "doc_id"): DataFrame = {
     def bucketed(d: DataFrame) =
       d.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
-        .withColumn("b",
-          conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long") % buckets)
+        .withColumn("_d", md5(col("tok")))
+        .select(col(idCol), expr(md5BucketSql("_d", buckets)).as("b"))
     val corpusToks = bucketed(docs)
     val targetToks = bucketed(target)
     val corpusCnt = corpusToks.groupBy(col("b")).agg(count(lit(1)).as("cc"))
@@ -681,7 +688,7 @@ object TextAnalysis {
           explode(tokens(col(textCol))).as("_tok"))
         .withColumn("_d", md5(col("_tok")))
         .select(col(idCol), col("_tgt"),
-          expr(s"pmod(${hexToIntSql("_d", 8)}, ${buckets}L)").as("bucket")))
+          expr(md5BucketSql("_d", buckets)).as("bucket")))
     val perBucket = toks.groupBy(col("bucket"))
       .agg(sum(when(col("_tgt"), 1L).otherwise(0L)).as("_tc"),
         sum(when(!col("_tgt"), 1L).otherwise(0L)).as("_bc"))
@@ -747,31 +754,9 @@ object TextAnalysis {
       .withColumnRenamed("g", groupCol)
   }
 
-  /** Hashed linear classifier scoring — the fastText-shaped quality
-    * filter's SCALE PATH: each token hashes into one of `dims` feature
-    * buckets (md5-prefix, the engine-shared hash), the document score is
-    * the mean bucket weight, and the keep decision is score ≥ 0 — an
-    * EXACT integer-sum comparison, no float threshold ambiguity.
-    *
-    * Weights here are a deterministic stand-in (a Knuth-hash ramp over
-    * the bucket id, quantized to 10^-6) — production swaps in a trained
-    * weight table via the same bucket join; the plumbing (hash, feature
-    * aggregation, integer decision) is the real, tested part, exactly
-    * like the multimodal decode stubs. Returns (doc_id, n_tokens,
-    * score, prob, keep) with score/prob round 6 (prob = sigmoid; exp,
-    * like ln, is not bit-stable across libm implementations — hence the
-    * rounding and the integer keep rule).
-    *
-    * Scale: MAP-ONLY — the whole feature/score computation runs inside
-    * per-row higher-order functions (md5 materialized once per token via
-    * a staged transform), so the plan has NO shuffle at all (PlanSpec
-    * pins the output ordering as the only exchange) and the operator
-    * applies to a stream unchanged, statelessly
-    * (StreamingWindows.streamingClassifierGate).
-    */
   /** TRAIN a hashed-feature linear quality/language classifier from a
-    * labeled corpus: tokens hash into `dims` buckets (the same 8-hex
-    * md5 bucket rule [[classifierScore]] uses), and each bucket's
+    * labeled corpus: tokens hash into `dims` buckets (the same
+    * [[md5BucketSql]] rule the scorers use), and each bucket's
     * weight is its micro-quantized positive-occurrence rate CENTERED ON
     * THE GLOBAL BASE RATE: weight_micro = r6(n_pos/n) − r6(N_pos/N)
     * where r6(x) = round_half_away(1e6·x) — the sign says whether the
@@ -801,8 +786,7 @@ object TextAnalysis {
       // md5 materialized ONCE per token, then the hex parse reads the
       // column (the hexToIntSql bulk-column discipline)
       .withColumn("_d", md5(col("_tok")))
-      .select(col("_pos"),
-        expr(s"pmod(${hexToIntSql("_d", 8)}, ${dims}L)").as("bucket"))
+      .select(col("_pos"), expr(md5BucketSql("_d", dims)).as("bucket"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("_n"),
         sum(when(col("_pos"), 1L).otherwise(0L)).as("_np"))
@@ -817,77 +801,61 @@ object TextAnalysis {
           .as("weight_micro"))
   }
 
-  /** Score documents against a TRAINED weights table (`bucket`,
-    * `weight_micro` — [[trainHashedWeights]]' output, typically read
-    * back from parquet): per-token bucket lookup via a BROADCAST hash
-    * join (the table is ≤ dims rows), per-doc exact integer weight sum,
-    * then the identical integer-division score path as
-    * [[classifierScore]] — same output shape `(id, n_tokens, score,
-    * prob, keep)`, so the trained table swaps into every consumer of
-    * the stand-in scorer unchanged (the swap x130 documents). Unseen
-    * buckets (absent from the table) contribute weight 0 via the left
-    * join, so a vocabulary shift between train and serve degrades
-    * gracefully instead of dropping rows.
+  /** Hashed linear classifier scoring — the fastText-shaped quality
+    * filter's SCALE PATH: each token hashes into one of `dims` feature
+    * buckets ([[md5BucketSql]]), the document score is the mean bucket
+    * weight, and the keep decision is score ≥ 0 — an EXACT integer-sum
+    * comparison, no float threshold ambiguity.
     *
-    * Scale: one tokenize pass; the weights join is broadcast (no
-    * shuffle on the corpus side beyond the per-doc sum, which is
-    * map-side combinable on the id).
+    * Weights here are a deterministic stand-in (a Knuth-hash ramp over
+    * the bucket id, quantized to 10^-6); [[classifierScoreWithWeights]]
+    * runs the same scorer over a trained table. The plumbing (hash,
+    * feature sum, integer decision) is the real, tested part, exactly
+    * like the multimodal decode stubs. Returns (doc_id, n_tokens,
+    * score, prob, keep) plus the `carry` columns, with score/prob
+    * round 6 (prob = sigmoid; exp, like ln, is not bit-stable across
+    * libm implementations — hence the rounding and the integer keep
+    * rule). A document with a NULL `textCol` emits no row.
     *
-    * NULL-text contract (both scorer forms, spec-pinned): a document
-    * with a NULL `textCol` emits NO row — here the explode drops it
-    * naturally; the map-only twin filters explicitly so the two forms
-    * stay bitwise-equal on every input, not just non-null corpora.
+    * Scale: MAP-ONLY — one per-row pass with NO shuffle (PlanSpec pins
+    * the output ordering as the only exchange), so the operator applies
+    * to a stream unchanged, statelessly
+    * (StreamingWindows.streamingClassifierGate).
     */
-  def classifierScoreWithWeights(docs: DataFrame, weights: DataFrame,
-      dims: Int = 64, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    require(dims >= 2, s"need dims >= 2, got $dims")
-    val toks = docs.select(col(idCol),
-        explode(tokens(col(textCol))).as("_tok"))
-      .withColumn("_d", md5(col("_tok")))
-      .select(col(idCol),
-        expr(s"pmod(${hexToIntSql("_d", 8)}, ${dims}L)").as("bucket"))
-    toks
-      .join(broadcast(weights.select(col("bucket"),
-        col("weight_micro").cast("long").as("_w"))), Seq("bucket"), "left")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).cast("long").as("n_tokens"),
-        sum(coalesce(col("_w"), lit(0L))).as("_s"))
-      .withColumn("_scaled",
-        expr("""(CASE WHEN _s < 0 THEN -1L ELSE 1L END)
-               | * ((2L * abs(_s) + n_tokens) div (2L * n_tokens))"""
-          .stripMargin))
-      .select(col(idCol), col("n_tokens"),
-        (col("_scaled").cast("double") / 1e6).as("score"),
-        round(lit(1.0) / (lit(1.0)
-          + exp(-(col("_scaled").cast("double") / 1e6))), 6).as("prob"),
-        (col("_s") >= 0).as("keep"))
-  }
+  def classifierScore(docs: DataFrame, dims: Int = 64,
+      textCol: String = "text", idCol: String = "doc_id",
+      carry: Seq[String] = Nil): DataFrame =
+    hashedTokenScore(docs, dims, textCol, idCol, carry, None)
 
-  /** MAP-ONLY twin of [[classifierScoreWithWeights]]: identical integer
-    * arithmetic and output shape, but the ≤`dims`-row weights table is
-    * driver-materialized once into a literal map (the bounded-centroid
-    * pattern) so scoring is one pass with NO shuffle — no token
-    * explode, no per-doc groupBy. At corpus scale this removes the
-    * whole-corpus shuffle the join-based scorer pays; it is also the
-    * form an append-mode STREAM can run (no state store). Bitwise
-    * equality between the two forms is spec-pinned (StreamingSpec's
-    * stream==batch twin compares exactly this pair; PropertySpec fuzzes
-    * it, null texts included). Absent buckets score 0 — the same
-    * train/serve vocabulary-shift contract. NULL-text docs emit no row
-    * (the explicit filter below — the join form drops them via its
-    * explode, and the twin contract holds on every input).
+  /** [[classifierScore]] against a TRAINED weights table (`bucket`,
+    * `weight_micro` — [[trainHashedWeights]]' output, typically read
+    * back from parquet): same output shape `(id, n_tokens, score, prob,
+    * keep)`, so the trained table swaps into every consumer of the
+    * stand-in scorer unchanged (the swap x130 documents). Buckets absent
+    * from the table weigh 0, so a vocabulary shift between train and
+    * serve degrades gracefully instead of dropping rows; NULL-text
+    * documents emit no row.
     *
-    * EAGER by construction: the ≤dims-row weights table is collect()ed
-    * when this DataFrame is BUILT, not when it executes — building a
-    * plan over a weights frame whose lineage includes training will run
-    * that training job immediately. Pipeline callers are insulated
+    * Scale: the ≤`dims`-row table becomes one literal map, so scoring is
+    * the same map-only pass as [[classifierScore]] — no token explode,
+    * no per-doc groupBy, and an append-mode stream runs it with no state
+    * store (StreamingWindows.streamingTrainedClassifierGate).
+    *
+    * EAGER by construction: the weights table is collect()ed when this
+    * DataFrame is BUILT, not when it executes — building a plan over a
+    * weights frame whose lineage includes training runs that training
+    * job immediately. Pipeline callers are insulated
     * ([[graft.ops.Pipeline]]'s modelGate memoizes the gated frame), but
     * a caller composing plans lazily should pass a weights frame that is
     * already materialized (parquet read / checkpoint), which is also
     * the production serve shape.
     */
-  /** [[classifierScoreWithWeightsMapOnly]] memoized + materialized per
+  def classifierScoreWithWeights(docs: DataFrame, weights: DataFrame,
+      dims: Int = 64, textCol: String = "text",
+      idCol: String = "doc_id"): DataFrame =
+    hashedTokenScore(docs, dims, textCol, idCol, Nil, Some(weights))
+
+  /** [[classifierScoreWithWeights]] memoized + materialized per
     * (docs, weights, dims) snapshot: the round-20 sharing point between
     * the calibrated model gate and the calibration diagram — x253 runs
     * BOTH over the same corpus with the same trained weights, and
@@ -905,7 +873,7 @@ object TextAnalysis {
     StageCache.memo("trained_scored", Seq(docs, weights),
         Seq(dims, textCol, idCol)) {
       Checkpoints.materialize(
-        classifierScoreWithWeightsMapOnly(docs, weights, dims, textCol, idCol))
+        classifierScoreWithWeights(docs, weights, dims, textCol, idCol))
     }
 
   /** The [[memoScoredWithWeights]] entry IF a completed one exists —
@@ -920,69 +888,48 @@ object TextAnalysis {
     StageCache.lookup[DataFrame]("trained_scored", Seq(docs, weights),
       Seq(dims, textCol, idCol))
 
-  def classifierScoreWithWeightsMapOnly(docs: DataFrame,
-      weights: DataFrame, dims: Int = 64, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+  /** The one hashed-token scorer behind [[classifierScore]] (`weights`
+    * None: the Knuth-ramp stand-in weight of each bucket) and
+    * [[classifierScoreWithWeights]] (the trained table, collected into a
+    * literal map; absent bucket ⇒ 0). Per non-null-text row: tokenize
+    * once, md5 each token once, bucket it, and sum the BIGINT bucket
+    * weights exactly; then score = round(_s / (10^6 · n), 6) computed
+    * ENTIRELY in BIGINT: the 6-dp-scaled value is round_half_away(_s/n)
+    * = sign(_s) · ((2|_s| + n) div (2n)). A double quotient rounded to
+    * 6 dp is NOT engine-stable — when the true quotient lands on a
+    * half-way edge, Spark's HALF_UP-on-shortest-repr and DuckDB's
+    * binary-double rounding disagree by 1 ulp (seen at sf0.1, 4/5000
+    * rows). Integer div has no edge. prob is the sigmoid of the SAME
+    * exact 6-dp score (identical double input on every engine; the
+    * residual exp() libm 1-ulp risk is the documented rounding story).
+    */
+  private def hashedTokenScore(docs: DataFrame, dims: Int, textCol: String,
+      idCol: String, carry: Seq[String],
+      weights: Option[DataFrame]): DataFrame = {
     require(dims >= 2, s"need dims >= 2, got $dims")
-    val wMap = weights.select(col("bucket").cast("long"),
-        col("weight_micro").cast("long")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // md5 materialized once per token, then the bucket lookup reads it
-    // (the hexToIntSql bulk discipline, inside the lambda); the token
-    // array itself is STAGED into its own column (round-20) — the old
-    // form referenced split() twice (n_tokens + the weight fold) and
-    // the HOF tree is CodegenFallback, so both references paid the
-    // split per row. `_toks` is non-cheap and multiply-referenced, so
-    // CollapseProject keeps the staging boundary.
+    val nonNull = docs.filter(col(textCol).isNotNull)
+    val (in, weightOf) = weights match {
+      case None => (nonNull,
+        (b: String) => s"pmod($b * 2654435761L, 2000001L) - 1000000L")
+      case Some(w) =>
+        val wMap = w.select(col("bucket").cast("long"),
+            col("weight_micro").cast("long")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        (nonNull.withColumn("_wmap", typedLit(wMap)),
+          (b: String) => s"coalesce(element_at(_wmap, $b), 0L)")
+    }
+    // the token array is staged into `_toks` so the split runs once per
+    // row, not once per reference (n_tokens + the weight fold); md5 is
+    // materialized once per token before the bucket parse reads it
     val wArr = s"""transform(
       transform(_toks, t -> md5(t)),
-      d -> coalesce(element_at(_wmap,
-        pmod(${hexToIntSql("d", 8)}, ${dims}L)), 0L))"""
-    docs.filter(col(textCol).isNotNull)
-      .withColumn("_wmap", typedLit(wMap))
-      .withColumn("_toks", tokens(col(textCol)))
-      .select(col(idCol),
-        size(col("_toks")).cast("long").as("n_tokens"),
-        expr(s"aggregate($wArr, 0L, (a, x) -> a + x)").as("_s"))
-      .withColumn("_scaled",
-        expr("""(CASE WHEN _s < 0 THEN -1L ELSE 1L END)
-               | * ((2L * abs(_s) + n_tokens) div (2L * n_tokens))"""
-          .stripMargin))
-      .select(col(idCol), col("n_tokens"),
-        (col("_scaled").cast("double") / 1e6).as("score"),
-        round(lit(1.0) / (lit(1.0)
-          + exp(-(col("_scaled").cast("double") / 1e6))), 6).as("prob"),
-        (col("_s") >= 0).as("keep"))
-  }
-
-  def classifierScore(docs: DataFrame, dims: Int = 64,
-      textCol: String = "text", idCol: String = "doc_id",
-      carry: Seq[String] = Nil): DataFrame = {
-    require(dims >= 2, s"need dims >= 2, got $dims")
-    // per-row integer weight list: token -> md5 (once) -> 8-hex bucket ->
-    // quantized weight; the per-doc sum is an exact integer fold. The
-    // token array is staged into `_toks` (round-20) so the split runs
-    // once per row, not once per reference (same staging as the
-    // trained-weights twin above).
-    val wArr = s"""transform(
-      transform(_toks, t -> md5(t)),
-      d -> pmod(pmod(${hexToIntSql("d", 8)}, ${dims}L) * 2654435761L,
-        2000001L) - 1000000L)"""
+      d -> ${weightOf(md5BucketSql("d", dims))})"""
     val carried = carry.map(col)
-    docs.withColumn("_toks", tokens(col(textCol)))
+    in.withColumn("_toks", tokens(col(textCol)))
       .select(Seq(col(idCol),
         size(col("_toks")).cast("long").as("n_tokens"),
         expr(s"aggregate($wArr, 0L, (a, x) -> a + x)").as("_s")) ++
         carried: _*)
-      // score = round(_s / (10^6 * n), 6) computed ENTIRELY in BIGINT:
-      // the 6-dp-scaled value is round_half_away(_s / n) =
-      // sign(_s) * ((2|_s| + n) div (2n)). A double quotient rounded to
-      // 6 dp is NOT engine-stable — when the true quotient lands on a
-      // half-way edge, Spark's HALF_UP-on-shortest-repr and DuckDB's
-      // binary-double rounding disagree by 1 ulp (seen at sf0.1, 4/5000
-      // rows). Integer div has no edge. prob is the sigmoid of the SAME
-      // exact 6-dp score (identical double input on every engine; the
-      // residual exp() libm 1-ulp risk is the documented rounding story).
       .withColumn("_scaled",
         expr("""(CASE WHEN _s < 0 THEN -1L ELSE 1L END)
                | * ((2L * abs(_s) + n_tokens) div (2L * n_tokens))"""
@@ -1241,8 +1188,8 @@ object TextAnalysis {
     * probability clears the precision target, not the raw score sign).
     * Same output shape as scoreCalibration.
     *
-    * Scale: the map-only scorer (one corpus pass, broadcast ≤dims-row
-    * weights) plus ONE id join to attach the label and a ≤bins-group
+    * Scale: the map-only scorer (one corpus pass, ≤dims-row weights as
+    * a literal map) plus ONE id join to attach the label and a ≤bins-group
     * map-side-combined rollup.
     */
   def trainedScoreCalibration(docs: DataFrame, weights: DataFrame,

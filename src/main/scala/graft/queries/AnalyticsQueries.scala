@@ -4626,13 +4626,13 @@ object AnalyticsQueries {
     // The x130 swap made real: train the hashed-feature weight table
     // from the corpus labels (bucket -> exact micro-quantized centered
     // positive rate — libm-free, so the TRAINING itself is oracle-
-    // replayable), then score every document through the weights-table
-    // BROADCAST join path (classifierScoreWithWeights) instead of the
-    // stand-in inline weights. Output is the per-bucket weight profile
-    // joined with per-keep-class doc counts — proving train -> persist
-    // shape -> load -> score end to end. ClassifierSpec additionally
-    // round-trips the weights through REAL parquet and pins score
-    // equality.
+    // replayable), then score every document through the trained table
+    // (classifierScoreWithWeights, which collects the <= 32-row table
+    // when the plan is built, so training runs then) instead of the
+    // stand-in inline weights. Output is the per-keep-class doc, token
+    // and score totals — proving train -> persist shape -> load -> score
+    // end to end. ClassifierSpec additionally round-trips the weights
+    // through REAL parquet and pins score equality.
     QueryDef(
       "x244_trained_classifier",
       (s, dir) => {

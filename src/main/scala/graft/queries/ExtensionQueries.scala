@@ -175,15 +175,13 @@ object ExtensionQueries {
       |  * (1.0 - CAST(len(list_filter(string_split(text, ' '), t -> length(t) = 1)) AS DOUBLE)
       |    / len(string_split(text, ' ')))""".stripMargin
 
-  /** DuckDB replay of Similarity.kmeansCentroids + final assignment: the
-    * same init / fixed-point update / tie-break rules, one CTE block per
-    * Lloyd iteration, generated by the same code shape as the Spark loop.
-    */
   /** Prefix-named k-means CTE chain over a caller-supplied vector source
     * (`vSql` must select `vec_id, e DOUBLE[]`): emits `${p}v`,
     * `${p}c0..c$iters`, and the final assignment `${p}af(vec_id, cell,
-    * e)`. The prefix lets the chain embed inside a larger WITH (x60's
-    * curation replay) without clashing with its CTE names. */
+    * e)`, with Similarity.kmeansCentroids' init / fixed-point update /
+    * tie-break rules, one CTE block per Lloyd iteration. The prefix lets
+    * the chain embed inside a larger WITH (x60's curation replay)
+    * without clashing with its CTE names. */
   private def kmeansCtes(nCells: Int, iters: Int, p: String,
       vSql: String): String = {
     def cos(a: String, b: String) =
@@ -219,21 +217,13 @@ object ExtensionQueries {
     s"WITH ${kmeansCtes(nCells, iters, "",
       s"SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings$where")}\n$finalSelect"
 
-  /** The 6-stage curation-pipeline replay (x54), optionally with the
-    * SEMANTIC near-dup stage between token near-dup and decontamination
-    * (x60): k-means cells over the embeddings of the dedup survivors,
-    * same-cell pairs at cosine >= 0.4, min-label clusters, min-id keeper
-    * — the exact DuckDB rendering of Pipeline.curateStages(embeddings=…).
-    * AS MATERIALIZED pins DuckDB's CTE materialization for the
-    * multiply-referenced stages — semantics unchanged, ~10x faster.
-    */
   /** The shared WITH-body of the curation pipeline replay, up to and
     * including the `clean` survivor CTE — curationSql appends the
-    * shuffle+shard tail, curationFunnelSql the per-source stage counts. */
-  /** The shared curation-stage CTE chain. `p` prefixes every CTE name so
-    * one query can replay the pipeline over TWO corpus snapshots (x112);
-    * `corpusPred` is the snapshot predicate over `documents`. Defaults
-    * reproduce the historical single-snapshot text byte-for-byte.
+    * shuffle+shard tail, curationFunnelSql the per-source stage counts.
+    * `p` prefixes every CTE name so one query can replay the pipeline
+    * over TWO corpus snapshots (x112); `corpusPred` is the snapshot
+    * predicate over `documents`. Defaults reproduce the historical
+    * single-snapshot text byte-for-byte.
     */
   private def curationCtes(semantic: Boolean, cap: Option[Int] = None,
       lines: Boolean = false, p: String = "",
@@ -364,6 +354,14 @@ object ExtensionQueries {
        |  WHERE doc_id NOT IN (SELECT doc_id FROM ${p}contam))""".stripMargin
   }
 
+  /** The 6-stage curation-pipeline replay (x54), optionally with the
+    * SEMANTIC near-dup stage between token near-dup and decontamination
+    * (x60): k-means cells over the embeddings of the dedup survivors,
+    * same-cell pairs at cosine >= 0.4, min-label clusters, min-id keeper
+    * — the exact DuckDB rendering of Pipeline.curateStages(embeddings=…).
+    * AS MATERIALIZED pins DuckDB's CTE materialization for the
+    * multiply-referenced stages — semantics unchanged, ~10x faster.
+    */
   private def curationSql(semantic: Boolean, cap: Option[Int] = None,
       lines: Boolean = false): String =
     s"""${curationCtes(semantic, cap, lines)},
@@ -4578,7 +4576,7 @@ object ExtensionQueries {
         // table at plan-build, and a lazy frame would re-run the full
         // corpus-scale training job for each (guide §1/§5 — the
         // "pass a weights frame that is already materialized" serve
-        // shape classifierScoreWithWeightsMapOnly documents)
+        // shape classifierScoreWithWeights documents)
         val w = graft.ops.Checkpoints.materialize(
           TextAnalysis.trainHashedWeights(docs,
             col("lang") === "en", dims = 32))

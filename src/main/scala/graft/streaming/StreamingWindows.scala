@@ -402,11 +402,11 @@ object StreamingWindows {
       wordsPerLine = wordsPerLine, textCol = textCol, idCol = idCol)
 
   /** Streaming classifier gate: TextAnalysis.classifierScore applied to
-    * the stream unchanged — map-only (explode + per-doc aggregate is a
-    * per-batch group-by on doc_id, no cross-batch state, no watermark
-    * needed in append mode because each doc's tokens arrive in one row).
-    * The keep rule is the batch form's exact integer sum, so stream and
-    * batch gates can never disagree on a document (StreamingSpec).
+    * the stream unchanged — one map-only per-row pass (tokenize, hash,
+    * exact integer weight sum), so no cross-batch state and no
+    * watermark in append mode. The keep rule is the batch form's exact
+    * integer sum, so stream and batch gates can never disagree on a
+    * document (StreamingSpec).
     */
   def streamingClassifierGate(docs: DataFrame, dims: Int = 64,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame =
@@ -414,22 +414,19 @@ object StreamingWindows {
       textCol = textCol, idCol = idCol)
 
   /** Streaming TRAINED-classifier gate — x247's model gate on the
-    * ingest path. The batch scorer
-    * ([[graft.ops.TextAnalysis.classifierScoreWithWeights]]) joins the
-    * weights table and aggregates per doc, which a stream in append
-    * mode cannot do; but the table is BOUNDED (≤ `dims` rows), so it is
-    * driver-materialized once into a literal map (the O(k·d) centroid
-    * pattern) and the score becomes MAP-ONLY: token → md5 → bucket →
-    * map lookup (absent bucket ⇒ 0, the vocabulary-shift contract) →
-    * exact integer sum → the x130 integer-division score path. Same
-    * arithmetic, same output shape, bit-identical `keep` on the same
-    * rows (StreamingSpec pins stream == batch) — no groupBy, no
-    * watermark, no state store.
+    * ingest path: [[graft.ops.TextAnalysis.classifierScoreWithWeights]]
+    * applied to the stream unchanged. The weights table is BOUNDED
+    * (≤ `dims` rows) and collected into a literal map when the plan is
+    * built, so the score is map-only: token → md5 → bucket → map lookup
+    * (absent bucket ⇒ 0, the vocabulary-shift contract) → exact integer
+    * sum → the x130 integer-division score path. Bit-identical rows to
+    * the batch scorer (StreamingSpec pins stream == batch) — no groupBy,
+    * no watermark, no state store.
     */
   def streamingTrainedClassifierGate(docs: DataFrame, weights: DataFrame,
       dims: Int = 64, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame =
-    graft.ops.TextAnalysis.classifierScoreWithWeightsMapOnly(docs, weights,
+    graft.ops.TextAnalysis.classifierScoreWithWeights(docs, weights,
       dims = dims, textCol = textCol, idCol = idCol)
 
   /** Streaming distinct-token cardinality monitor: a per-source KMV
@@ -609,22 +606,6 @@ object StreamingWindows {
       }
   }
 
-  /** Streaming per-type event-rate anomaly monitor: the mapGroupsWithState
-    * twin of EventAnalytics.anomalyScores. State per event_type is the
-    * open tumbling window's count plus the trailing `trailing` closed
-    * counts — O(trailing) longs, never raw events. A window is scored and
-    * emitted the moment a later-window event closes it (flatMap output:
-    * several windows can close inside one micro-batch).
-    *
-    * Same in-order-across-batches contract as [[streamingFunnel]]; the
-    * final still-open window is never emitted (it is incomplete by
-    * definition — exactly the row the batch form also lacks until the
-    * next window starts). Keying by event_type bounds parallelism at
-    * |types| — inherent to per-type trailing semantics, and the state is
-    * a few longs, so a single state-store partition per type is the
-    * right trade (the volume reduction happens in the group function's
-    * per-batch win→count map before any window logic runs).
-    */
   /** Streaming CUSUM monitor, the online half of
     * [[graft.ops.EventAnalytics.cusumDaily]]: the batch form TRAINS
     * μ/σ from a reference window (it needs the whole series); this
@@ -811,6 +792,22 @@ object StreamingWindows {
       }
   }
 
+  /** Streaming per-type event-rate anomaly monitor: the mapGroupsWithState
+    * twin of EventAnalytics.anomalyScores. State per event_type is the
+    * open tumbling window's count plus the trailing `trailing` closed
+    * counts — O(trailing) longs, never raw events. A window is scored and
+    * emitted the moment a later-window event closes it (flatMap output:
+    * several windows can close inside one micro-batch).
+    *
+    * Same in-order-across-batches contract as [[streamingFunnel]]; the
+    * final still-open window is never emitted (it is incomplete by
+    * definition — exactly the row the batch form also lacks until the
+    * next window starts). Keying by event_type bounds parallelism at
+    * |types| — inherent to per-type trailing semantics, and the state is
+    * a few longs, so a single state-store partition per type is the
+    * right trade (the volume reduction happens in the group function's
+    * per-batch win→count map before any window logic runs).
+    */
   def streamingAnomalyScores(events: DataFrame, widthSec: Long,
       trailing: Int = 8, threshold: Double = 3.0): Dataset[AnomalyScore] = {
     require(trailing >= 2, s"need trailing >= 2, got $trailing")

@@ -195,25 +195,22 @@ class AnalyticsSpec extends SparkSuite {
   }
 
   test("classifierScore: JVM-reference buckets/weights; integer keep rule") {
-    def bucket(tok: String): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(tok.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.take(8), 16) % 64
-    }
-    def weight(b: Long): Long =
-      Math.floorMod(b * 2654435761L, 2000001L) - 1000000L
+    import ClassifierReference.rampWeight
+    def bucket(tok: String): Long = ClassifierReference.bucket(tok, 64)
+    // doc 3 has a NULL text: it must emit no row (not a row of nulls)
     val docs = frame(
-      "doc_id" -> Seq(1L, 2L),
-      "text" -> Seq("a a", "a b c"))
+      "doc_id" -> Seq(1L, 2L, 3L),
+      "text" -> Seq("a a", "a b c", null))
     val out = graft.ops.TextAnalysis.classifierScore(docs, dims = 64)
       .orderBy("doc_id").collect()
-    val w1 = weight(bucket("a"))
+    assert(out.map(_.getLong(0)).toSeq === Seq(1L, 2L))
+    val w1 = rampWeight(bucket("a"))
     assert(out(0).getLong(1) === 2L)
     assert(out(0).getDouble(2) ===
       BigDecimal(w1.toDouble / 1e6).setScale(6,
         BigDecimal.RoundingMode.HALF_UP).toDouble)
     assert(out(0).getBoolean(4) === (w1 >= 0))
-    val s2 = Seq("a", "b", "c").map(t => weight(bucket(t))).sum
+    val s2 = Seq("a", "b", "c").map(t => rampWeight(bucket(t))).sum
     assert(out(1).getLong(1) === 3L)
     assert(out(1).getBoolean(4) === (s2 >= 0))
     val prob = 1.0 / (1.0 + math.exp(-(s2.toDouble / 1e6 / 3.0)))

@@ -39,13 +39,14 @@ class ClassifierSpec extends SparkSuite {
       assert(direct === viaParquet,
         "scoring via parquet-loaded weights must be bit-identical")
       assert(direct.nonEmpty)
-      // the MAP-ONLY scorer (zero-shuffle pipeline/streaming form) is
-      // the same arithmetic: bit-identical to the join-based scorer
-      val mapOnly = TextAnalysis
-        .classifierScoreWithWeightsMapOnly(docs, w, dims = 32)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      assert(direct === mapOnly,
-        "map-only and join-based scorers must be bit-identical")
+      // and bit-identical to the pure-Scala reference scorer over the
+      // trained table
+      val table = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val ref = ClassifierReference.rows(
+        docs.select("doc_id", "text").orderBy("doc_id").collect()
+          .map(r => (r.getLong(0), r.getString(1))).toSeq,
+        tok => table.getOrElse(ClassifierReference.bucket(tok, 32), 0L))
+      assert(direct === ref, "scorer diverges from the Scala reference")
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
@@ -190,8 +191,7 @@ class ClassifierSpec extends SparkSuite {
         classifierWeights = Some(w), classifierDims = 32,
         classifierKeepBin = Some(kb)).toMap.apply("model_kept")
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val expect = TextAnalysis
-      .classifierScoreWithWeightsMapOnly(corpus, w, dims = 32)
+    val expect = TextAnalysis.classifierScoreWithWeights(corpus, w, dims = 32)
       .filter(least(floor(col("prob") * 10), lit(9L)).cast("long") >= kb)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(gated == expect,

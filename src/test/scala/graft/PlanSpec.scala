@@ -87,7 +87,6 @@ class PlanSpec extends SparkSuite {
     "x240_group_sequential", // broadcast ONE-ROW user-count frame onto the ranked users (x57 pattern)
     "x241_wasserstein_matrix", // broadcast ONE-ROW group totals onto the value table (x202 pattern)
     "x209_jl_recall", // broadcasts the fixed 10-query projected set (x10's brute-force audit shape)
-    "x244_trained_classifier", // trainHashedWeights: ONE-ROW global base-rate crossJoined onto <= dims bucket rows (x57 pattern)
     "x245_dsir_selection", // dsirTopK: ONE-ROW LM totals crossJoined onto <= buckets rows (x79's x57 pattern)
     "x246_dsir_mixture", // dsirWeights: same ONE-ROW LM totals epilogue as x245
     "x248_dsir_gumbel_sample") // dsirWeights: same ONE-ROW LM totals epilogue as x245

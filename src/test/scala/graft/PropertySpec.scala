@@ -1020,23 +1020,21 @@ class PropertySpec extends SparkSuite {
 
   test("trained-classifier scorers: join-based == map-only bitwise on " +
       "random corpora and random TRUNCATED weight tables") {
-    // the pipeline model gate swapped the join-based scorer for the
-    // map-only form — this property attacks that equivalence with
-    // arbitrary token streams AND weight tables missing arbitrary
-    // buckets (the vocabulary-shift contract must degrade identically)
+    // both scorers (trained table, full and truncated, and the stand-in
+    // ramp) against the pure-Scala reference on arbitrary token streams;
+    // a truncated table must score its absent buckets as 0
     val gen = for {
       n <- Gen.chooseNum(1, 6)
       texts <- Gen.listOfN(n, Gen.frequency(
-        // NULL text included: both forms must emit NO row for it (the
-        // pinned null-text contract — round-15 advice found the twin
-        // divergence exactly here)
+        // NULL text included: the scorers must emit NO row for it
         1 -> Gen.const(null: String),
         5 -> Gen.chooseNum(1, 12).flatMap(m =>
           Gen.listOfN(m, Gen.oneOf("aa", "bb", "cc", "dd", "ee", "ff",
             "gg", "zz9", "q1", "##")).map(_.mkString(" ")))))
       keepBucket <- Gen.chooseNum(0, 7)
     } yield (texts, keepBucket)
-    check("scorer-twin", Prop.forAll(gen) { case (texts, keepBucket) =>
+    import ClassifierReference.{bucket, rampWeight}
+    check("scorer-reference", Prop.forAll(gen) { case (texts, keepBucket) =>
       val docs = frame(
         "doc_id" -> texts.indices.map(_.toLong: Any).toList,
         "lang" -> texts.indices.map(i =>
@@ -1044,20 +1042,22 @@ class PropertySpec extends SparkSuite {
         "text" -> texts)
       val w = graft.ops.TextAnalysis.trainHashedWeights(docs,
         col("lang") === "en", dims = 8)
+      val table = w.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.orderBy("doc_id").collect().map(_.toSeq).toSeq
+      def ref(weight: String => Long) = ClassifierReference.rows(
+        texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, weight)
+      def trained(t: Map[Long, Long]) =
+        (tok: String) => t.getOrElse(bucket(tok, 8), 0L)
       val full = rows(graft.ops.TextAnalysis
-          .classifierScoreWithWeights(docs, w, dims = 8)) ==
-        rows(graft.ops.TextAnalysis
-          .classifierScoreWithWeightsMapOnly(docs, w, dims = 8))
-      // truncated table: only one bucket survives — absent buckets must
-      // contribute 0 identically in both forms
-      val wCut = w.filter(col("bucket") === keepBucket)
-      val cut = rows(graft.ops.TextAnalysis
-          .classifierScoreWithWeights(docs, wCut, dims = 8)) ==
-        rows(graft.ops.TextAnalysis
-          .classifierScoreWithWeightsMapOnly(docs, wCut, dims = 8))
-      full && cut
+        .classifierScoreWithWeights(docs, w, dims = 8)) == ref(trained(table))
+      val cut = rows(graft.ops.TextAnalysis.classifierScoreWithWeights(docs,
+          w.filter(col("bucket") === keepBucket), dims = 8)) ==
+        ref(trained(table.filter(_._1 == keepBucket)))
+      val standIn = rows(graft.ops.TextAnalysis
+        .classifierScore(docs, dims = 8)) ==
+        ref(tok => rampWeight(bucket(tok, 8)))
+      full && cut && standIn
     })
   }
 }

@@ -11,8 +11,10 @@ Pins the round-17 verdict Next #1 contract:
 and the bench_regress.py retirement contract (Next #8): a query named
 in the candidate's `excluded` list is RETIRED, not MISSING; the
 spans_report.py per-query job table and per-query job timeline of a
-traced perfbench run; and that every `runMain graft.<Name>` in README.md
-and tools/*.sh names an object with a `def main` under src/main/scala.
+traced perfbench run; that every `runMain graft.<Name>` in README.md
+and tools/*.sh names an object with a `def main` under src/main/scala;
+and that no scaladoc block in src/main/scala is orphaned by another one
+stacked directly below it.
 
 No Spark, no sbt — pure JSON fixtures through the real scripts.
 """
@@ -232,6 +234,46 @@ def test_run_main_targets(tmp):
         "README.md:2: graft.B", "README.md:3: graft.Gone"]
 
 
+def orphaned_scaladoc(root):
+    """`/** ... */` blocks under src/main/scala followed, with only blank
+    lines between, by another `/**`: scaladoc attaches only the last block
+    to the next definition, so the earlier one documents nothing. As
+    "file:line" of the orphaned block's first line."""
+    orphans = []
+    for d, _, files in os.walk(os.path.join(root, "src", "main", "scala")):
+        for name in sorted(files):
+            if not name.endswith(".scala"):
+                continue
+            path = os.path.join(d, name)
+            with open(path, encoding="utf-8") as f:
+                text = f.read()
+            for m in re.finditer(r"/\*\*.*?\*/", text, re.S):
+                if re.match(r"[ \t]*\n(?:[ \t]*\n)*[ \t]*/\*\*",
+                            text[m.end():]):
+                    orphans.append(f"{os.path.relpath(path, root)}:"
+                                   f"{text.count(chr(10), 0, m.start()) + 1}")
+    return sorted(orphans)
+
+
+def test_orphaned_scaladoc(tmp):
+    orphans = orphaned_scaladoc(os.path.dirname(HERE))
+    assert orphans == [], orphans
+    # fixture: a stacked pair (blank line between), a one-line doc right
+    # above another, a doc separated by code, and a doc on its own def
+    src = os.path.join(tmp, "docs", "src", "main", "scala")
+    os.makedirs(src)
+    with open(os.path.join(src, "A.scala"), "w") as f:
+        f.write("object A {\n"
+                "  /** Gone.\n    */\n\n"
+                "  /** Kept. */\n  def a = 1\n"
+                "  /** Gone too. */\n  /** Also kept. */\n  def b = 2\n"
+                "  /** Kept. */\n  val c = 3 // /** not a doc\n"
+                "  /** Kept. */\n  def d = 4\n}\n")
+    assert orphaned_scaladoc(os.path.join(tmp, "docs")) == [
+        os.path.join("src", "main", "scala", "A.scala") + ":2",
+        os.path.join("src", "main", "scala", "A.scala") + ":7"]
+
+
 def main():
     with tempfile.TemporaryDirectory() as tmp:
         test_regress_retired_vs_missing(tmp)
@@ -240,6 +282,7 @@ def main():
         test_oracle_ratio_report(tmp)
         test_spans_report(tmp)
         test_run_main_targets(tmp)
+        test_orphaned_scaladoc(tmp)
     print("tools self-test: OK")
 
 
