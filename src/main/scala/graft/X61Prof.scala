@@ -39,16 +39,16 @@ object X61Prof {
         Checkpoints.materialize(
           corpus.select(md5(col("text")).as("_ch")).distinct())
       }
-      val freshExact = good.withColumn("_h", md5(col("text")))
-        .join(corpusDigests, col("_h") <=> col("_ch"), "left_anti")
-      freshExact.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val freshExact = Checkpoints.scratch(
+        good.withColumn("_h", md5(col("text")))
+          .join(corpusDigests, col("_h") <=> col("_ch"), "left_anti"))
       val batchKeep = freshExact.groupBy(col("_h"))
         .agg(min(col("doc_id")).as("_keeper"))
       val exact = t("exact (quality+anti+keeper)") {
         try Checkpoints.materialize(
           freshExact.join(batchKeep, "_h")
             .filter(col("doc_id") === col("_keeper"))
-            .drop("_h", "_keeper"))
+            .drop("_h", "_keeper", Checkpoints.ScratchCol))
         finally freshExact.unpersist()
       }
       val bandState = t("bandState (corpusBandDocs)") {
@@ -57,13 +57,13 @@ object X61Prof {
       }
       if (rep == 2 && sys.env.contains("X61_EXPLAIN")) {
         println("[x61] ===== vsCorpus lazy plan =====")
-        Dedup.verifiedNearDupReject(exact, bandState,
-          bands = 8, rowsPerBand = 2, minJaccard = 0.5).explain("formatted")
+        Dedup.bandKeyReject(exact, bandState, bands = 8, rowsPerBand = 2,
+          minJaccard = Some(0.5)).explain("formatted")
       }
       val vsCorpus = t("vsCorpus (verified reject)") {
         Checkpoints.materialize(
-          Dedup.verifiedNearDupReject(exact, bandState,
-            bands = 8, rowsPerBand = 2, minJaccard = 0.5))
+          Dedup.bandKeyReject(exact, bandState, bands = 8, rowsPerBand = 2,
+            minJaccard = Some(0.5)))
       }
       val nearDrop = Dedup.clusterPairs(
           Dedup.verifiedCandidatePairs(vsCorpus, bands = 8,

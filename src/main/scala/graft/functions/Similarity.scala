@@ -557,8 +557,10 @@ object Similarity {
 
   /** The corpus's (sign-LSH bucket, embedding) state — what the SEMANTIC
     * ingest gate ([[embeddingNearDupReject]]) joins against: one row per
-    * corpus vector, bucketed by the deterministic hyperplane signs. Build
-    * once per corpus version, reuse across batches/micro-batches.
+    * distinct corpus vector, bucketed by the deterministic hyperplane
+    * signs. Build once per corpus version, reuse across
+    * batches/micro-batches; [[graft.ops.Dedup.corpusStatePressure]] keyed
+    * on `bucket` reads its bucket pressure.
     */
   def corpusEmbeddingBuckets(corpus: DataFrame, nPlanes: Int, dim: Int,
       embCol: String = "embedding"): DataFrame =
@@ -566,74 +568,51 @@ object Similarity {
       .distinct()
       .withColumn("bucket", lshBucket(col("ce"), nPlanes, dim))
 
-  /** Bucket-pressure histogram over a PREBUILT embedding ingest state
-    * ([[corpusEmbeddingBuckets]] / [[quantizedCorpusBuckets]] output) —
-    * [[graft.ops.Dedup.corpusStatePressure]] keyed on `bucket`: the
-    * ingest-side readout of semantic bucket pressure without running
-    * the batch [[embeddingBandHistogram]] diagnostic. */
-  def corpusEmbeddingPressure(state: DataFrame): DataFrame =
-    graft.ops.Dedup.corpusStatePressure(state, Seq("bucket"))
+  /** [[corpusEmbeddingBuckets]] with int8-QUANTIZED stored vectors —
+    * (bucket, ce ARRAY<TINYINT>): the corpus-side state shrinks ~8×
+    * in flight (8-byte doubles → 1-byte ints) while bucket ids stay
+    * computed on the ORIGINAL floats, so collision behavior is
+    * unchanged. For a billion-vector corpus this is the difference
+    * between a state table that broadcasts and one that doesn't, and the
+    * ingest shape for a corpus whose float state outgrows the per-batch
+    * join budget. [[embeddingNearDupReject]] reads either state.
+    */
+  def quantizedCorpusBuckets(corpus: DataFrame, nPlanes: Int, dim: Int,
+      embCol: String = "embedding"): DataFrame =
+    quantizeInt8(corpusEmbeddingBuckets(corpus, nPlanes, dim, embCol),
+        idCol = "bucket", embCol = "ce")
+      .select(col("bucket"), col("qvec").cast("array<tinyint>").as("ce"))
 
   /** SEMANTIC near-dup rejection against a corpus embedding state — the
-    * embedding twin of [[graft.ops.Dedup.verifiedNearDupReject]], same
+    * embedding twin of [[graft.ops.Dedup.bandKeyReject]], same
     * execution-mode-neutral shape: an arriving document (with an
     * embedding column) is dropped only when it lands in the same sign-LSH
     * bucket as a corpus vector AND cosine against THAT vector clears
     * `minCosine`. Bucket assignment is a stateless map-only projection
-    * (legal in a micro-batch); the rejection is ONE hash anti-join on the
+    * (legal in a micro-batch, no watermark; StreamingSpec pins stream ==
+    * batch); the rejection is ONE hash anti-join on the
     * bucket id with the fused codegen cosine as the join's residual —
     * priced only on bucket-colliding pairs, no broadcast limit, no state
     * store. Recall tradeoff (documented): near-dups split across a
     * hyperplane are missed — raise recall with fewer planes (bigger
     * buckets, more verification) or multiple plane sets OR'd; precision
     * is exact (cosine verifies every drop).
+    *
+    * The state is [[corpusEmbeddingBuckets]] or the int8
+    * [[quantizedCorpusBuckets]]; the cast of `ce` to doubles is a no-op
+    * on the first. Against int8 state the cosine residual runs on the
+    * quantized corpus vector (scale cancels — cosine normalizes per
+    * vector), and rounding perturbs it by O(1/127) per pair, so a pair
+    * sitting exactly at `minCosine` can flip; set the threshold with that
+    * margin (spec-pinned).
     */
   def embeddingNearDupReject(docs: DataFrame, corpusBuckets: DataFrame,
       nPlanes: Int, dim: Int, minCosine: Double,
       embCol: String = "embedding"): DataFrame = {
     val withB = docs.withColumn("_eb",
       lshBucket(col(embCol).cast("array<double>"), nPlanes, dim))
-    val r = corpusBuckets.select(col("bucket").as("_cb"), col("ce").as("_ce"))
-    withB.join(r,
-        withB("_eb") === r("_cb") &&
-          round(cosine(withB(embCol).cast("array<double>"), r("_ce")), 6)
-            >= minCosine,
-        "left_anti")
-      .drop("_eb")
-  }
-
-  /** [[corpusEmbeddingBuckets]] with int8-QUANTIZED stored vectors —
-    * (bucket, qce ARRAY<TINYINT>): the corpus-side state shrinks ~8×
-    * in flight (8-byte doubles → 1-byte ints) while bucket ids stay
-    * computed on the ORIGINAL floats, so collision behavior is
-    * unchanged. For a billion-vector corpus this is the difference
-    * between a state table that broadcasts and one that doesn't.
-    */
-  def quantizedCorpusBuckets(corpus: DataFrame, nPlanes: Int, dim: Int,
-      embCol: String = "embedding"): DataFrame = {
-    val b = corpus.select(col(embCol).cast("array<double>").as("ce"))
-      .distinct()
-      .withColumn("bucket", lshBucket(col("ce"), nPlanes, dim))
-    quantizeInt8(b, idCol = "bucket", embCol = "ce")
-      .select(col("bucket"), col("qvec").cast("array<tinyint>").as("qce"))
-  }
-
-  /** [[embeddingNearDupReject]] against QUANTIZED corpus state: the
-    * incoming float embedding buckets exactly as before; the cosine
-    * residual runs against the int8 corpus vector (scale cancels on the
-    * corpus side — cosine normalizes per vector). Precision tradeoff
-    * (documented, spec-pinned): rounding perturbs the residual by
-    * O(1/127) per pair, so a pair sitting exactly at `minCosine` can
-    * flip; set the threshold with that margin. Same stateless
-    * bucket-projection + hash anti-join shape — streaming-legal.
-    */
-  def quantizedEmbeddingNearDupReject(docs: DataFrame, qBuckets: DataFrame,
-      nPlanes: Int, dim: Int, minCosine: Double,
-      embCol: String = "embedding"): DataFrame = {
-    val withB = docs.withColumn("_eb",
-      lshBucket(col(embCol).cast("array<double>"), nPlanes, dim))
-    val r = qBuckets.select(col("bucket").as("_cb"),
-      col("qce").cast("array<double>").as("_ce"))
+    val r = corpusBuckets.select(col("bucket").as("_cb"),
+      col("ce").cast("array<double>").as("_ce"))
     withB.join(r,
         withB("_eb") === r("_cb") &&
           round(cosine(withB(embCol).cast("array<double>"), r("_ce")), 6)

@@ -389,7 +389,9 @@ object Dedup {
   }
 
   /** Keep only rows whose text digest is NOT in the filter — a stateless
-    * map-only predicate, legal in batch and streaming alike. The probe is
+    * map-only predicate, legal in batch and streaming alike (no state
+    * store, no shuffle, so it composes before any watermark; rebuild the
+    * filter between query restarts as the corpus grows). The probe is
     * a native codegen'd expression
     * ([[graft.functions.SketchExpressions.BloomMightContain]]), so the
     * filter stays inside the whole-stage-codegen span and the bit array
@@ -405,9 +407,9 @@ object Dedup {
   }
 
   /** The corpus's distinct band-key set — the distilled dedup state the
-    * unverified near-dup gates ([[mergeNewDocs]],
-    * [[graft.streaming.StreamingWindows.streamingNearDupFilterAtScale]])
-    * reject against (≤ bands·|distinct texts| short rows). One map-only
+    * unverified near-dup gates ([[mergeNewDocs]], [[bandKeyReject]]
+    * without `minJaccard`) reject against (≤ bands·|distinct texts| short
+    * rows). One map-only
     * [[bandKeysArray]] projection per row, exploded, then one DISTINCT
     * on the narrow key: no signature groupBy, no join. A null text keys
     * as the empty text, like every [[bandKeysArray]] caller.
@@ -864,8 +866,8 @@ object Dedup {
     setJaccard(array_distinct(tokens(a)), array_distinct(tokens(b)))
 
   /** The corpus's (band key, token set) VERIFICATION state — what the
-    * Jaccard-verified near-dup gate ([[verifiedNearDupReject]], batch and
-    * streaming) joins against: one `(bk, ctoks)` row per distinct
+    * Jaccard-verified near-dup gate ([[bandKeyReject]] with `minJaccard`,
+    * batch and streaming) joins against: one `(bk, ctoks)` row per distinct
     * non-null corpus text and distinct band key of that text, the
     * payload riding along so candidate verification is a scalar
     * expression at the join site (no second lookup). ~bands·|distinct
@@ -921,16 +923,21 @@ object Dedup {
       .select(col("m").as("bucket_size"), col("n_buckets"),
         expr("m * n_buckets").as("n_state_rows"))
 
-  /** Jaccard-VERIFIED near-dup rejection against a corpus band state —
-    * the one text gate under the streaming ingest filter
-    * ([[graft.streaming.StreamingWindows.streamingVerifiedNearDupFilter]])
-    * and the batch append pipeline ([[graft.ops.Pipeline.appendCurated]]):
-    * a document is dropped only when it shares an LSH band key with a
-    * corpus text ([[corpusBandDocs]]) AND its exact token-set Jaccard
-    * against THAT text clears `minJaccard`. The doc's band keys are one
-    * stateless map-only projection ([[bandKeysArray]]); the join shape
-    * follows the execution mode ([[bandKeyReject]]). Verification is
-    * priced only on band-colliding pairs, with no broadcast limit and no
+  /** Near-dup rejection against a corpus band state — the one text gate
+    * under streaming ingest
+    * ([[graft.streaming.StreamingWindows.streamingIngestCuration]]) and
+    * the batch append pipeline ([[graft.ops.Pipeline.appendCurated]]).
+    * Without `minJaccard`, a document is dropped when ANY of its band keys
+    * is in the corpus key set ([[corpusBandKeys]], `bk`). With
+    * `Some(minJaccard)` it is dropped only when it shares a band key with
+    * a corpus text ([[corpusBandDocs]], `bk` + `ctoks`) AND its exact
+    * token-set Jaccard against THAT text clears `minJaccard`, so a banding
+    * false positive cannot drop a good document. The doc's band keys are
+    * one stateless map-only projection ([[bandKeysArray]]); a streaming
+    * `docs` runs [[nearDupRejectChain]], a batch one
+    * [[nearDupRejectStacked]], and both return the same rows
+    * (StreamingSpec pins stream == batch). Verification is priced only on
+    * band-colliding pairs, with no broadcast limit, no watermark and no
     * state store.
     *
     * Both sides pre-stage their DISTINCT TOKEN SETS (the doc side as a
@@ -938,25 +945,13 @@ object Dedup {
     * the residual is one `array_intersect` of two ready arrays — never
     * per-pair re-tokenization, which would multiply by the fan-out of a
     * hot band key. The verdict is a function of the text alone: a null
-    * text is never rejected (its token set is null), and a row's id
-    * plays no part.
+    * text is never rejected by the verified gate (its token set is null),
+    * and a row's id plays no part.
     */
-  def verifiedNearDupReject(docs: DataFrame, bandDocs: DataFrame,
+  def bandKeyReject(docs: DataFrame, state: DataFrame,
       bands: Int = Pipeline.DefaultBands,
       rowsPerBand: Int = Pipeline.DefaultRowsPerBand,
-      minJaccard: Double = 0.5,
-      textCol: String = "text"): DataFrame =
-    bandKeyReject(docs, bandDocs, bands, rowsPerBand, textCol,
-      Some(minJaccard))
-
-  /** Drop every row of `docs` that shares a band key with the corpus
-    * `state` (`bk`, plus `ctoks` when `minJaccard` is set, which then
-    * also requires the exact token-set Jaccard to clear it). A streaming
-    * `docs` runs [[nearDupRejectChain]], a batch one
-    * [[nearDupRejectStacked]]; both return the same rows. */
-  private[graft] def bandKeyReject(docs: DataFrame, state: DataFrame,
-      bands: Int, rowsPerBand: Int, textCol: String,
-      minJaccard: Option[Double]): DataFrame =
+      textCol: String = "text", minJaccard: Option[Double]): DataFrame =
     if (docs.isStreaming)
       nearDupRejectChain(docs, state, bands, rowsPerBand, textCol, minJaccard)
     else
@@ -978,7 +973,10 @@ object Dedup {
     * large (store it bucketed by `bk` and its shuffle is done once, not
     * per micro-batch). A doc survives iff it survives every band. Kept
     * `private[graft]` so PlanSpec/StreamingSpec can audit its plan on a
-    * batch frame.
+    * batch frame. The stacked core could run per micro-batch only inside
+    * `foreachBatch`, which moves the sink into the gate, so a caller could
+    * no longer compose the gate before its own sink (StreamingSpec's
+    * memory sinks); the chain keeps the gate a streaming DataFrame.
     */
   private[graft] def nearDupRejectChain(docs: DataFrame, state: DataFrame,
       bands: Int, rowsPerBand: Int, textCol: String,

@@ -984,8 +984,9 @@ object EventAnalytics {
     *
     * Scale: two map-side-combined daily counts; everything downstream
     * is span-bounded; the lag join is an EQUI-join on day after
-    * exploding 2·maxLag+1 shifted copies; the one-row span frame is a
-    * broadcast (x57 pattern).
+    * exploding 2·maxLag+1 shifted copies; the one-row span frame
+    * explodes into the preserved side of the two left joins, so the
+    * daily counts are the side Spark may broadcast.
     */
   def ccfDaily(events: DataFrame, typeX: String, typeY: String,
       maxLag: Int = 7): DataFrame = {
@@ -996,8 +997,8 @@ object EventAnalytics {
       .filter(col("event_type").isin(typeX, typeY))
       .groupBy(col("event_type"), day.as("day"))
       .agg(count(lit(1)).as("cnt"))
-    val span = broadcast(daily.agg(min(col("day")).as("_d0"),
-      max(col("day")).as("_d1")))
+    val span = daily.agg(min(col("day")).as("_d0"),
+      max(col("day")).as("_d1"))
     val dx = daily.filter(col("event_type") === typeX)
       .select(col("day"), col("cnt").as("_cx"))
     val dy = daily.filter(col("event_type") === typeY)

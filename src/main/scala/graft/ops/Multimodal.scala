@@ -268,7 +268,9 @@ object Multimodal {
     * [[ahashBmp]] over a media Dataset in the [[extractFeatures]]
     * mapPartitions shape (decoder state would init once per partition).
     * Undecodable payloads produce NO row, never a fabricated hash (the
-    * x16 contract).
+    * x16 contract). Stateless, so on a stream it feeds
+    * [[Dedup.hashNearDupReject]] unchanged: the streaming image near-dup
+    * gate, which therefore drops undecodable payloads.
     */
   def imageAHashes(media: Dataset[MediaDoc]): DataFrame = {
     import media.sparkSession.implicits._

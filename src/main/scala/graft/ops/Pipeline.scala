@@ -591,10 +591,9 @@ object Pipeline {
     * the corpus, so the within-batch LSH/jaccard stages are O(batch).
     * Cross-corpus verification prices Jaccard only on band-colliding
     * pairs (the anti-join's residual condition) via
-    * [[Dedup.verifiedNearDupReject]] — the SAME gate the streaming
-    * ingest filter delegates to, so batch append and streaming ingest
-    * reject the same rows (each through the join shape its execution
-    * mode allows).
+    * [[Dedup.bandKeyReject]] — the SAME gate streaming ingest runs, so
+    * batch append and streaming ingest reject the same rows (each
+    * through the join shape its execution mode allows).
     */
   def appendCurated(corpus: DataFrame, newDocs: DataFrame, evalSet: DataFrame,
       minQuality: Double = 0.3, maxSharedShingles: Long = 4L,
@@ -638,13 +637,12 @@ object Pipeline {
           .drop("_h", "_keeper", Checkpoints.ScratchCol))
       finally freshExact.unpersist()
 
-    // verified near-dup vs corpus: the streaming gate's batch form —
-    // per-band hash anti-joins whose residual is the exact Jaccard. The
-    // corpus band state feeds ONE anti-join per band — materialize it so
-    // the corpus-scale banding pass runs once, not `bands` times, and
-    // MEMOIZE it per corpus version: steady-state production precomputes
-    // this frame once per corpus snapshot and reads it for every batch,
-    // which is now literally what a session does.
+    // verified near-dup vs corpus: a band-key join whose residual is the
+    // exact Jaccard. Materialize the corpus band state so the
+    // corpus-scale banding pass runs once, and MEMOIZE it per corpus
+    // version: steady-state production precomputes this frame once per
+    // corpus snapshot and reads it for every batch, which is now
+    // literally what a session does.
     val bandState = StageCache.memo("corpus_band_state",
         Seq(corpus), Seq(bands, rowsPerBand)) {
       Checkpoints.materialize(
@@ -652,14 +650,14 @@ object Pipeline {
     }
     // vsCorpus feeds three consumers (LSH candidates, the jaccard member
     // prune, the dedup anti-join) — materialize it or each re-executes
-    // the verified rejection. On this batch frame verifiedNearDupReject
-    // runs its one-join core (explode the batch's band keys once, one
-    // semi-join against the state with the Jaccard residual, one
-    // anti-join of the rejected digests); a streaming ingest gate runs
-    // the per-band chain over the same state and rejects the same rows.
+    // the verified rejection. On this batch frame bandKeyReject runs its
+    // stacked core (explode the batch's band keys once, one semi-join
+    // against the state with the Jaccard residual, one anti-join of the
+    // rejected digests); on a stream it runs the per-band chain over the
+    // same state and rejects the same rows.
     val vsCorpus = Checkpoints.materialize(
-      Dedup.verifiedNearDupReject(exact, bandState,
-        bands = bands, rowsPerBand = rowsPerBand, minJaccard = minJaccard))
+      Dedup.bandKeyReject(exact, bandState, bands, rowsPerBand,
+        minJaccard = Some(minJaccard)))
 
     // within-batch verified near-dup dedup (batch survivors are small —
     // O(batch) LSH + jaccard, same contract as curateStages)

@@ -134,7 +134,7 @@ object Profiling {
     // the full 1..bins grid: a bin can be empty on either side
     val spark = ref.sparkSession
     import spark.implicits._
-    val grid = broadcast((1 to bins).map(_.toLong).toDF("bin"))
+    val grid = (1 to bins).map(_.toLong).toDF("bin")
     val joined = grid
       .join(binned(ref, "n_ref"), Seq("bin"), "left")
       .join(binned(cur, "n_cur"), Seq("bin"), "left")

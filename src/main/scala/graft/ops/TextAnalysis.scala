@@ -500,9 +500,8 @@ object TextAnalysis {
     * document's own token array, so there is NO shuffle of any kind (no
     * explode/groupBy round trip, no window): one codegen'd pass over the
     * scan, the best possible 100 TB plan. Stateless per row, which also
-    * makes the operator directly streamable
-    * ([[graft.streaming.StreamingWindows.streamingLineQualityGate]] —
-    * no watermark, no state store). Null text is dropped.
+    * makes the operator directly streamable (no watermark, no state
+    * store; StreamingSpec pins stream == batch). Null text is dropped.
     */
   def lineQualityCuration(docs: DataFrame, wordsPerLine: Int = 5,
       minWords: Int = 3, distinctNum: Int = 4, distinctDen: Int = 5,
@@ -819,8 +818,8 @@ object TextAnalysis {
     *
     * Scale: MAP-ONLY — one per-row pass with NO shuffle (PlanSpec pins
     * the output ordering as the only exchange), so the operator applies
-    * to a stream unchanged, statelessly
-    * (StreamingWindows.streamingClassifierGate).
+    * to a stream unchanged, statelessly, with no watermark in append mode
+    * (StreamingSpec pins stream == batch).
     */
   def classifierScore(docs: DataFrame, dims: Int = 64,
       textCol: String = "text", idCol: String = "doc_id",
@@ -839,7 +838,7 @@ object TextAnalysis {
     * Scale: the ≤`dims`-row table becomes one literal map, so scoring is
     * the same map-only pass as [[classifierScore]] — no token explode,
     * no per-doc groupBy, and an append-mode stream runs it with no state
-    * store (StreamingWindows.streamingTrainedClassifierGate).
+    * store (StreamingSpec pins stream == batch).
     *
     * EAGER by construction: the weights table is collect()ed when this
     * DataFrame is BUILT, not when it executes — building a plan over a

@@ -569,8 +569,8 @@ class ExtensionSpec extends SparkSuite {
       .cache()
     try {
       def gate(d: org.apache.spark.sql.DataFrame) =
-        Dedup.verifiedNearDupReject(d, state,
-          bands = 2, rowsPerBand = 4, minJaccard = 0.3)
+        Dedup.bandKeyReject(d, state, bands = 2, rowsPerBand = 4,
+          minJaccard = Some(0.3))
       val chain = streamedIds(batch, "verified_chain")(gate)
       val stacked = ids(gate(batch))
       assert(stacked == chain,
@@ -594,7 +594,7 @@ class ExtensionSpec extends SparkSuite {
     val state = Dedup.corpusBandDocs(corpus,
       Pipeline.DefaultBands, Pipeline.DefaultRowsPerBand)
     def gate(d: org.apache.spark.sql.DataFrame) =
-      Dedup.verifiedNearDupReject(d, state, minJaccard = 0.5)
+      Dedup.bandKeyReject(d, state, minJaccard = Some(0.5))
     val streamed = streamedIds(incoming, "verified_null_id")(gate)
     assert(streamed == Set(Some(5L)), s"stream kept $streamed")
     assert(ids(gate(incoming)) == streamed)

@@ -297,7 +297,7 @@ class PlanSpec extends SparkSuite {
     val bandDocs = graft.ops.Dedup.corpusBandDocs(docs, 2, 4)
     // the batch core (what a batch call runs) and the streaming chain core
     for (textPlan <- Seq(
-        graft.ops.Dedup.verifiedNearDupReject(docs, bandDocs),
+        graft.ops.Dedup.bandKeyReject(docs, bandDocs, minJaccard = Some(0.5)),
         graft.ops.Dedup.nearDupRejectChain(docs, bandDocs, 2, 4, "text",
           Some(0.5))).map(_.queryExecution.executedPlan.toString))
       assert(!textPlan.contains("CartesianProduct") &&

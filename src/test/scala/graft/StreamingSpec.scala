@@ -95,7 +95,7 @@ class StreamingSpec extends SparkSuite {
       batchDocs.filter(col("doc_id") < 100), expectedItems = 200L, fpp = 0.01)
     val stream = spark.readStream.schema(batchDocs.schema)
       .parquet(s"$dir/documents.parque[t]")
-    val q = StreamingWindows.streamingBloomExactFilter(stream, bloom)
+    val q = Dedup.bloomReject(stream, bloom)
       .select("doc_id")
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_bloom").start()
@@ -119,7 +119,7 @@ class StreamingSpec extends SparkSuite {
       Pipeline.DefaultBands, Pipeline.DefaultRowsPerBand)
     val stream = spark.readStream.schema(batchDocs.schema)
       .parquet(s"$dir/documents.parque[t]")
-    val q = StreamingWindows.streamingNearDupFilterAtScale(stream, keys)
+    val q = Dedup.bandKeyReject(stream, keys, minJaccard = None)
       .select("doc_id")
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_neardup").start()
@@ -128,7 +128,7 @@ class StreamingSpec extends SparkSuite {
       val got = collectCol[Long](spark.table("stream_neardup").orderBy("doc_id"), "doc_id")
       // the same operator applied in batch is the ground truth
       val want = collectCol[Long](
-        StreamingWindows.streamingNearDupFilterAtScale(batchDocs, keys)
+        Dedup.bandKeyReject(batchDocs, keys, minJaccard = None)
           .select("doc_id").orderBy("doc_id"), "doc_id")
       assert(got == want)
       assert(got.nonEmpty && !got.exists(_ < 100), // corpus docs self-reject
@@ -150,7 +150,7 @@ class StreamingSpec extends SparkSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val filtered = StreamingWindows.streamingNearDupFilterAtScale(stream, keys)
+      val filtered = Dedup.bandKeyReject(stream, keys, minJaccard = None)
       val q = filtered.select("doc_id")
         .writeStream.outputMode("append").format("memory")
         .queryName("stream_neardup_scale").start()
@@ -160,7 +160,7 @@ class StreamingSpec extends SparkSuite {
           spark.table("stream_neardup_scale").orderBy("doc_id"), "doc_id")
         // the batch call runs the one-join core: same rows as the chain
         val want = collectCol[Long](
-          StreamingWindows.streamingNearDupFilterAtScale(batchDocs, keys)
+          Dedup.bandKeyReject(batchDocs, keys, minJaccard = None)
             .select("doc_id").orderBy("doc_id"), "doc_id")
         assert(got == want)
         assert(got.nonEmpty && !got.exists(_ < 100))
@@ -191,7 +191,7 @@ class StreamingSpec extends SparkSuite {
       val gated = d.join(scored, col("doc_id") === col("_qid"))
         .filter(col("quality") > 0.3).drop("_qid", "quality")
       val deduped = gated.withColumn("_h", md5(col("text"))).dropDuplicates("_h")
-      StreamingWindows.streamingNearDupFilterAtScale(deduped, corpusKeys)
+      Dedup.bandKeyReject(deduped, corpusKeys, minJaccard = None)
         .select(col("_h"))
     }
     // stream-side quality gate must stay stateless: join with a scored
@@ -200,7 +200,7 @@ class StreamingSpec extends SparkSuite {
     def streamPipeline(d: org.apache.spark.sql.DataFrame) = {
       val gated = d.filter(TextAnalysis.qualityExpr(col("text")) > 0.3)
       val deduped = gated.withColumn("_h", md5(col("text"))).dropDuplicates("_h")
-      StreamingWindows.streamingNearDupFilterAtScale(deduped, corpusKeys)
+      Dedup.bandKeyReject(deduped, corpusKeys, minJaccard = None)
         .select(col("_h"))
     }
     val stream = spark.readStream.schema(docs.schema)
@@ -254,7 +254,7 @@ class StreamingSpec extends SparkSuite {
       Pipeline.DefaultBands, Pipeline.DefaultRowsPerBand)
     val stream = spark.readStream.schema(docs.schema)
       .parquet(s"$dir/documents.parque[t]")
-    val q = StreamingWindows.streamingVerifiedNearDupFilter(stream, bandDocs)
+    val q = Dedup.bandKeyReject(stream, bandDocs, minJaccard = Some(0.5))
       .select("doc_id")
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_verified").start()
@@ -263,7 +263,7 @@ class StreamingSpec extends SparkSuite {
       val got = collectCol[Long](
         spark.table("stream_verified").orderBy("doc_id"), "doc_id")
       val want = collectCol[Long](
-        StreamingWindows.streamingVerifiedNearDupFilter(docs, bandDocs)
+        Dedup.bandKeyReject(docs, bandDocs, minJaccard = Some(0.5))
           .select("doc_id").orderBy("doc_id"), "doc_id")
       assert(got == want)
       assert(got.nonEmpty && !got.exists(_ < 100),
@@ -284,12 +284,12 @@ class StreamingSpec extends SparkSuite {
     // vacuity guard: the planted pair really collides on a band (the
     // unverified gate rejects it), so the tau=0.95 keep below is the
     // verification working, not the collision failing to happen
-    assert(StreamingWindows.streamingNearDupFilterAtScale(incoming, keys2).isEmpty,
+    assert(Dedup.bandKeyReject(incoming, keys2, minJaccard = None).isEmpty,
       "planted pair must band-collide")
-    assert(StreamingWindows.streamingVerifiedNearDupFilter(
-      incoming, bd2, minJaccard = 0.5).isEmpty)
-    assert(collectCol[Long](StreamingWindows.streamingVerifiedNearDupFilter(
-        incoming, bd2, minJaccard = 0.95).select("doc_id"), "doc_id") == Seq(2L),
+    assert(Dedup.bandKeyReject(
+      incoming, bd2, minJaccard = Some(0.5)).isEmpty)
+    assert(collectCol[Long](Dedup.bandKeyReject(
+        incoming, bd2, minJaccard = Some(0.95)).select("doc_id"), "doc_id") == Seq(2L),
       "band collision below the Jaccard bar must NOT drop the doc")
 
     // the one-call gate composes the verified form when asked
@@ -311,7 +311,7 @@ class StreamingSpec extends SparkSuite {
       embs.filter(col("vec_id") < 200), nPlanes = 4, dim = dim)
     val stream = spark.readStream.schema(embs.schema)
       .parquet(s"$dir/embeddings.parque[t]")
-    val q = StreamingWindows.streamingEmbeddingNearDupFilter(
+    val q = Similarity.embeddingNearDupReject(
         stream, corpusBuckets, nPlanes = 4, dim = dim, minCosine = 0.95)
       .select("vec_id")
       .writeStream.outputMode("append").format("memory")
@@ -321,7 +321,7 @@ class StreamingSpec extends SparkSuite {
       val got = collectCol[Long](
         spark.table("stream_embgate").orderBy("vec_id"), "vec_id")
       val want = collectCol[Long](
-        StreamingWindows.streamingEmbeddingNearDupFilter(
+        Similarity.embeddingNearDupReject(
             embs, corpusBuckets, nPlanes = 4, dim = dim, minCosine = 0.95)
           .select("vec_id").orderBy("vec_id"), "vec_id")
       assert(got == want)
@@ -371,7 +371,7 @@ class StreamingSpec extends SparkSuite {
     val eState = Similarity.corpusEmbeddingBuckets(embs, nPlanes = 4,
       dim = dim).cache()
     try {
-      val p = Similarity.corpusEmbeddingPressure(eState).collect()
+      val p = Dedup.corpusStatePressure(eState, Seq("bucket")).collect()
       assert(p.map(_.getLong(2)).sum == eState.count(),
         "embedding pressure must conserve the state's row mass")
     } finally { eState.unpersist(); () }
@@ -388,11 +388,11 @@ class StreamingSpec extends SparkSuite {
     val qb = Similarity.quantizedCorpusBuckets(
       embs.filter(col("vec_id") < 200), nPlanes = 4, dim = dim)
     // the 8x-in-flight claim rests on the state actually being int8
-    assert(qb.schema("qce").dataType == ArrayType(ByteType),
-      s"state not tinyint: ${qb.schema("qce").dataType}")
+    assert(qb.schema("ce").dataType == ArrayType(ByteType),
+      s"state not tinyint: ${qb.schema("ce").dataType}")
     val stream = spark.readStream.schema(embs.schema)
       .parquet(s"$dir/embeddings.parque[t]")
-    val q = StreamingWindows.streamingQuantizedEmbeddingNearDupFilter(
+    val q = Similarity.embeddingNearDupReject(
         stream, qb, nPlanes = 4, dim = dim, minCosine = 0.95)
       .select("vec_id")
       .writeStream.outputMode("append").format("memory")
@@ -402,7 +402,7 @@ class StreamingSpec extends SparkSuite {
       val got = collectCol[Long](
         spark.table("stream_qembgate").orderBy("vec_id"), "vec_id")
       val want = collectCol[Long](
-        StreamingWindows.streamingQuantizedEmbeddingNearDupFilter(
+        Similarity.embeddingNearDupReject(
             embs, qb, nPlanes = 4, dim = dim, minCosine = 0.95)
           .select("vec_id").orderBy("vec_id"), "vec_id")
       assert(got == want)
@@ -420,7 +420,7 @@ class StreamingSpec extends SparkSuite {
       "vec_id" -> Seq[Any](10L, 11L),
       "embedding" -> Seq(Seq(2.0, 4.0, 6.0, 8.0), Seq(-3.0, 1.0, 2.0, -2.0)))
     val kept2 = collectCol[Long](
-      Similarity.quantizedEmbeddingNearDupReject(incoming, qb2,
+      Similarity.embeddingNearDupReject(incoming, qb2,
         nPlanes = 4, dim = 4, minCosine = 0.95).select("vec_id"), "vec_id")
     assert(kept2 == Seq(11L), s"kept $kept2")
   }
@@ -496,15 +496,17 @@ class StreamingSpec extends SparkSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[MediaDoc]
     mem.addData(incoming: _*)
-    val q = StreamingWindows.streamingImageNearDupFilter(mem.toDS(), corpusBands)
+    def gate(media: org.apache.spark.sql.Dataset[MediaDoc]) =
+      Dedup.hashNearDupReject(Multimodal.imageAHashes(media), corpusBands,
+        nBits = 64, nBands = 16, maxHamming = 11)
+    val q = gate(mem.toDS())
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_imggate").start()
     try {
       q.processAllAvailable()
       val got = spark.table("stream_imggate")
         .collect().map(_.getLong(0)).sorted.toSeq
-      val want = StreamingWindows.streamingImageNearDupFilter(
-          spark.createDataset(incoming), corpusBands)
+      val want = gate(spark.createDataset(incoming))
         .collect().map(_.getLong(0)).sorted.toSeq
       assert(got == want, s"stream $got != batch $want")
       assert(got == Seq(11L),
@@ -697,7 +699,7 @@ class StreamingSpec extends SparkSuite {
     val batchDocs = Tables.documents(spark, dir)
     val stream = spark.readStream.schema(batchDocs.schema)
       .parquet(s"$dir/documents.parque[t]")
-    val q = StreamingWindows.streamingLineQualityGate(stream)
+    val q = graft.ops.TextAnalysis.lineQualityCuration(stream)
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_linequality").start()
     try {
@@ -721,7 +723,7 @@ class StreamingSpec extends SparkSuite {
     val batchDocs = Tables.documents(spark, dir)
     val stream = spark.readStream.schema(batchDocs.schema)
       .parquet(s"$dir/documents.parque[t]")
-    val q = StreamingWindows.streamingClassifierGate(stream)
+    val q = graft.ops.TextAnalysis.classifierScore(stream)
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_classifier").start()
     try {
@@ -749,7 +751,7 @@ class StreamingSpec extends SparkSuite {
       org.apache.spark.sql.functions.col("lang") === "en", dims = 32)
     val stream = spark.readStream.schema(batchDocs.schema)
       .parquet(s"$dir/documents.parque[t]")
-    val q = StreamingWindows.streamingTrainedClassifierGate(stream, w,
+    val q = graft.ops.TextAnalysis.classifierScoreWithWeights(stream, w,
         dims = 32)
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_trained_classifier").start()

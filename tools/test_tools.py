@@ -13,8 +13,9 @@ in the candidate's `excluded` list is RETIRED, not MISSING; the
 spans_report.py per-query job table and per-query job timeline of a
 traced perfbench run; that every `runMain graft.<Name>` in README.md
 and tools/*.sh names an object with a `def main` under src/main/scala;
-and that no scaladoc block in src/main/scala is orphaned by another one
-stacked directly below it.
+that no scaladoc block in src/main/scala is orphaned by another one
+stacked directly below it; and that every scaladoc `[[link]]` there names
+a definition that exists.
 
 No Spark, no sbt — pure JSON fixtures through the real scripts.
 """
@@ -274,6 +275,52 @@ def test_orphaned_scaladoc(tmp):
         os.path.join("src", "main", "scala", "A.scala") + ":7"]
 
 
+def dangling_scaladoc_links(root):
+    """`[[...]]` links under src/main/scala whose last segment names no
+    `def`/`val`/`var`/`object`/`class`/`trait`/`type` under src/main/scala
+    (a link to a deleted or renamed definition), as "file:line: target".
+    External `[[scheme://...]]` links are skipped."""
+    names, links = set(), []
+    for d, _, files in os.walk(os.path.join(root, "src", "main", "scala")):
+        for name in sorted(files):
+            if not name.endswith(".scala"):
+                continue
+            path = os.path.join(d, name)
+            with open(path, encoding="utf-8") as f:
+                text = f.read()
+            names.update(re.findall(
+                r"\b(?:def|val|var|object|class|trait|type)\s+(\w+)", text))
+            for m in re.finditer(r"\[\[([^\[\]]+)\]\]", text):
+                links.append((os.path.relpath(path, root),
+                              text.count("\n", 0, m.start()) + 1,
+                              m.group(1).split()[0]))
+    return sorted(f"{path}:{n}: {target}" for path, n, target in links
+                  if "://" not in target and
+                  re.split(r"[.#]", target.rstrip("$!"))[-1] not in names)
+
+
+def test_dangling_scaladoc_links(tmp):
+    dangling = dangling_scaladoc_links(os.path.dirname(HERE))
+    assert dangling == [], dangling
+    # fixture: links to a def, an object member, a qualified object, a
+    # link with display text and an external URL resolve; a planted link
+    # to a deleted def and one to a missing member do not
+    src = os.path.join(tmp, "links", "src", "main", "scala", "graft")
+    os.makedirs(src)
+    with open(os.path.join(src, "A.scala"), "w") as f:
+        f.write("package graft\n\n"
+                "/** See [[B.b]], [[graft.B]] and [[a the a def]]. */\n"
+                "object A {\n"
+                "  /** Like [[https://example.org/x]], not [[gone]]. */\n"
+                "  def a = 1\n"
+                "}\n\n"
+                "/** Uses [[graft.A.missing]]. */\n"
+                "object B {\n  val b = 2\n}\n")
+    path = os.path.join("src", "main", "scala", "graft", "A.scala")
+    assert dangling_scaladoc_links(os.path.join(tmp, "links")) == [
+        f"{path}:5: gone", f"{path}:9: graft.A.missing"]
+
+
 def main():
     with tempfile.TemporaryDirectory() as tmp:
         test_regress_retired_vs_missing(tmp)
@@ -283,6 +330,7 @@ def main():
         test_spans_report(tmp)
         test_run_main_targets(tmp)
         test_orphaned_scaladoc(tmp)
+        test_dangling_scaladoc_links(tmp)
     print("tools self-test: OK")
 
 
