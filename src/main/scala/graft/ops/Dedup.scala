@@ -409,10 +409,10 @@ object Dedup {
   /** The corpus's distinct band-key set — the distilled dedup state the
     * unverified near-dup gates ([[mergeNewDocs]], [[bandKeyReject]]
     * without `minJaccard`) reject against (≤ bands·|distinct texts| short
-    * rows). One map-only
-    * [[bandKeysArray]] projection per row, exploded, then one DISTINCT
-    * on the narrow key: no signature groupBy, no join. A null text keys
-    * as the empty text, like every [[bandKeysArray]] caller.
+    * rows). One map-only [[bandKeysArray]] projection per row, exploded,
+    * then one DISTINCT on the narrow key: no signature groupBy, no join.
+    * A null text keys as the empty text, like every [[bandKeysArray]]
+    * caller.
     */
   def corpusBandKeys(docs: DataFrame, bands: Int, rowsPerBand: Int,
       textCol: String = "text"): DataFrame =
