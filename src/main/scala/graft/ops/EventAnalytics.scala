@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Stats.d38
 
 /** Behavioral analytics over the events table: ordered funnels, cohort
   * retention, event-transition matrices, rolling active-user counts.
@@ -12,7 +13,10 @@ import org.apache.spark.sql.functions._
   *
   * All time arithmetic is integer epoch math on the `ts_ns` column
   * (Tables.events contract) so every query replays bitwise in the DuckDB
-  * oracle — no timezone, DST, or float-precision traps.
+  * oracle — no timezone, DST, or float-precision traps. Every daily
+  * series here reads one core in [[EventWindows]]: `epochDay`, the
+  * `(event_type, day, cnt)` [[EventWindows.dailyCounts]] and its
+  * zero-filled grid [[EventWindows.denseDaily]].
   *
   * Scale notes (100 TB events):
   *  - Every operator here shuffles by `user_id` (or by day for
@@ -282,9 +286,8 @@ object EventAnalytics {
     * the same reduce-then-count shape as rollingActives.
     */
   def activityHeatmap(events: DataFrame): DataFrame = {
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
     val cell = events.select(
-      pmod(day + lit(3L), lit(7L)).as("dow"),
+      pmod(EventWindows.epochDay + lit(3L), lit(7L)).as("dow"),
       pmod(expr(EventWindows.floorDivSql("ts_ns", 3600L * 1000000000L)),
         lit(24L)).as("hod"),
       col("user_id"))
@@ -526,9 +529,8 @@ object EventAnalytics {
     */
   def rollingActives(events: DataFrame, windowDays: Int = 7): DataFrame = {
     require(windowDays >= 1, s"need windowDays >= 1, got $windowDays")
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
     val dayUser = Checkpoints.materialize(
-      events.select(day.as("day"), col("user_id")).distinct())
+      events.select(EventWindows.epochDay.as("day"), col("user_id")).distinct())
     val dau = dayUser.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val slots = dayUser
       .select(explode(sequence(col("day"),
@@ -565,10 +567,7 @@ object EventAnalytics {
     // terms leave the 53-bit mantissa — the exactness contract's edge
     require(windowDays >= 1 && windowDays <= 53,
       s"need 1 <= windowDays <= 53, got $windowDays")
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
-    val daily = Checkpoints.materialize(
-      events.groupBy(col("event_type"), day.as("day"))
-        .agg(count(lit(1)).as("cnt")))
+    val daily = Checkpoints.materialize(EventWindows.dailyCounts(events))
     val past = daily.select(col("event_type").as("_et"),
       col("day").as("d2"), col("cnt").as("c2"))
     daily.join(past,
@@ -604,18 +603,7 @@ object EventAnalytics {
     */
   def stlDecompose(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
-    val daily = events.groupBy(col("event_type"), day.as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val span = daily.groupBy(col("event_type"))
-      .agg(min(col("day")).as("_d0"), max(col("day")).as("_d1"))
-    val grid = span
-      .select(col("event_type"),
-        explode(sequence(col("_d0"), col("_d1"))).as("day"))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = EventWindows.denseDaily(EventWindows.dailyCounts(events))
     val w7 = Window.partitionBy(col("event_type")).orderBy(col("day"))
       .rowsBetween(-3, 3)
     val detr = grid
@@ -671,17 +659,7 @@ object EventAnalytics {
     */
   def holtWintersDaily(events: DataFrame, period: Int = 7): DataFrame = {
     require(period >= 2, s"need period >= 2, got $period")
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
-    val daily = events.groupBy(col("event_type"), day.as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val span = daily.groupBy(col("event_type"))
-      .agg(min(col("day")).as("_d0"), max(col("day")).as("_d1"))
-    val grid = span
-      .select(col("event_type"),
-        explode(sequence(col("_d0"), col("_d1"))).as("day"))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = EventWindows.denseDaily(EventWindows.dailyCounts(events))
     val ser = grid.groupBy(col("event_type")).agg(
       count(lit(1)).as("n_days"),
       array_sort(collect_list(struct(col("day"), col("y")))).as("_ser"))
@@ -743,9 +721,7 @@ object EventAnalytics {
     * fold is linear in it.
     */
   def holtDaily(events: DataFrame): DataFrame = {
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
-    val daily = events.groupBy(col("event_type"), day.as("day"))
-      .agg(count(lit(1)).as("cnt"))
+    val daily = EventWindows.dailyCounts(events)
     val zero = struct(lit(0.0).as("l"), lit(0.0).as("b"),
       lit(true).as("first"))
     val st = daily.groupBy(col("event_type")).agg(
@@ -792,10 +768,7 @@ object EventAnalytics {
     * the per-type fold runs over the span-bounded collected series.
     */
   def cusumDaily(events: DataFrame): DataFrame = {
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
-    val daily = events.groupBy(col("event_type"), day.as("day"))
-      .agg(count(lit(1)).as("cnt"))
+    val daily = EventWindows.dailyCounts(events)
     val mom = daily.groupBy(col("event_type")).agg(
       count(lit(1)).as("n_days"),
       sum(d38(col("cnt"))).as("_s"),
@@ -849,10 +822,7 @@ object EventAnalytics {
     * (event_type, dow) reduce, one broadcast-size per-type total.
     */
   def dowProfile(events: DataFrame): DataFrame = {
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
-    val daily = events.groupBy(col("event_type"), day.as("day"))
-      .agg(count(lit(1)).as("cnt"))
+    val daily = EventWindows.dailyCounts(events)
     val perDow = daily
       .groupBy(col("event_type"), pmod(col("day"), lit(7L)).as("dow"))
       .agg(count(lit(1)).as("n_days"), sum(d38(col("cnt"))).as("_sd"))
@@ -889,18 +859,7 @@ object EventAnalytics {
     */
   def acfDaily(events: DataFrame, maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1, s"need maxLag >= 1, got $maxLag")
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
-    val daily = events.groupBy(col("event_type"), day.as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val span = daily.groupBy(col("event_type"))
-      .agg(min(col("day")).as("_d0"), max(col("day")).as("_d1"))
-    val grid = span
-      .select(col("event_type"),
-        explode(sequence(col("_d0"), col("_d1"))).as("day"))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = EventWindows.denseDaily(EventWindows.dailyCounts(events))
     val mom = grid.groupBy(col("event_type")).agg(
       count(lit(1)).as("_n"), sum(d38(col("y"))).as("_S"),
       sum(d38(col("y")) * d38(col("y"))).as("_Q"))
@@ -942,9 +901,7 @@ object EventAnalytics {
     * type over those pairs, never a global window.
     */
   def theilSen(events: DataFrame): DataFrame = {
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
-    val daily = events.groupBy(col("event_type"), day.as("day"))
-      .agg(count(lit(1)).as("cnt"))
+    val daily = EventWindows.dailyCounts(events)
     val a = daily.select(col("event_type"), col("day").as("_d1"),
       col("cnt").as("_y1"))
     val b = daily.select(col("event_type"), col("day").as("_d2"),
@@ -991,12 +948,8 @@ object EventAnalytics {
   def ccfDaily(events: DataFrame, typeX: String, typeY: String,
       maxLag: Int = 7): DataFrame = {
     require(maxLag >= 1, s"need maxLag >= 1, got $maxLag")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
-    val daily = events
-      .filter(col("event_type").isin(typeX, typeY))
-      .groupBy(col("event_type"), day.as("day"))
-      .agg(count(lit(1)).as("cnt"))
+    val daily = EventWindows.dailyCounts(
+      events.filter(col("event_type").isin(typeX, typeY)))
     val span = daily.agg(min(col("day")).as("_d0"),
       max(col("day")).as("_d1"))
     val dx = daily.filter(col("event_type") === typeX)
@@ -1079,18 +1032,8 @@ object EventAnalytics {
   def varianceRatio(events: DataFrame, qs: Seq[Int] = Seq(2, 4, 8))
       : DataFrame = {
     require(qs.nonEmpty && qs.forall(_ >= 2), s"need qs all >= 2, got $qs")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
-    val daily = events.groupBy(col("event_type"), day.as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val span = daily.groupBy(col("event_type"))
-      .agg(min(col("day")).as("_d0"), max(col("day")).as("_d1"))
-    val grid = span
-      .select(col("event_type"), col("_d0"),
-        explode(sequence(col("_d0"), col("_d1"))).as("day"))
-      .join(daily, Seq("event_type", "day"), "left")
-      .select(col("event_type"), col("_d0"), col("day"),
-        coalesce(col("cnt"), lit(0L)).as("y"))
+    val grid = EventWindows.denseDaily(EventWindows.dailyCounts(events),
+      withD0 = true)
     val mom = grid.groupBy(col("event_type")).agg(
       count(lit(1)).as("n_days"), sum(d38(col("y"))).as("_sy"),
       sum(d38(col("y")) * d38(col("y"))).as("_qy"))

@@ -31,6 +31,32 @@ object EventWindows {
     * the epoch/alignment convention. */
   private[graft] def epochSec = expr(floorDivSql("ts_ns", 1000000000L))
 
+  /** Exact integer epoch day from nanos (floor semantics): the one day
+    * expression of every daily series, batch and streaming. */
+  private[graft] def epochDay = expr(floorDivSql("ts_ns", 86400L * 1000000000L))
+
+  /** The daily series core: `(event_type, day, cnt)`, one map-side
+    * combined count per observed (type, day) cell. */
+  private[graft] def dailyCounts(events: DataFrame): DataFrame =
+    events.groupBy(col("event_type"), epochDay.as("day"))
+      .agg(count(lit(1)).as("cnt"))
+
+  /** [[dailyCounts]] on the DENSE grid: `(event_type, day, y)` with
+    * every day of each type's [min, max] span, absent days as 0 (the
+    * grid is span-bounded, not event-bounded). `withD0` also carries
+    * each type's first day as `_d0`, after `event_type`. */
+  private[graft] def denseDaily(daily: DataFrame,
+      withD0: Boolean = false): DataFrame = {
+    val d0 = if (withD0) Seq(col("_d0")) else Nil
+    daily.groupBy(col("event_type"))
+      .agg(min(col("day")).as("_d0"), max(col("day")).as("_d1"))
+      .select((col("event_type") +: d0 :+
+        explode(sequence(col("_d0"), col("_d1"))).as("day")): _*)
+      .join(daily, Seq("event_type", "day"), "left")
+      .select((col("event_type") +: d0 :+ col("day") :+
+        coalesce(col("cnt"), lit(0L)).as("y")): _*)
+  }
+
   /** Floor-aligned window start: pmod keeps the offset non-negative, so
     * the start is the floor multiple even for negative seconds. */
   private[graft] def winStart(sec: org.apache.spark.sql.Column, width: Long) =
@@ -61,26 +87,33 @@ object EventWindows {
   }
 
   /** Session windows per user: a new session starts after a gap of more
-    * than `gapSec` seconds. Classic lag + running-sum sessionization; the
-    * per-user window sort is the only shuffle (partition by user — scales
-    * with user cardinality, not event count per partition).
+    * than `gapSec` seconds. Returns (user_id, session_id, n_events,
+    * sess_start, duration_s).
     */
-  def sessions(events: DataFrame, gapSec: Long): DataFrame = {
-    val sec = epochSec
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ns"), col("event_id"))
-    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
-      .withColumn("sec", sec)
-      .withColumn("new_sess",
-        when(col("sec") - lag(col("sec"), 1).over(w) > gapSec, 1)
-          .when(lag(col("sec"), 1).over(w).isNull, 1)
-          .otherwise(0))
-      .withColumn("session_id", sum(col("new_sess")).over(wRun))
+  def sessions(events: DataFrame, gapSec: Long): DataFrame =
+    sessionized(events, gapSec)
       .groupBy(col("user_id"), col("session_id"))
       .agg(
         count(lit(1)).as("n_events"),
         min(col("sec")).as("sess_start"),
         (max(col("sec")) - min(col("sec"))).as("duration_s"))
+
+  /** Classic lag + running-sum sessionization, shared by [[sessions]]
+    * and [[sessionFlows]]: every event with its epoch `sec` and its
+    * per-user `session_id`. The per-user window sort is the only shuffle
+    * (partition by user — scales with user cardinality, not event count
+    * per partition).
+    */
+  private def sessionized(events: DataFrame, gapSec: Long): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts_ns"), col("event_id"))
+    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    events
+      .withColumn("sec", epochSec)
+      .withColumn("new_sess",
+        when(col("sec") - lag(col("sec"), 1).over(w) > gapSec, 1)
+          .when(lag(col("sec"), 1).over(w).isNull, 1)
+          .otherwise(0))
+      .withColumn("session_id", sum(col("new_sess")).over(wRun))
   }
 
   /** Session flow matrix over [[sessions]]: per (entry_type,
@@ -94,18 +127,8 @@ object EventWindows {
     * structs — no extra window pass); the flow aggregate is map-side
     * combinable on ≤ |types|² keys.
     */
-  def sessionFlows(events: DataFrame, gapSec: Long): DataFrame = {
-    val sec = epochSec
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ns"), col("event_id"))
-    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
-      .withColumn("sec", sec)
-      .withColumn("new_sess",
-        when(col("sec") - lag(col("sec"), 1).over(w) > gapSec, 1)
-          .when(lag(col("sec"), 1).over(w).isNull, 1)
-          .otherwise(0))
-      .withColumn("session_id", sum(col("new_sess")).over(wRun))
+  def sessionFlows(events: DataFrame, gapSec: Long): DataFrame =
+    sessionized(events, gapSec)
       .groupBy(col("user_id"), col("session_id"))
       .agg(count(lit(1)).as("n_events"),
         min(struct(col("ts_ns"), col("event_id"), col("event_type")))
@@ -121,7 +144,6 @@ object EventWindows {
           .as("bounce_rate"),
         round(sum(col("n_events")).cast("double") /
           count(lit(1)).cast("double"), 6).as("mean_events"))
-  }
 
   /** Per-user engagement rollup over [[sessions]]: session count, event
     * count, mean events/session and mean/max session duration (means

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Stats.d38
 
 /** Online-experiment (A/B test) analysis over the events table.
   *
@@ -147,7 +148,6 @@ object Experiments {
     */
   def cupedReadout(events: DataFrame, cutNs: Long, nVariants: Int = 2,
       salt: String = "exp1"): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val cents = round(col("value").cast("double") * 100).cast("long")
     val perUser = withVariant(
       events.groupBy(col("user_id")).agg(
@@ -265,7 +265,7 @@ object Experiments {
     */
   def diffInDiff(events: DataFrame, convType: String = "purchase",
       salt: String = "did1"): DataFrame = {
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
+    val day = EventWindows.epochDay
     val bounds = broadcast(events
       .select(day.as("_d"))
       .agg(min(col("_d")).as("_dmin"), max(col("_d")).as("_dmax"))
@@ -281,7 +281,6 @@ object Experiments {
           sum(when(day >= col("_split"), cents).otherwise(0L)).as("_post")),
       "user_id", 2, salt)
       .select(col("variant"), (col("_post") - col("_pre")).as("_delta"))
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val arms = perUser.groupBy(col("variant")).agg(
       count(lit(1)).as("_n"),
       sum(d38(col("_delta"))).as("_s"),
@@ -396,7 +395,6 @@ object Experiments {
     */
   def cmhTest(events: DataFrame, convType: String = "purchase",
       minValue: Double = 150.0, salt: String = "exp1"): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val perUser = withVariant(
       events.groupBy(col("user_id")).agg(
         max(when(col("event_type") === convType

@@ -185,8 +185,7 @@ object Layout {
       restateWeeks: Long = 2): DataFrame = {
     require(restateWeeks >= 1, s"need restateWeeks >= 1, got $restateWeeks")
     val spark = events.sparkSession
-    val day = org.apache.spark.sql.functions.expr(
-      graft.ops.EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
+    val day = EventWindows.epochDay
     val typed = events.select(col("event_type"), col("user_id"),
         col("event_id"), day.as("day"))
       .withColumn("week", org.apache.spark.sql.functions.expr("day div 7"))
@@ -227,8 +226,7 @@ object Layout {
       lastWeeks: Long = 4): DataFrame = {
     require(lastWeeks >= 1, s"need lastWeeks >= 1, got $lastWeeks")
     val spark = events.sparkSession
-    val day = org.apache.spark.sql.functions.expr(
-      graft.ops.EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
+    val day = EventWindows.epochDay
     val typed = events.select(col("event_type"), col("user_id"),
         day.as("day"))
       .withColumn("week", org.apache.spark.sql.functions.expr("day div 7"))

@@ -340,26 +340,33 @@ object Pipeline {
       }
     }
 
-    // the contaminated-id set is tiny (drop ids only) and consumed by
-    // every report over this snapshot — materialize + memoize it so the
-    // shingle pass over the survivors runs once per (snapshot, eval set)
-    val contaminated = StageCache.memo("curation_contam",
-        Seq(semantic, evalSet), Seq(5, maxSharedShingles),
-        // measured alongside the semantic stage (its input), not
-        // scaffolding — same inheritFixture rationale
-        inheritFixture = false) {
-      Checkpoints.materialize(
-        Dedup.contamination(semantic, evalSet, shingleN = 5)
-          .filter(col("n_shared") > maxSharedShingles)
-          .select(col("doc_id")))
-    }
-    val clean = semantic.join(contaminated, Seq("doc_id"), "left_anti")
+    val clean = semantic.join(
+      contaminatedIds(semantic, evalSet, maxSharedShingles), Seq("doc_id"),
+      "left_anti")
 
     classifierWeights.map(_ => "model_kept" -> gated).toSeq ++
       Seq("quality_kept" -> good, "exact_kept" -> exact,
         "neardup_kept" -> deduped, "semantic_kept" -> semantic,
         "decontaminated_kept" -> clean)
   }
+
+  /** The ids of `survivors` sharing more than `maxSharedShingles`
+    * distinct 5-gram shingles with `evalSet`. The set is tiny (drop ids
+    * only) and consumed by every report over a snapshot, so it is
+    * materialized and memoized under ONE key for [[curateStages]] and
+    * [[curationLedger]]: the shingle pass runs once per (snapshot, eval
+    * set). Measured alongside its input stage, not scaffolding, so the
+    * entry never inherits fixture status (`inheritFixture = false`).
+    */
+  private def contaminatedIds(survivors: DataFrame, evalSet: DataFrame,
+      maxSharedShingles: Long): DataFrame =
+    StageCache.memo("curation_contam", Seq(survivors, evalSet),
+        Seq(5, maxSharedShingles), inheritFixture = false) {
+      Checkpoints.materialize(
+        Dedup.contamination(survivors, evalSet, shingleN = 5)
+          .filter(col("n_shared") > maxSharedShingles)
+          .select(col("doc_id")))
+    }
 
   /** Per-source survival funnel: for every source, how many documents
     * entered the pipeline and how many survived each stage — the report
@@ -443,17 +450,9 @@ object Pipeline {
     val nearDrops = clusters.filter(col("cluster") =!= col("doc_id"))
       .select(col("doc_id"), lit("near_dup").as("reason"),
         col("cluster").as("keeper"))
-    // same memo key as curateStages' contamination stage (no semantic
-    // stage here, so `semantic` ≡ `deduped`): a session that ran the
-    // shard map already holds this drop set
-    val contamIds = StageCache.memo("curation_contam",
-        Seq(deduped, evalSet), Seq(5, maxSharedShingles)) {
-      Checkpoints.materialize(
-        Dedup.contamination(deduped, evalSet, shingleN = 5)
-          .filter(col("n_shared") > maxSharedShingles)
-          .select(col("doc_id")))
-    }
-    val contamDrops = contamIds
+    // no semantic stage here, so `semantic` ≡ `deduped`: a session that
+    // ran the shard map already holds this drop set
+    val contamDrops = contaminatedIds(deduped, evalSet, maxSharedShingles)
       .select(col("doc_id"), lit("contaminated").as("reason"),
         noKeeper.as("keeper"))
     (modelDrops :+ qualityDrops :+ exactDrops :+ nearDrops :+ contamDrops)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Stats.d38
 import org.apache.spark.sql.types.NumericType
 
 /** Dataset profiling and distribution audits — the data-quality checks a
@@ -219,7 +220,6 @@ object Profiling {
     val tot = broadcast(cells.agg(
       coalesce(sum(col("n_good")), lit(0L)).as("_g"),
       coalesce(sum(col("n_bad")), lit(0L)).as("_b")))
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     def share6(num: String, den: String) =
       expr(s"""CAST((2 * CAST($num AS DECIMAL(38,0)) * 1000000 +
               |  CAST($den AS DECIMAL(38,0))) div

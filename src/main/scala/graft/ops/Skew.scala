@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Stats.d38
 
 /** Skew mitigation helpers (100 TB design rule: a handful of hot keys must
   * not serialize onto one reducer).
@@ -78,7 +79,6 @@ object Skew {
     val freq = df.groupBy(col(keyCol).as("_k")).agg(count(lit(1)).as("_n"))
     val ranked = Ranking.withGlobalRanks(freq,
       Seq("_n" -> true, "_k" -> true), rankCol = "_pos", denseCol = "_dd")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val kn = d38(col("n_keys")) * d38(col("n_rows"))
     ranked.agg(
         sum(col("_n")).as("n_rows"),

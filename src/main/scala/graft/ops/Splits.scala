@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Stats.d38
 
 /** Deterministic dataset splitting — the train/val/test assignment every
   * training pipeline needs. A row's split comes from md5(salt:id) reduced
@@ -243,7 +244,6 @@ object Splits {
   def ppsSample(df: DataFrame, idCol: String, weightCol: String,
       n: Long, salt: String = "pps"): DataFrame = {
     require(n >= 1, s"need n >= 1, got $n")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val u = df.select(col(idCol).as("_id"),
         col(weightCol).cast("long").as("_w"))
       .filter(col("_w") > 0)

@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
-  private def d38(c: Column): Column = c.cast("decimal(38,0)")
+  /** DECIMAL(38,0) staging of an integer column: the exact-moment cast
+    * every integer-moment statistic in graft.ops sums through. */
+  private[graft] def d38(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Sign-aware half-up 6-dp mean in integer micro-units (`div` is a
     * SQL-only operator, hence expr; both operands exact integers).
@@ -894,10 +896,7 @@ object Stats {
     * regime), g_max, mean_before, mean_after.
     */
   def changepointDaily(events: DataFrame): DataFrame = {
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
-    val daily = events.groupBy(col("event_type"), day.as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val mom = daily.groupBy(col("event_type")).agg(
+    val mom = EventWindows.dailyCounts(events).groupBy(col("event_type")).agg(
       count(lit(1)).as("n_days"),
       sum(d38(col("cnt"))).as("_tot"),
       array_sort(collect_list(struct(col("day"), col("cnt")))).as("_ser"))

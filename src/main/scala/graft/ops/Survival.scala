@@ -42,7 +42,7 @@ object Survival {
     */
   def kaplanMeier(events: DataFrame, censorDays: Long = 7): DataFrame = {
     require(censorDays >= 0, s"need censorDays >= 0, got $censorDays")
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
+    val day = EventWindows.epochDay
     val per = events.groupBy(col("user_id"))
       .agg(min(day).as("_first"), max(day).as("_last"))
     val mx = broadcast(per.agg(max(col("_last")).as("_max_day")))
@@ -91,7 +91,7 @@ object Survival {
   def logRank(events: DataFrame, isA: org.apache.spark.sql.Column,
       censorDays: Long = 7): DataFrame = {
     require(censorDays >= 0, s"need censorDays >= 0, got $censorDays")
-    val day = expr(EventWindows.floorDivSql("ts_ns", 86400L * 1000000000L))
+    val day = EventWindows.epochDay
     val per = events.groupBy(col("user_id"))
       .agg(min(day).as("_first"), max(day).as("_last"), max(isA).as("_a"))
     val mx = broadcast(per.agg(max(col("_last")).as("_max_day")))

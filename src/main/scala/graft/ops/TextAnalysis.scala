@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
+import Stats.d38
 
 import graft.functions.TextExpressions
 
@@ -1260,7 +1261,6 @@ object TextAnalysis {
     val slots = pc.select(col("ta").as("tok"), col("n_pair"))
       .unionAll(pc.select(col("tb").as("tok"), col("n_pair")))
       .groupBy(col("tok")).agg(sum(col("n_pair")).as("_s"))
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     pc.join(slots.select(col("tok").as("ta"), col("_s").as("n_a")),
         Seq("ta"))
       .join(slots.select(col("tok").as("tb"), col("_s").as("n_b")),
@@ -1435,7 +1435,6 @@ object TextAnalysis {
   def goodTuring(docs: DataFrame, textCol: String = "text",
       maxR: Int = 10): DataFrame = {
     require(maxR >= 1 && maxR <= 1000, s"need maxR in [1,1000], got $maxR")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val ff = Checkpoints.materialize(
       docs.select(explode(tokens(col(textCol))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("_r"))

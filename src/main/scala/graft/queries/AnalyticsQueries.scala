@@ -3,8 +3,9 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.functions.Similarity
 import graft.ops.{Baskets, CustomerAnalytics, Dedup, EventAnalytics,
-  Experiments, Graphs, Integrity, Layout, Mixing, Pca, Profiling,
-  Selection, Skew, Sketches, Splits, Stats, Survival, TextAnalysis}
+  EventWindows, Experiments, Graphs, Integrity, Layout, Mixing, Pca,
+  Profiling, Selection, Skew, Sketches, Splits, Stats, Survival,
+  TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** Behavioral-analytics + embedding-statistics queries (x114+): funnels,
@@ -2037,10 +2038,8 @@ object AnalyticsQueries {
     QueryDef(
       "x149_dau_trend",
       (s, dir) => {
-        val day = expr(graft.ops.EventWindows.floorDivSql(
-          "ts_ns", 86400L * 1000000000L))
         val dau = Tables.events(s, dir)
-          .select(day.as("day"), col("user_id")).distinct()
+          .select(EventWindows.epochDay.as("day"), col("user_id")).distinct()
           .groupBy(col("day")).agg(count(lit(1)).as("dau"))
         graft.ops.Stats.linearFit(dau, col("day"), col("dau"))
       },
@@ -2242,9 +2241,7 @@ object AnalyticsQueries {
       (s, dir) =>
         Integrity.lDiversity(
           Tables.events(s, dir).select(col("event_type"),
-            expr(graft.ops.EventWindows.floorDivSql(
-              "ts_ns", 86400L * 1000000000L)).as("day"),
-            col("user_id")),
+            EventWindows.epochDay.as("day"), col("user_id")),
           Seq("event_type", "day"), "user_id", l = 50),
       Some("""WITH pp AS (SELECT event_type,
              |    epoch_ns(ts) // 86400000000000 AS day, user_id,
@@ -3762,23 +3759,11 @@ object AnalyticsQueries {
     // equi-on-type shape — see ops/Stats.mannKendall.
     QueryDef(
       "x200_mann_kendall",
-      (s, dir) => {
-        val day = expr(graft.ops.EventWindows
-          .floorDivSql("ts_ns", 86400L * 1000000000L))
-        val daily = Tables.events(s, dir)
-          .groupBy(col("event_type"), day.as("day"))
-          .agg(count(lit(1)).as("cnt"))
-        val span = daily.groupBy(col("event_type"))
-          .agg(min(col("day")).as("_d0"), max(col("day")).as("_d1"))
-        val grid = span
-          .select(col("event_type"),
-            explode(sequence(col("_d0"), col("_d1"))).as("day"))
-          .join(daily, Seq("event_type", "day"), "left")
-          .select(col("event_type"), col("day"),
-            coalesce(col("cnt"), lit(0L)).as("y"))
-        Stats.mannKendall(grid, "event_type", "day", "y")
-          .orderBy(col("series"))
-      },
+      (s, dir) =>
+        Stats.mannKendall(
+          EventWindows.denseDaily(EventWindows.dailyCounts(
+            Tables.events(s, dir))), "event_type", "day", "y")
+          .orderBy(col("series")),
       Some("""WITH daily AS (SELECT event_type,
              |    epoch_ns(ts) // 86400000000000 AS day, COUNT(*) AS cnt
              |  FROM events GROUP BY 1, 2),

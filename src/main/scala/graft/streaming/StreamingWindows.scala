@@ -203,7 +203,7 @@ object StreamingWindows {
   def streamingSessions(events: DataFrame, gapSec: Long): Dataset[ClosedSession] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select(col("user_id"), expr("ts_ns div 1000000000").as("sec"))
+    events.select(col("user_id"), graft.ops.EventWindows.epochSec.as("sec"))
       .as[(Long, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[OpenSession, ClosedSession](
@@ -409,11 +409,12 @@ object StreamingWindows {
     * every term exact in a double, so the streaming sum (trail order)
     * and the batch sum (shuffle order) are the same value — the
     * property that makes a stream==batch pin possible without DECIMAL
-    * staging. Same in-order-across-batches contract as
-    * [[streamingFunnel]], and here it is ENFORCED: a micro-batch carrying
-    * a day older than the open day fails fast instead of silently
-    * re-opening (and double-counting) it. Each type's final still-open
-    * day is never emitted (incomplete by definition).
+    * staging. Days close through the shared open-period fold
+    * [[advanceOpenPeriod]], which ENFORCES the in-order-across-batches
+    * contract: a micro-batch carrying a day older than the open day fails
+    * fast instead of silently re-opening (and double-counting) it. Each
+    * type's final still-open day is never emitted (incomplete by
+    * definition).
     */
   def streamingEwmaDaily(events: DataFrame,
       windowDays: Int = 20): Dataset[EwmaPoint] = {
@@ -423,45 +424,22 @@ object StreamingWindows {
       s"need 1 <= windowDays <= 53, got $windowDays")
     val spark = events.sparkSession
     import spark.implicits._
-    val dayOf = events
-      .select(col("event_type"),
-        expr(graft.ops.EventWindows.floorDivSql(
-          "ts_ns", 86400L * 1000000000L)).as("day"))
-      .as[(String, Long)]
-    dayOf.groupByKey(_._1)
+    typedPeriods(events, graft.ops.EventWindows.epochDay)
       .flatMapGroupsWithState[EwmaState, EwmaPoint](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (tpe, rows, state) =>
           var st = state.getOption.getOrElse(EwmaState(Long.MinValue, 0L, Nil))
           val out = scala.collection.mutable.ArrayBuffer.empty[EwmaPoint]
-          val counts = scala.collection.mutable.LongMap.empty[Long]
-          rows.foreach { case (_, d) => counts(d) = counts.getOrElse(d, 0L) + 1L }
-          def emit(day: Long, n: Long): Unit = {
-            val terms = st.trail :+ DayCount(day, n)
-            val e = 0.5 * terms.iterator
-              .filter(dc => dc.day > day - windowDays && dc.day <= day)
-              .map(dc => dc.n.toDouble / (1L << (day - dc.day)).toDouble)
-              .sum
-            out += EwmaPoint(tpe, day, n, e)
+          val (day, n) = advanceOpenPeriod("streamingEwmaDaily", tpe, "day",
+              st.openDay, st.openN, rows.map(_._2)) { (d, c, _) =>
+            val terms = st.trail :+ DayCount(d, c)
+            out += EwmaPoint(tpe, d, c, 0.5 * terms.iterator
+              .filter(dc => dc.day > d - windowDays && dc.day <= d)
+              .map(dc => dc.n.toDouble / (1L << (d - dc.day)).toDouble)
+              .sum)
+            st = st.copy(trail = terms.takeRight(windowDays))
           }
-          def close(): Unit = if (st.openDay != Long.MinValue) {
-            emit(st.openDay, st.openN)
-            st = st.copy(trail =
-              (st.trail :+ DayCount(st.openDay, st.openN)).takeRight(windowDays))
-          }
-          counts.toSeq.sortBy(_._1).foreach { case (d, n) =>
-            if (d == st.openDay) st = st.copy(openN = st.openN + n)
-            else if (d < st.openDay)
-              // ENFORCE the documented in-order contract: silently
-              // re-opening an older day would emit duplicate points and
-              // double-count the day in later windows, undetectably
-              throw new IllegalStateException(
-                s"streamingEwmaDaily($tpe): day $d arrived after day " +
-                  s"${st.openDay} opened — input violates the in-order-" +
-                  "across-batches contract")
-            else { close(); st = st.copy(openDay = d, openN = n) }
-          }
-          state.update(st)
+          state.update(st.copy(openDay = day, openN = n))
           out.iterator
       }
   }
@@ -476,9 +454,9 @@ object StreamingWindows {
     * `params` pass through unscored (dropped), the deployment contract
     * for a new event type appearing before retraining.
     *
-    * State per type is four scalars; same in-order-across-batches
-    * contract (enforced fail-fast) and same |types|-bounded keying as
-    * [[streamingEwmaDaily]]. The recurrence arithmetic is the same
+    * State per type is four scalars; same open-period fold
+    * ([[advanceOpenPeriod]], fail-fast in-order) and same |types|-bounded
+    * keying as [[streamingEwmaDaily]]. The recurrence arithmetic is the same
     * IEEE op sequence as the batch fold, so given batch-trained
     * params, streamed sp/sn match the batch run bitwise.
     */
@@ -486,12 +464,7 @@ object StreamingWindows {
       params: Map[String, (Double, Double)]): Dataset[CusumPoint] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val dayOf = events
-      .select(col("event_type"),
-        expr(graft.ops.EventWindows.floorDivSql(
-          "ts_ns", 86400L * 1000000000L)).as("day"))
-      .as[(String, Long)]
-    dayOf.groupByKey(_._1)
+    typedPeriods(events, graft.ops.EventWindows.epochDay)
       .flatMapGroupsWithState[CusumState, CusumPoint](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (tpe, rows, state) =>
@@ -505,27 +478,15 @@ object StreamingWindows {
                 .getOrElse(CusumState(Long.MinValue, 0L, 0.0, 0.0))
               val out = scala.collection.mutable.ArrayBuffer
                 .empty[CusumPoint]
-              val counts = scala.collection.mutable.LongMap.empty[Long]
-              rows.foreach { case (_, d) =>
-                counts(d) = counts.getOrElse(d, 0L) + 1L }
-              def close(): Unit = if (st.openDay != Long.MinValue) {
-                val y = st.openN.toDouble
+              val (day, n) = advanceOpenPeriod("streamingCusumDaily", tpe,
+                  "day", st.openDay, st.openN, rows.map(_._2)) { (d, c, _) =>
+                val y = c.toDouble
                 val sp = math.max(0.0, st.sp + (y - muk))
                 val sn = math.max(0.0, st.sn + (mku - y))
-                out += CusumPoint(tpe, st.openDay, st.openN, sp, sn,
-                  sp > h || sn > h)
+                out += CusumPoint(tpe, d, c, sp, sn, sp > h || sn > h)
                 st = st.copy(sp = sp, sn = sn)
               }
-              counts.toSeq.sortBy(_._1).foreach { case (d, n) =>
-                if (d == st.openDay) st = st.copy(openN = st.openN + n)
-                else if (d < st.openDay)
-                  throw new IllegalStateException(
-                    s"streamingCusumDaily($tpe): day $d arrived after " +
-                      s"day ${st.openDay} opened — input violates the " +
-                      "in-order-across-batches contract")
-                else { close(); st = st.copy(openDay = d, openN = n) }
-              }
-              state.update(st)
+              state.update(st.copy(openDay = day, openN = n))
               out.iterator
           }
       }
@@ -538,8 +499,9 @@ object StreamingWindows {
     * later closed day folds the same halving recurrence and emits an
     * [[HwPoint]]. DENSE-grid semantics: a gap between observed days
     * folds explicit zero days, so the streamed recurrence sees the
-    * identical series the batch grid builds. Same fail-fast in-order
-    * contract as [[streamingCusumDaily]]; the still-open day is never
+    * identical series the batch grid builds. Same open-period fold
+    * ([[advanceOpenPeriod]], fail-fast in-order) as
+    * [[streamingCusumDaily]]; the still-open day is never
     * folded, so chaining it manually onto the last emission reproduces
     * the batch end state bitwise (the spec's gate).
     */
@@ -548,12 +510,7 @@ object StreamingWindows {
     require(period >= 2, s"need period >= 2, got $period")
     val spark = events.sparkSession
     import spark.implicits._
-    val dayOf = events
-      .select(col("event_type"),
-        expr(graft.ops.EventWindows.floorDivSql(
-          "ts_ns", 86400L * 1000000000L)).as("day"))
-      .as[(String, Long)]
-    dayOf.groupByKey(_._1)
+    typedPeriods(events, graft.ops.EventWindows.epochDay)
       .flatMapGroupsWithState[HwState, HwPoint](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (tpe, rows, state) =>
@@ -561,11 +518,9 @@ object StreamingWindows {
             HwState(Long.MinValue, Long.MinValue, 0L, Nil, 0.0, 0.0,
               Nil, ready = false))
           val out = scala.collection.mutable.ArrayBuffer.empty[HwPoint]
-          val counts = scala.collection.mutable.LongMap.empty[Long]
-          rows.foreach { case (_, d) =>
-            counts(d) = counts.getOrElse(d, 0L) + 1L }
           // fold ONE closed grid day — the batch op sequence verbatim
           def fold(day: Long, y: Long): Unit = {
+            if (st.d0 == Long.MinValue) st = st.copy(d0 = day)
             if (!st.ready) {
               val buf = st.initBuf :+ y
               if (buf.length == period) {
@@ -585,25 +540,13 @@ object StreamingWindows {
               out += HwPoint(tpe, day, y, newL, newB)
             }
           }
-          counts.toSeq.sortBy(_._1).foreach { case (d, n) =>
-            if (st.openDay == Long.MinValue) {
-              st = st.copy(d0 = d, openDay = d, openN = n)
-            } else if (d == st.openDay) {
-              st = st.copy(openN = st.openN + n)
-            } else if (d < st.openDay) {
-              throw new IllegalStateException(
-                s"streamingHoltWinters($tpe): day $d arrived after " +
-                  s"day ${st.openDay} opened — input violates the " +
-                  "in-order-across-batches contract")
-            } else {
-              fold(st.openDay, st.openN)
-              // zero-fill the gap: the batch grid has these days
-              var g = st.openDay + 1
-              while (g < d) { fold(g, 0L); g += 1 }
-              st = st.copy(openDay = d, openN = n)
-            }
+          val (day, n) = advanceOpenPeriod("streamingHoltWinters", tpe, "day",
+              st.openDay, st.openN, rows.map(_._2)) { (d, c, next) =>
+            fold(d, c)
+            // zero-fill the gap: the batch grid has these days
+            (d + 1 until next).foreach(fold(_, 0L))
           }
-          state.update(st)
+          state.update(st.copy(openDay = day, openN = n))
           out.iterator
       }
   }
@@ -659,10 +602,11 @@ object StreamingWindows {
     * emitted the moment a later-window event closes it (flatMap output:
     * several windows can close inside one micro-batch).
     *
-    * Same in-order-across-batches contract as [[streamingFunnel]]; the
-    * final still-open window is never emitted (it is incomplete by
-    * definition — exactly the row the batch form also lacks until the
-    * next window starts). Keying by event_type bounds parallelism at
+    * Windows close through the shared open-period fold
+    * ([[advanceOpenPeriod]], fail-fast in-order, like
+    * [[streamingEwmaDaily]]); the final still-open window is never
+    * emitted (it is incomplete by definition — exactly the row the batch
+    * form also lacks until the next window starts). Keying by event_type bounds parallelism at
     * |types| — inherent to per-type trailing semantics, and the state is
     * a few longs, so a single state-store partition per type is the
     * right trade (the volume reduction happens in the group function's
@@ -673,57 +617,34 @@ object StreamingWindows {
     require(trailing >= 2, s"need trailing >= 2, got $trailing")
     val spark = events.sparkSession
     import spark.implicits._
-    // a streaming AGGREGATION can't precede a stateful op (unsupported
-    // plan), so the per-batch (win → count) reduction happens inside the
-    // group function with a hash map — memory is windows-per-batch, not
-    // events-per-batch; raw rows stream through the iterator unsorted
-    val winOf = events
-      .select(col("event_type"),
-        graft.ops.EventWindows.epochSec.as("s"))
-      .select(col("event_type"),
-        graft.ops.EventWindows.winStart(col("s"), widthSec).as("win"))
-      .as[(String, Long)]
-    winOf.groupByKey(_._1)
+    typedPeriods(events,
+        graft.ops.EventWindows.winStart(graft.ops.EventWindows.epochSec,
+          widthSec))
       .flatMapGroupsWithState[AnomalyState, AnomalyScore](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (tpe, rows, state) =>
           var st = state.getOption.getOrElse(AnomalyState(Long.MinValue, 0L, Nil))
           val out = scala.collection.mutable.ArrayBuffer.empty[AnomalyScore]
-          val counts = scala.collection.mutable.LongMap.empty[Long]
-          rows.foreach { case (_, win) => counts(win) = counts.getOrElse(win, 0L) + 1L }
-          def score(win: Long, n: Long): Unit =
+          val (win, n) = advanceOpenPeriod("streamingAnomalyScores", tpe,
+              "window", st.openWin, st.openN, rows.map(_._2)) { (w, c, _) =>
             if (st.trail.length == trailing) {
               // BigInt, like the batch form's DECIMAL products — Σ² passes
               // 2^63 once a window holds > ~3·10^9 events of one type
               val su = st.trail.map(BigInt(_)).sum
               val sq = st.trail.map(v => BigInt(v) * v).sum
-              val num = BigInt(n) * trailing - su
+              val num = BigInt(c) * trailing - su
               val rad = sq * trailing - su * su
               if (rad > 0) {
                 val z = num.toDouble / Math.sqrt(rad.toDouble)
-                out += AnomalyScore(win, tpe, n,
+                out += AnomalyScore(w, tpe, c,
                   Some(BigDecimal(z).setScale(6,
                     BigDecimal.RoundingMode.HALF_UP).toDouble),
                   z >= threshold)
-              } else out += AnomalyScore(win, tpe, n, None, num != 0)
+              } else out += AnomalyScore(w, tpe, c, None, num != 0)
             }
-          def close(): Unit = if (st.openWin != Long.MinValue) {
-            score(st.openWin, st.openN)
-            st = AnomalyState(Long.MinValue, 0L,
-              (st.trail :+ st.openN).takeRight(trailing))
+            st = st.copy(trail = (st.trail :+ c).takeRight(trailing))
           }
-          counts.toSeq.sortBy(_._1).foreach { case (win, n) =>
-            if (win == st.openWin) st = st.copy(openN = st.openN + n)
-            else if (win < st.openWin)
-              // same enforced in-order contract as streamingEwmaDaily:
-              // a late window must fail fast, not re-open and double-count
-              throw new IllegalStateException(
-                s"streamingAnomalyScores($tpe): window $win arrived after " +
-                  s"window ${st.openWin} opened — input violates the " +
-                  "in-order-across-batches contract")
-            else { close(); st = st.copy(openWin = win, openN = n) }
-          }
-          state.update(st)
+          state.update(st.copy(openWin = win, openN = n))
           out.iterator
       }
   }
@@ -770,6 +691,49 @@ object StreamingWindows {
           if (st != null) state.update(st)
           out.iterator
       }
+  }
+
+  /** `(event_type, period)` rows keyed by type: the one typed projection
+    * of the per-type monitors (`period` is [[graft.ops.EventWindows.epochDay]]
+    * for the daily ones). A streaming AGGREGATION can't precede a stateful
+    * op (unsupported plan), so the per-batch (period → count) reduction
+    * happens in [[advanceOpenPeriod]], inside the group function. */
+  private def typedPeriods(events: DataFrame,
+      period: org.apache.spark.sql.Column) = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.select(col("event_type"), period).as[(String, Long)]
+      .groupByKey(_._1)
+  }
+
+  /** The open-period fold every per-type monitor shares: advances one
+    * key's open period (`open`, `openN`; `open` = Long.MinValue before the
+    * first) through a micro-batch's `periods`. It counts each period in a
+    * hash map — memory is periods per batch, not events — walks them in
+    * order, and hands each CLOSED period and its count to `close`, with
+    * the period that closed it; returns the new open (period, count).
+    * The in-order-across-batches contract is ENFORCED here: a period
+    * older than the open one throws instead of silently re-opening it,
+    * which would emit duplicate points and double-count the period in
+    * later windows, undetectably.
+    */
+  private def advanceOpenPeriod(monitor: String, key: String, unit: String,
+      open: Long, openN: Long, periods: Iterator[Long])(
+      close: (Long, Long, Long) => Unit): (Long, Long) = {
+    val counts = scala.collection.mutable.LongMap.empty[Long]
+    periods.foreach(p => counts(p) = counts.getOrElse(p, 0L) + 1L)
+    counts.toSeq.sortBy(_._1).foldLeft((open, openN)) {
+      case ((o, n), (p, c)) =>
+        if (p == o) (o, n + c)
+        else if (p < o)
+          throw new IllegalStateException(
+            s"$monitor($key): $unit $p arrived after $unit $o opened — " +
+              "input violates the in-order-across-batches contract")
+        else {
+          if (o != Long.MinValue) close(o, n, p)
+          (p, c)
+        }
+    }
   }
 
   /** STREAM-STREAM interval self-join: the streaming twin of

@@ -475,6 +475,35 @@ class StreamingSpec extends SparkSuite {
         "user_id", "session_id", "n_events", "sess_start", "duration_s")).count()
         == streamed.count())
     } finally q.stop()
+    // pre-1970 and fractional-second nanos: both forms FLOOR to epoch
+    // seconds (-1.5 s is second -2), so sess_start agrees where a
+    // truncating division (second -1) would not
+    val edgeDir = java.nio.file.Files.createTempDirectory("sessedge").toString
+    val edge = frame(
+      "user_id" -> Seq(1L, 1L, 1L, 2L, 2L, 2L, 2L),
+      "ts_ns" -> Seq(-1500000000L, -500000000L, 10000000000000L,
+        -7200750000000L, -7100250000000L, -3600500000000L, 5500000000L),
+      "event_id" -> Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L))
+    edge.coalesce(1).write.mode("overwrite").parquet(s"$edgeDir/in")
+    val eq = StreamingWindows.streamingSessions(
+        spark.readStream.schema(edge.schema).parquet(s"$edgeDir/in"), 200)
+      .writeStream.outputMode("update").format("memory")
+      .queryName("stream_sessions_edge").start()
+    try {
+      eq.processAllAvailable()
+      def rows(df: org.apache.spark.sql.DataFrame) = df
+        .select("user_id", "session_id", "n_events", "sess_start",
+          "duration_s")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4))).toSet
+      val all = rows(ops.EventWindows.sessions(edge, 200))
+      val last = all.groupBy(_._1).map { case (u, ss) => u -> ss.map(_._2).max }
+      val want = all.filter(r => r._2 != last(r._1))
+      assert(want == Set((1L, 1L, 2L, -2L, 1L), (2L, 1L, 2L, -7201L, 100L),
+        (2L, 2L, 1L, -3601L, 0L)), s"batch sessions: $want")
+      val got = rows(spark.table("stream_sessions_edge"))
+      assert(got == want, s"streamed $got != batch $want")
+    } finally eq.stop()
   }
 
   test("streaming perceptual image gate == batch: noisy variant of a corpus " +
@@ -1180,6 +1209,32 @@ class StreamingSpec extends SparkSuite {
     val q = StreamingWindows.streamingEwmaDaily(stream, windowDays = 5)
       .writeStream.outputMode("append").format("memory")
       .queryName("stream_ewma_late").start()
+    try {
+      q.processAllAvailable()
+      batch(9L).coalesce(1).write.mode("append").parquet(s"$splitDir/in")
+      val ex = intercept[Exception] { q.processAllAvailable() }
+      def chain(t: Throwable): List[Throwable] =
+        Option(t).map(t => t :: chain(t.getCause)).getOrElse(Nil)
+      assert(chain(ex).exists(c =>
+        Option(c.getMessage).exists(_.contains("in-order"))),
+        s"expected the in-order contract violation, got: $ex")
+    } finally q.stop()
+  }
+
+  test("streaming anomaly monitor: a micro-batch carrying a window OLDER " +
+      "than the open window fails fast (enforced in-order contract), " +
+      "never silently re-opens it") {
+    val splitDir = java.nio.file.Files.createTempDirectory("anolate").toString
+    def batch(win: Long) = frame(
+      "event_type" -> Seq("click", "click"),
+      "ts_ns" -> Seq(win * 600L * 1000000000L + 1L,
+        win * 600L * 1000000000L + 2L))
+    batch(10L).coalesce(1).write.mode("overwrite").parquet(s"$splitDir/in")
+    val stream = spark.readStream.schema(batch(10L).schema)
+      .parquet(s"$splitDir/in")
+    val q = StreamingWindows.streamingAnomalyScores(stream, widthSec = 600)
+      .writeStream.outputMode("append").format("memory")
+      .queryName("stream_anomaly_late").start()
     try {
       q.processAllAvailable()
       batch(9L).coalesce(1).write.mode("append").parquet(s"$splitDir/in")

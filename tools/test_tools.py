@@ -14,8 +14,9 @@ spans_report.py per-query job table and per-query job timeline of a
 traced perfbench run; that every `runMain graft.<Name>` in README.md
 and tools/*.sh names an object with a `def main` under src/main/scala;
 that no scaladoc block in src/main/scala is orphaned by another one
-stacked directly below it; and that every scaladoc `[[link]]` there names
-a definition that exists.
+stacked directly below it; that every scaladoc `[[link]]` there names
+a definition that exists; and that the epoch-day expression has one owner,
+`EventWindows.epochDay`.
 
 No Spark, no sbt — pure JSON fixtures through the real scripts.
 """
@@ -321,6 +322,53 @@ def test_dangling_scaladoc_links(tmp):
         f"{path}:5: gone", f"{path}:9: graft.A.missing"]
 
 
+EPOCH_DAY = re.compile(
+    r'floorDivSql\(\s*"ts_ns",\s*86400L\s*\*\s*1000000000L\s*\)')
+
+
+def stray_epoch_days(root):
+    """`floorDivSql("ts_ns", 86400L * 1000000000L)` sites under
+    src/main/scala outside EventWindows.scala, whose `epochDay` owns the
+    day expression, as "file:line". DuckDB oracle SQL floors with `//`, so
+    it never matches."""
+    stray = []
+    for d, _, files in os.walk(os.path.join(root, "src", "main", "scala")):
+        for name in sorted(files):
+            if not name.endswith(".scala") or name == "EventWindows.scala":
+                continue
+            path = os.path.join(d, name)
+            with open(path, encoding="utf-8") as f:
+                text = f.read()
+            for m in EPOCH_DAY.finditer(text):
+                stray.append(f"{os.path.relpath(path, root)}:"
+                             f"{text.count(chr(10), 0, m.start()) + 1}")
+    return sorted(stray)
+
+
+def test_stray_epoch_days(tmp):
+    stray = stray_epoch_days(os.path.dirname(HERE))
+    assert stray == [], stray
+    # fixture: the owner's own site and an oracle `//` string pass; a
+    # planted one-line site and a site split across lines do not
+    src = os.path.join(tmp, "days", "src", "main", "scala", "graft")
+    os.makedirs(src)
+    with open(os.path.join(src, "EventWindows.scala"), "w") as f:
+        f.write('object EventWindows {\n  def epochDay = expr(floorDivSql('
+                '"ts_ns", 86400L * 1000000000L))\n}\n')
+    with open(os.path.join(src, "A.scala"), "w") as f:
+        f.write('object A {\n'
+                '  val sql = "SELECT epoch_ns(ts) // 86400000000000 AS day"\n'
+                '  val day = expr(EventWindows.floorDivSql("ts_ns", '
+                '86400L * 1000000000L))\n'
+                '  val hour = expr(EventWindows.floorDivSql("ts_ns", '
+                '3600L * 1000000000L))\n'
+                '  val d2 = expr(EventWindows\n'
+                '    .floorDivSql("ts_ns", 86400L * 1000000000L))\n}\n')
+    path = os.path.join("src", "main", "scala", "graft", "A.scala")
+    assert stray_epoch_days(os.path.join(tmp, "days")) == [
+        f"{path}:3", f"{path}:6"]
+
+
 def main():
     with tempfile.TemporaryDirectory() as tmp:
         test_regress_retired_vs_missing(tmp)
@@ -331,6 +379,7 @@ def main():
         test_run_main_targets(tmp)
         test_orphaned_scaladoc(tmp)
         test_dangling_scaladoc_links(tmp)
+        test_stray_epoch_days(tmp)
     print("tools self-test: OK")
 
 
